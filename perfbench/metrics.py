@@ -4,7 +4,6 @@ import stats
 
 ENDPOINTS = ["query_movie_list", "query_movie", "query_order_list",
              "query_recommend_movie_list", "insert_order", "sales_rollup"]
-INDEX_FAMILIES = ["text", "vector", "graph", "marts"]
 MB = 1024.0 * 1024.0
 
 # Index artifact names (BuildLedger keys) by the family that builds them
@@ -36,37 +35,10 @@ def _end_to_end(setup_s, op_ms, work_s):
     }, q
 
 
-def _zero_layers(families, twins):
-    """Every per-layer metric at zero: a layer the workload does not
-    exercise reads 0."""
-    m = {}
-    for e in ENDPOINTS:
-        m[f"movieshop.{e}_ms"] = (0.0, "ms")
-    m["shop.queue_wait_ms"] = (0.0, "ms")
-    m["shop.generator_late_ms"] = (0.0, "ms")
-    for k, u in [("operators.construct_s", "s"), ("operators.construct_jobs", "count"),
-                 ("exec.execute_s", "s"), ("exec.jobs", "count"), ("exec.stages", "count"),
-                 ("exec.tasks", "count"), ("exec.sched_gap_s", "s"), ("exec.task_s", "s"),
-                 ("exec.cpu_s", "s"), ("exec.gc_s", "s"), ("exec.input_mb", "MB"),
-                 ("exec.shuffle_read_mb", "MB"), ("exec.shuffle_write_mb", "MB"),
-                 ("exec.spill_mb", "MB"), ("exec.codegen_compiles", "count"),
-                 ("exec.codegen_ms", "ms"), ("plan.exchanges", "count"),
-                 ("plan.reused_exchanges", "count"), ("plan.smj", "count"),
-                 ("plan.bhj", "count"), ("plan.bnlj", "count"), ("plan.rdd_scans", "count"),
-                 ("sources.build_s", "s"), ("sources.builds", "count"),
-                 ("sources.index_mb", "MB"), ("sources.index_bytes_per_input_byte", "ratio"),
-                 ("streaming.delta_dirs", "count"), ("streaming.state_mb", "MB"),
-                 ("streaming.growth", "ratio"), ("streaming.rows_per_s", "rows/s"),
-                 ("host.foreign_cpu_share", "ratio"), ("host.peak_rss_mb", "MB"),
-                 ("trace.overhead_frac", "ratio")]:
-        m[k] = (0.0, u)
-    for f in INDEX_FAMILIES:
-        m[f"sources.build_s.{f}"] = (0.0, "s")
-    for f in families:
-        m[f"analytics.family.{f}_s"] = (0.0, "s")
-    for t in twins:
-        m[f"streaming.batch_ms.{t}"] = (0.0, "ms")
-    return m
+def _zero_layers(declared):
+    """Every declared per-layer metric at zero: a layer the workload does
+    not exercise reads 0."""
+    return {d["name"]: (0.0, d["unit"]) for d in declared}
 
 
 def _tasks(m, t):
@@ -98,9 +70,9 @@ def _sources(m, builds, index_bytes, input_bytes):
         index_bytes / input_bytes if input_bytes else 0.0, "ratio")
 
 
-def _query_layers(m, recs, cores, families):
+def _query_layers(m, recs, cores, rollup):
     """Construction / execution / plan figures of traced query records,
-    and, with ``families``, their per-family roll-up."""
+    and, with ``rollup``, their per-family roll-up."""
     for r in recs:
         if not r.get("ok"):
             continue
@@ -117,11 +89,10 @@ def _query_layers(m, recs, cores, families):
         _tasks(m, e["tasks"])
         _plan(m, c["plan"])
         _plan(m, e["plan"])
-    if not families:
+    if not rollup:
         return
     for f, s in stats.family_rollup([(r["name"], r["ms"]) for r in recs]).items():
-        if f"analytics.family.{f}_s" in m:
-            m[f"analytics.family.{f}_s"] = (s, "s")
+        m[f"analytics.family.{f}_s"] = (s, "s")
 
 
 def _codegen(m, raw, phase):
@@ -144,13 +115,13 @@ def _hand_counts(recs):
     return notes
 
 
-def evaluate(workload, raw, work, t_start_ms, traced, twins, families,
-             untraced_work_s=None):
+def evaluate(workload, raw, work, t_start_ms, layers=None, untraced_work_s=None):
     """Returns the result object and the note lines printed before it.
 
-    ``families`` are the query families the per-layer roll-up reports;
-    ``untraced_work_s`` is the median ``work_s`` of this checkout's
-    untraced runs of the workload, for ``trace.overhead_frac``."""
+    ``layers`` are the declared per-layer metrics of a traced run (None
+    for an untraced run); ``untraced_work_s`` is the median ``work_s`` of
+    this build's untraced runs of the workload, for
+    ``trace.overhead_frac``."""
     cores = raw["cores"]
     setup_s = (raw["first_timed_ms"] - t_start_ms) / 1000.0
     rss_mb = raw["vmhwm_kb"] / 1024.0
@@ -198,10 +169,10 @@ def evaluate(workload, raw, work, t_start_ms, traced, twins, families,
                  f"host.foreign_cpu_share {share:.4f}")
     result = {"correct": not failures, "attempted": attempted,
               "failed": min(len(failures), attempted), "metrics": e2e}
-    if not traced:
+    if layers is None:
         return result, notes
 
-    m = _zero_layers(families, twins)
+    m = _zero_layers(layers)
     m["op_p99_ms"] = (e2e.pop("op_p99_ms")["value"], "ms")
     m["host.foreign_cpu_share"] = (share, "ratio")
     m["host.peak_rss_mb"] = (rss_mb, "MB")
@@ -210,8 +181,8 @@ def evaluate(workload, raw, work, t_start_ms, traced, twins, families,
     _sources(m, raw.get("builds", {}), raw.get("index_bytes", 0), raw.get("input_bytes", 0))
     kinds = raw["kinds"]
     if workload == "engine":
-        _query_layers(m, builds, cores, families=False)
-        _query_layers(m, recs, cores, families=True)
+        _query_layers(m, builds, cores, rollup=False)
+        _query_layers(m, recs, cores, rollup=True)
         m["exec.codegen_compiles"] = (float(sum(raw[f"phase.{p}"]["codegen_compiles"]
                                                 for p in timed)), "count")
         m["exec.codegen_ms"] = (float(sum(raw[f"phase.{p}"]["codegen_ms"] for p in timed)), "ms")
@@ -225,6 +196,7 @@ def evaluate(workload, raw, work, t_start_ms, traced, twins, families,
             batch_s, st["tasks"]["run_ms"] / 1000.0, cores), "s")
         _tasks(m, st["tasks"])
         _plan(m, st["plan"])
+        twins = sorted({b["twin"] for b in tb})
         for t in twins:
             m[f"streaming.batch_ms.{t}"] = (stats.median(
                 [b["ms"] for b in tb if b["twin"] == t]), "ms")

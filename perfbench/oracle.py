@@ -3,41 +3,25 @@
 * ``check_queries``: each registered query's materialized result must hash
   equal to its DuckDB ``oracleSql`` answer over the same Parquet tables.
   The normalisation (cells to text, floats at 6 decimals, columns sorted
-  by name, row order kept, integer-vs-float column kinds must agree) is
-  the one ``tools/oracle_check.py`` applies.
+  by name, row order kept) is ``tools/oracle_check.py``'s own, imported
+  from it; the rule that integer-vs-float column kinds must agree
+  restates the one inline in its ``main``.
 * ``check_shop``: sampled MovieShop responses must equal DuckDB over the
   same TSV tables, and the inserted order ids must be unique and
   gap-free (MAX + 1 each).
 """
 import glob
-import hashlib
 import json
 import os
 import re
+import sys
 from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 
-
-def norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if v == 0:
-            v = 0.0
-        return f"{v:.6f}"
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
-
-
-def frame_hash(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    h = hashlib.sha256()
-    for r in rows:
-        h.update("\x1f".join(norm_cell(r[i]) for i in order).encode())
-        h.update(b"\x1e")
-    return h.hexdigest()
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                "tools"))
+from oracle_check import frame_hash, norm_cell  # noqa: E402  (the project's normalisation)
 
 
 def _kinds(df):

@@ -16,6 +16,7 @@ metric means.
 """
 import argparse
 import json
+import math
 import os
 import random
 import shutil
@@ -30,9 +31,8 @@ import stats  # noqa: E402  (the benchmark's own arithmetic, stdlib only)
 
 # ---- workload sizes ---------------------------------------------------------
 ENGINE_SF = 0.01         # generated tables for the engine workload
-ANALYTICS_STRIDE = 40    # every 40th registered query in name order
 SHOP_MOVIES, SHOP_REVIEWS_PER_MOVIE, SHOP_ORDERS = 2000, 5, 500
-SHOP_RATE = 2.0          # requests per second, fixed (a quarter of the capacity)
+SHOP_RATE = 2.0          # requests per second, fixed
 SHOP_MIX = [("query_movie_list", 0.30), ("query_movie", 0.25),
             ("query_recommend_movie_list", 0.15), ("query_order_list", 0.15),
             ("sales_rollup", 0.10), ("insert_order", 0.05)]
@@ -40,7 +40,7 @@ JVM_HEAP = "3g"
 RUN_TIMEOUT_S = 170
 
 REQUIRED = ["BENCHMARK.json", "build.sbt", "src/main/scala/graft/SparkEntry.scala",
-            "perfbench/build.sbt"]
+            "tools/oracle_check.py", "perfbench/build.sbt"]
 SCALA_TREES = ["src/main", "perfbench/src", "project", "perfbench/project"]
 JDK_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
              "java.net", "java.nio", "java.util", "java.util.concurrent",
@@ -90,6 +90,10 @@ def build(root, bdir):
         lines = [l.strip() for l in f if l.strip()]
     if r != 0 or not lines or "perfbench" not in lines[-1]:
         fail(f"build failed (exit {r}); see {log}")
+    # untraced runs of the previous build are no reference for this one
+    for f in os.listdir(bdir):
+        if f.startswith("untraced-"):
+            os.remove(os.path.join(bdir, f))
     with open(cp_file, "w") as f:
         f.write(lines[-1])
     return lines[-1]
@@ -114,12 +118,24 @@ def run_bounded(cmd, cwd, env=None, stdout=None, timeout=RUN_TIMEOUT_S):
 
 # ---- inputs -------------------------------------------------------------------
 
+def balanced(rng, options, k):
+    """``k`` picks that take every option equally often (to within one),
+    in a seeded order."""
+    picks = [options[i % len(options)] for i in range(k)]
+    rng.shuffle(picks)
+    return picks
+
+
 def shop_requests(path, seed, n, rate, movies):
     """Open-loop arrivals: ``n`` requests with exponential gaps at ``rate``
     per second, parameters in the reference's forms (OrderList.vue's LIKE
     patterns, Boarding.vue's top 15). Each endpoint gets its SHOP_MIX
     share of the ``n`` requests exactly (largest remainder), in a seeded
-    order, so seeds vary arrivals and parameters but not the mix."""
+    order. The draws are stratified: the gaps are the ``n`` quantiles of
+    the exponential distribution, and each endpoint's parameter forms
+    (empty or one-letter search key, page offset, LIKE form) come in fixed
+    shares, all in a seeded order. Seeds then vary the order, the movies,
+    letters and dates, but not how bursty or how heavy a replay is."""
     rng = random.Random(seed * 7919 + 17)
     counts = {ep: int(share * n) for ep, share in SHOP_MIX}
     by_remainder = sorted(SHOP_MIX, key=lambda m: -(m[1] * n - int(m[1] * n)))
@@ -127,24 +143,34 @@ def shop_requests(path, seed, n, rate, movies):
         counts[ep] += 1
     endpoints = [ep for ep, c in counts.items() for _ in range(c)]
     rng.shuffle(endpoints)
+    gaps = balanced(rng, [-math.log(1.0 - (i + 0.5) / n) / rate for i in range(n)], n)
+    # per endpoint, its parameter forms in fixed shares: 2 in 5 movie-list
+    # searches have an empty key, offsets cycle over the first pages
+    n_list, n_orders = counts["query_movie_list"], counts["query_order_list"]
+    list_forms = iter(zip(balanced(rng, [True, True, False, False, False], n_list),
+                          balanced(rng, [0, 10, 20, 30, 40], n_list)))
+    order_forms = iter(zip(balanced(rng, ["%", "y-%", "y-m-%", "y-m-d%", "%-%-d%", "y-%-d%"],
+                                    n_orders),
+                           balanced(rng, [0, 10, 20], n_orders)))
     t = 0.0
     years = ["2015", "2016", "2017", "2018", "2019"]
     lines = []
-    for ep in endpoints:
-        t += rng.expovariate(rate) * 1000.0
+    for ep, gap in zip(endpoints, gaps):
+        t += gap * 1000.0
         mid, name, price = movies[rng.randrange(len(movies))]
         if ep == "query_movie_list":
-            key = "" if rng.random() < 0.4 else name[rng.randrange(len(name))]
-            p = [str(10 * rng.randrange(5)), "10", key]
+            empty, start = next(list_forms)
+            key = "" if empty else name[rng.randrange(len(name))]
+            p = [str(start), "10", key]
         elif ep == "query_movie":
             p = [str(mid)]
         elif ep == "query_recommend_movie_list":
             p = ["15"]
         elif ep == "query_order_list":
+            form, start = next(order_forms)
             y, m, d = rng.choice(years), f"{rng.randint(1, 12):02d}", f"{rng.randint(1, 28):02d}"
-            pat = rng.choice(["%", f"{y}-%", f"{y}-{m}-%", f"{y}-{m}-{d}%",
-                              f"%-%-{d}%", f"{y}-%-{d}%"])
-            p = [str(10 * rng.randrange(3)), "10", pat]
+            pat = form.replace("y", y).replace("m", m).replace("d", d)
+            p = [str(start), "10", pat]
         elif ep == "sales_rollup":
             p = []
         else:
@@ -156,8 +182,9 @@ def shop_requests(path, seed, n, rate, movies):
 
 
 def untraced_work_s(history):
-    """Median work_s of the untraced runs recorded so far in this build
-    directory, the reference for trace.overhead_frac (None if none)."""
+    """Median work_s of the untraced runs recorded since the last build
+    (``build`` clears the record), the reference for trace.overhead_frac
+    (None if none)."""
     if not os.path.exists(history):
         return None
     with open(history) as f:
@@ -199,7 +226,7 @@ def main():
                 "cores": str(cores), "out": os.path.join(work, "out")}
         if a.workload == "engine":
             gen.synthetic_tables(f"{work}/data", a.seed, ENGINE_SF)
-            args.update(data=f"{work}/data", stride=str(ANALYTICS_STRIDE))
+            args.update(data=f"{work}/data")
         else:
             movies = gen.shop_tables(f"{work}/shop", a.seed, SHOP_MOVIES,
                                      SHOP_REVIEWS_PER_MOVIE, SHOP_ORDERS)
@@ -226,13 +253,9 @@ def main():
         with open(raw_path) as f:
             raw = json.load(f)
         declared = spec["per_layer" if a.trace else "end_to_end"]
-        def declared_keys(prefix, suffix=""):
-            return [d["name"][len(prefix):len(d["name"]) - len(suffix)] for d in declared
-                    if d["name"].startswith(prefix)]
         history = os.path.join(bdir, f"untraced-{a.workload}-{a.seconds}s.jsonl")
-        result, notes = metrics.evaluate(a.workload, raw, work, t_start_ms, a.trace == 1,
-                                         declared_keys("streaming.batch_ms."),
-                                         declared_keys("analytics.family.", "_s"),
+        result, notes = metrics.evaluate(a.workload, raw, work, t_start_ms,
+                                         declared if a.trace else None,
                                          untraced_work_s(history))
         # report exactly the metrics BENCHMARK.json declares, in its units
         got = result["metrics"]

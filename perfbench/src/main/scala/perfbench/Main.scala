@@ -10,8 +10,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Arguments (all `--key value`): workload, seed, trace (0|1),
   * cores, data (synthetic tables), shop and requests (MovieShop tables
-  * and the request list), out, stride (analytics: every stride-th
-  * registered query).
+  * and the request list), out.
   */
 object Main {
   def main(argv: Array[String]): Unit = {
