@@ -135,7 +135,7 @@ def shop_requests(path, seed, n, rate, movies):
     the exponential distribution, and each endpoint's parameter forms
     (empty or one-letter search key, page offset, LIKE form) come in fixed
     shares, all in a seeded order. Seeds then vary the order, the movies,
-    letters and dates, but not how bursty or how heavy a replay is."""
+    letters and dates, but not the set of gaps or the share of each form."""
     rng = random.Random(seed * 7919 + 17)
     counts = {ep: int(share * n) for ep, share in SHOP_MIX}
     by_remainder = sorted(SHOP_MIX, key=lambda m: -(m[1] * n - int(m[1] * n)))
