@@ -132,22 +132,7 @@ object Bench {
     val only: Option[Set[String]] = args.headOption.map(_.split(',').toSet)
     def selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Long multi-query runs: shuffle files and broadcasts are only
-      // reclaimed when the ContextCleaner sees their handles GC'd, and
-      // the default periodic-GC interval (30min) is longer than a full
-      // suite - hundreds of executions accumulate, and late queries pay
-      // the pressure (observed: 5-15x inflation on the soak tail with
-      // per-query plans unchanged). A 2min floor keeps cleanup flowing.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietNoise()
+    val spark = Session.local(cpus.toInt)
 
     // Full untimed warm-up pass: one execution of EVERY query before
     // any timing. Best-of-2 alone doesn't absorb cold-JVM effects — the

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev-only profiling harness: times named query variants at an SF dir
   * the same way Bench does (noop sink, best-of-N) so hot spots can be
@@ -21,15 +21,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val filt = args.lift(1).getOrElse("")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietNoise()
+    val spark = Session.local(32)
 
     // warmup
     SparkEntry.queries("q1_pricing_summary")(spark, sfDir)

@@ -302,22 +302,7 @@ object Soak {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val out = if (args.length > 1) args(1) else "target/soak/sf1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Long multi-query runs: shuffle files and broadcasts are only
-      // reclaimed when the ContextCleaner sees their handles GC'd, and
-      // the default periodic-GC interval (30min) is longer than a full
-      // suite - hundreds of executions accumulate, and late queries pay
-      // the pressure (observed: 5-15x inflation on the soak tail with
-      // per-query plans unchanged). A 2min floor keeps cleanup flowing.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietNoise()
+    val spark = Session.local(cpus.toInt)
 
     buildIfMissing(spark, base, out)
     buildSalesIfMissing(spark, base, out)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,21 +11,7 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Long multi-query runs: shuffle files and broadcasts are only
-      // reclaimed when the ContextCleaner sees their handles GC'd, and
-      // the default periodic-GC interval (30min) is longer than a full
-      // suite - hundreds of executions accumulate, and late queries pay
-      // the pressure (observed: 5-15x inflation on the soak tail with
-      // per-query plans unchanged). A 2min floor keeps cleanup flowing.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietNoise()
+    val spark = Session.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

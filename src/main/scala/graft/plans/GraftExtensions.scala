@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Expression
   * higher-order lambda. Two installation paths:
   *
   *  - cluster: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  *    (or `SparkSession.builder().withExtensions(new GraftExtensions)`) —
+  *    (or `withExtensions(new GraftExtensions)` on the session builder) —
   *    applies to every session built from that config;
   *  - existing session (tests, notebooks): [[GraftExtensions.register]],
   *    which installs the same builders on the live function registry.

@@ -164,7 +164,7 @@ object Marts {
 
   /** Register (building if needed) a bucketed external table over a
     * deterministic projection of `df`, clustered AND sorted by `key`
-    * into [[NumBuckets]] buckets at `location`.
+    * into [[NumBuckets]] buckets at `location`, and read it.
     *
     * Bucketing metadata lives in the session catalog (in-memory here,
     * a metastore on a cluster), so a fresh session must re-declare the
@@ -172,11 +172,20 @@ object Marts {
     * sentinel marks it. One file per bucket (repartition on the key
     * before write): exactly the layout whose scan reports both the
     * hash-partitioning and the per-bucket sort to the planner.
+    *
+    * The catalog name is keyed on the artifact directory, so each data
+    * directory reads its own mart in a session that has seen several.
+    * A rebuild refreshes the entry: the cached relation would otherwise
+    * keep listing the files of the directory it replaced.
     */
-  private def ensureBucketed(s: SparkSession, name: String,
+  private def ensureBucketed(s: SparkSession, table: String,
                              location: java.nio.file.Path,
-                             key: String)(df: => DataFrame): Unit = {
+                             key: String)(df: => DataFrame): DataFrame = {
+    val abs = location.toAbsolutePath.toString
+    val name = f"${table}_${abs.hashCode}%08x"
+    var built = false
     VectorIndex.ensure(location) { out =>
+      built = true
       // Build via a TEMP catalog table at the build path: bucket file
       // naming/layout must come from the bucketed-write committer, and
       // only saveAsTable engages it. The temp entry is dropped right
@@ -198,8 +207,9 @@ object Marts {
       s.sql(
         s"""CREATE TABLE $name ($ddl) USING PARQUET
            |CLUSTERED BY ($key) SORTED BY ($key) INTO $NumBuckets BUCKETS
-           |LOCATION '${location.toAbsolutePath}'""".stripMargin)
-    }
+           |LOCATION '$abs'""".stripMargin)
+    } else if (built) s.catalog.refreshTable(name)
+    s.table(name)
   }
 
   def bucketedOrders(s: SparkSession, d: String): DataFrame = {
@@ -207,7 +217,6 @@ object Marts {
       new java.io.File(d, "orders.parquet"), d, s"orders_bkt$NumBuckets")
     ensureBucketed(s, "graft_b_orders", path, "o_orderkey")(
       Tables.orders(s, d))
-    s.table("graft_b_orders")
   }
 
   def bucketedLineitem(s: SparkSession, d: String): DataFrame = {
@@ -215,7 +224,6 @@ object Marts {
       new java.io.File(d, "lineitem.parquet"), d, s"lineitem_bkt$NumBuckets")
     ensureBucketed(s, "graft_b_lineitem", path, "l_orderkey")(
       Tables.lineitem(s, d))
-    s.table("graft_b_lineitem")
   }
 
   /** The co-located fact-fact join itself — orders ⋈ lineitem on the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named registered queries
   * to files (one per query) — the optimization-round evidence trail
   * (`plans/r<N>/<query>_{before,after}.txt`). Not part of the driver
@@ -17,15 +15,7 @@ object PlanDump {
     val suffix = args(2)
     val only: Option[Set[String]] = args.lift(3).map(_.split(',').toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietNoise()
+    val spark = graft.Session.local(cpus.toInt)
     java.nio.file.Files.createDirectories(outDir)
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

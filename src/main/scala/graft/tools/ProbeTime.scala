@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: split a registered query's wall time into CONSTRUCTION
   * (the `fn(spark, d)` call — driver-side collects, eager
   * localCheckpoints, index ensures) and EXECUTION (the noop write of
@@ -20,15 +18,7 @@ object ProbeTime {
     val names = args(1).split(',').toSeq
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietNoise()
+    val spark = graft.Session.local(cpus.toInt)
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: run one registered query N times against a data dir and
   * print per-run wall times (plus the formatted plan with -x) — the
   * isolate-one-query loop used to separate a query's own plan cost
@@ -17,15 +15,7 @@ object QProbe {
     val runs = args.drop(2).find(!_.startsWith("-")).map(_.toInt).getOrElse(3)
     val explain = args.contains("-x")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietNoise()
+    val spark = graft.Session.local(cpus.toInt)
     val fn = graft.SparkEntry.queries(name)
     if (explain) fn(spark, dir).explain("formatted")
     (1 to runs).foreach { i =>

@@ -182,4 +182,47 @@ class MartsSpec extends SparkTestBase {
     assert(rows.map(_.toString).toSeq == raw.map(_.toString).toSeq,
       "partitioned layout must be answer-identical to the raw join")
   }
+
+  /** Rows of `df` with every number at 6 decimals, so a Spark double
+    * and the oracle's decimal compare equal when they agree. */
+  private def normalized(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case n: java.lang.Number =>
+        BigDecimal(n.toString).setScale(6, BigDecimal.RoundingMode.HALF_EVEN)
+      case v => v
+    })
+
+  /** `query`'s answer over `d` against its registered oracle SQL, run
+    * by Spark over the RAW tables of the same directory. */
+  private def assertMatchesOracle(query: String, d: String): Unit = {
+    Tables.orders(spark, d).createOrReplaceTempView("orders")
+    Tables.lineitem(spark, d).createOrReplaceTempView("lineitem")
+    try {
+      val got = normalized(SparkEntry.queries(query)(spark, d))
+      val want = normalized(spark.sql(SparkEntry.oracleSql(query)))
+      assert(got.nonEmpty && got == want, s"$query over $d differs from its oracle")
+    } finally {
+      spark.catalog.dropTempView("orders")
+      spark.catalog.dropTempView("lineitem")
+    }
+  }
+
+  test("BK1/BK2 read each data directory's own mart in one session") {
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    for (d <- Seq(sf, sf001);
+         q <- Seq("bk1_bucketed_join", "bk2_bucketed_agg"))
+      assertMatchesOracle(q, d)
+  }
+
+  test("a rebuilt bucketed mart is read from its new files") {
+    assertMatchesOracle("bk2_bucketed_agg", sf)
+    val sfName = new java.io.File(sf).getName
+    val marts = Option(new java.io.File("target/graft-index").listFiles)
+      .getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.startsWith(s"$sfName-"))
+      .map(new java.io.File(_, "lineitem_bkt8")).filter(_.isDirectory)
+    assert(marts.nonEmpty, "no lineitem_bkt8 mart to rebuild")
+    marts.foreach(m => org.apache.commons.io.FileUtils.deleteDirectory(m))
+    assertMatchesOracle("bk2_bucketed_agg", sf)
+  }
 }

@@ -63,13 +63,16 @@ class ParitySurfaceSpec extends AnyFunSuite {
       s"queries that lost their DuckDB oracle twin: $unoracled")
   }
 
-  test("every registered query has an oracle, and no oracle is orphaned") {
-    // the round-4 invariant, now structural: the correctness gate
-    // hash-compares only queries WITH oracles, so a missing entry
-    // silently weakens the gate to rows-only
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unoracled.isEmpty, s"queries without oracles: $unoracled")
-    val orphaned = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphaned.isEmpty, s"oracles without queries: $orphaned")
+  test("registry names are unique and every declaration has a non-empty oracle") {
+    // `queries` and `oracleSql` derive from the registry, so they agree by
+    // construction; what remains is a name declared twice (the derived
+    // map keeps only one) and an empty oracle (the correctness gate
+    // hash-compares only queries WITH oracle SQL, so an empty one
+    // silently weakens it to rows-only)
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"query names declared more than once: $dups")
+    val empty = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(empty.isEmpty, s"queries with an empty oracle: $empty")
   }
 }

@@ -123,10 +123,4 @@ class PlanHygieneSpec extends SparkTestBase {
     assert(offenders.isEmpty,
       s"queries planning a ScalaUDF: ${offenders.mkString(", ")}")
   }
-
-  test("every oracleSql entry has a matching registered query") {
-    val missingQuery = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missingQuery.isEmpty,
-      s"oracleSql entries with no matching query: ${missingQuery.mkString(", ")}")
-  }
 }

@@ -17,11 +17,6 @@ class RelationalSpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracle keys are a subset of query keys") {
-    val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"oracleSql without queries entry: $unknown")
-  }
-
   test("P2 empty key means match-all (Server.py:20-23 wildcard defaulting)") {
     val all = Tables.part(spark, sf).count()
     assert(Relational.likeSubstring(spark, sf, key = "").count() == all)
