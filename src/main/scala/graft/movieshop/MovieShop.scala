@@ -1,6 +1,9 @@
 package graft.movieshop
 
+import java.util.concurrent.ConcurrentHashMap
+
 import graft.Tables
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,6 +24,17 @@ import org.apache.spark.sql.types._
   *  - All time logic is string-prefix LIKE on 'yyyy-MM-dd HH:mm:ss'
   *    strings (`DatabaseAccessor.py:107,130`) — kept exactly; no
   *    rewrite to native date predicates (SURVEY.md §7.4).
+  *
+  * Snapshot contract: every endpoint reads per-version snapshots, not
+  * the files. A table's version is its file's (length, modification
+  * time), read once per request; a new version is read into a lazy
+  * local checkpoint once, and two derived views — the movie-detail
+  * join and the sales rollup — are built once per version of the
+  * tables they read. Tables are appended to or rewritten in place, and
+  * either changes the length or the modification time. A rewrite that
+  * keeps the length within one modification-time tick is not detected:
+  * reads go on serving the old rows until the file changes again.
+  * Snapshots are kept per (session, key), one live entry per key.
   */
 object MovieShop {
 
@@ -72,14 +86,44 @@ object MovieShop {
       StructField("summary", StringType)))
   }
 
+  /** A snapshot: the version it was built from, and its rows. */
+  private[graft] final case class Snapshot(version: Any, df: DataFrame)
+
+  /** The live snapshots, keyed on (session, file path or view key). */
+  private[graft] val snapshots = new ConcurrentHashMap[(SparkSession, String), Snapshot]()
+
+  /** The snapshot of `key` at `version`; `build` runs only when the live
+    * entry has another version. The snapshot is a lazy local checkpoint,
+    * not `cache()`: the cache manager matches cached data by plan, so a
+    * cached read would also serve later reads of the same file. A
+    * superseded entry is only dropped, never unpersisted, since a
+    * request in flight may still read it; the ContextCleaner frees it.
+    * `build` must not call back into the registry (`compute` forbids
+    * recursive updates). */
+  private def snapshot(s: SparkSession, key: String, version: Any)(
+      build: => DataFrame): Snapshot =
+    snapshots.compute((s, key), (_, live) =>
+      if (live != null && live.version == version) live
+      else Snapshot(version, build.localCheckpoint(eager = false)))
+
+  private def table(s: SparkSession, path: String, schema: StructType): Snapshot = {
+    val p = new Path(path)
+    val st = p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
+    snapshot(s, path, (st.getLen, st.getModificationTime))(Tables.tsv(s, path, schema))
+  }
+  private def movieTable(s: SparkSession, dir: String) =
+    table(s, s"$dir/movie_info.csv", movieSchema)
+  private def reviewTable(s: SparkSession, dir: String) =
+    table(s, s"$dir/review.csv", reviewSchema)
+  private def orderTable(s: SparkSession, dir: String) =
+    table(s, s"$dir/order.csv", orderSchema)
+
   /** S1 ingest: the exact Hive-DDL TSV semantics
-    * (`create_table.sql:13,25,38`). */
-  def movies(s: SparkSession, dir: String): DataFrame =
-    Tables.tsv(s, s"$dir/movie_info.csv", movieSchema)
-  def reviews(s: SparkSession, dir: String): DataFrame =
-    Tables.tsv(s, s"$dir/review.csv", reviewSchema)
-  def orders(s: SparkSession, dir: String): DataFrame =
-    Tables.tsv(s, s"$dir/order.csv", orderSchema)
+    * (`create_table.sql:13,25,38`), as the current snapshot of each
+    * file. */
+  def movies(s: SparkSession, dir: String): DataFrame = movieTable(s, dir).df
+  def reviews(s: SparkSession, dir: String): DataFrame = reviewTable(s, dir).df
+  def orders(s: SparkSession, dir: String): DataFrame = orderTable(s, dir).df
 
   /** POST /api/query_movie_list (`DatabaseAccessor.py:98-103`,
     * wildcard defaulting `Server.py:20-23`): LIKE filter + order by
@@ -104,23 +148,32 @@ object MovieShop {
     * `DatabaseAccessor.py:44-47`), plus the parsed information with
     * the doubly-encoded pubdate decoded (`Detail.vue:224`).
     */
-  def queryMovie(s: SparkSession, dir: String, movieId: Int): DataFrame = {
-    val m = movies(s, dir).filter(col("movie_id") === movieId)
-    val r = reviews(s, dir)
-    m.join(r.withColumnRenamed("ranking", "review_ranking"),
-        Seq("movie_id"), "left_outer")
-      .groupBy("movie_id", "name", "price", "ranking", "information")
-      // when(...) leaves the struct null for the no-review outer row,
-      // and collect_list drops nulls — a review-less movie gets an
-      // empty array (ORM semantics), not [struct(null,null,null)]
-      .agg(sort_array(collect_list(when(col("review_id").isNotNull,
-        struct(col("review_id"), col("review_ranking"), col("content")))))
-        .as("reviews"))
+  def queryMovie(s: SparkSession, dir: String, movieId: Int): DataFrame =
+    movieDetail(s, dir).filter(col("movie_id") === movieId)
       .select(col("movie_id"), col("name"), col("price"), col("ranking"),
         from_json(col("information"), movieInfoSchema).as("information"),
         from_json(get_json_object(col("information"), "$.pubdate"),
           ArrayType(StringType)).as("pubdate_decoded"),
         col("reviews"))
+
+  /** Every movie with all its reviews nested, `information` still raw:
+    * the join `queryMovie` filters, built once per (movies, reviews)
+    * version. The version comes from the two snapshots it is built
+    * from, so an append between two status reads cannot label it. */
+  private def movieDetail(s: SparkSession, dir: String): DataFrame = {
+    val m = movieTable(s, dir)
+    val r = reviewTable(s, dir)
+    snapshot(s, s"$dir#movie_detail", (m.version, r.version)) {
+      m.df.join(r.df.withColumnRenamed("ranking", "review_ranking"),
+          Seq("movie_id"), "left_outer")
+        .groupBy("movie_id", "name", "price", "ranking", "information")
+        // when(...) leaves the struct null for the no-review outer row,
+        // and collect_list drops nulls — a review-less movie gets an
+        // empty array (ORM semantics), not [struct(null,null,null)]
+        .agg(sort_array(collect_list(when(col("review_id").isNotNull,
+          struct(col("review_id"), col("review_ranking"), col("content")))))
+          .as("reviews"))
+    }.df
   }
 
   /** POST /api/query_order_list (`DatabaseAccessor.py:105-110`, route
@@ -184,23 +237,27 @@ object MovieShop {
 
   /** Chart.vue yearly pie (`Chart.vue:182-190`) + monthly in ONE pass:
     * rollup(year, month) — A2+A3 as the de-facto grouping set
-    * (SURVEY.md §2.4 A3).
+    * (SURVEY.md §2.4 A3). The ordered rollup is a view built once per
+    * orders version.
     */
-  def salesRollup(s: SparkSession, dir: String): DataFrame =
-    orders(s, dir)
-      .rollup(substring(col("create_time"), 1, 4).as("y"),
-        substring(col("create_time"), 6, 2).as("m"))
-      .agg(round(sum(col("price_sum")), 1).as("sales"))
-      .orderBy(col("y").asc_nulls_first, col("m").asc_nulls_first)
+  def salesRollup(s: SparkSession, dir: String): DataFrame = {
+    val o = orderTable(s, dir)
+    snapshot(s, s"$dir#sales_rollup", o.version) {
+      o.df
+        .rollup(substring(col("create_time"), 1, 4).as("y"),
+          substring(col("create_time"), 6, 2).as("m"))
+        .agg(round(sum(col("price_sum")), 1).as("sales"))
+        .orderBy(col("y").asc_nulls_first, col("m").asc_nulls_first)
+    }.df
+  }
 
-  /** Chart fetch-once cache parity (SURVEY.md §4.1: the reference
-    * pulls all orders once and aggregates twice client-side,
-    * `Chart.vue:88-115`): cache the orders relation, derive both the
-    * monthly series and the yearly pie from the cached data — two
-    * aggregations, one scan.
+  /** Chart fetch-once parity (SURVEY.md §4.1: the reference pulls all
+    * orders once and aggregates twice client-side,
+    * `Chart.vue:88-115`): the monthly series and the yearly pie both
+    * read one orders snapshot — two aggregations, one scan.
     */
   def chartBundle(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val o = orders(s, dir).cache()
+    val o = orders(s, dir)
     val monthly = o
       .groupBy(substring(col("create_time"), 1, 4).as("y"),
         substring(col("create_time"), 6, 2).as("m"))

@@ -1,0 +1,271 @@
+package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
+import scala.jdk.CollectionConverters._
+
+import graft.movieshop.MovieShop
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
+
+/** MovieShop's serving path over per-version snapshots, on small
+  * reference-shaped TSVs the suite writes itself (FIXTURES.md §A edge
+  * cases: an empty `rating.average`, a movie without reviews, the doubly
+  * encoded `pubdate`, a null name, and names that hold LIKE wildcards).
+  * Every endpoint is compared row for row with the same plan over a
+  * fresh `Tables.tsv` read, before and after the files change.
+  */
+class MovieShopServingSpec extends SparkTestBase {
+
+  private def info(title: String, average: String, pubdate: String, extra: String = "") =
+    s"""{"_id":"$title","title":"$title","year":"1955","aka":["","$title II"],""" +
+      s""""casts":[{"id":"search","name":"Lee"}],"rating":{"average":"$average",""" +
+      s""""rating_people":"12","stars":["1","2"]},"pubdate":"$pubdate",""" +
+      s""""duration":"USA: 55","price":9.5$extra}"""
+
+  private val movieLines = Seq(
+    s"101\tKiss Me Deadly\t12.5\t8.1\t${info("Kiss", "", """[\"1955-05-18(USA)\"]""")}",
+    s"102\t野狼 Hombre\t20.0\t7.5\t${info("Hombre", "7.5", """[\"1967-03-21\"]""")}",
+    s"103\t100% Love\t9.9\t\t${info("Love", "8.0", """[]""")}",
+    s"104\tA_Team\t15.0\t9.1\t${info("Team", "9.1", """[\"2010-06-11\",\"2010-06-18\"]""")}",
+    s"105\tHero\t30.0\t9.1\t${info("Hero", "9.1", """[\"2002-12-14\"]""", ""","summary":"剑"""")}",
+    s"106\t\t5.0\t3.0\t${info("Nameless", "", """[]""")}")
+
+  private val reviewLines = Seq(
+    "1\t101\t8.0\t好看", "2\t101\t6.5\tfine", "3\t101\t9.0\t经典",
+    "4\t102\t7.0\tok", "5\t102\t5.5\t一般", "6\t103\t4.0\tmeh",
+    "7\t105\t9.5\t武侠", "8\t105\t8.5\tgood")
+
+  private val orderLines = Seq(
+    "1\t101\tKiss Me Deadly\t1\t12.5\t2015-07-19 10:00:00",
+    "2\t102\t野狼 Hombre\t2\t40.0\t2015-07-03 11:30:00",
+    "3\t105\tHero\t1\t30.0\t2015-12-19 09:15:00",
+    "4\t103\t100% Love\t3\t29.7\t2016-03-03 20:00:00",
+    "5\t101\tKiss Me Deadly\t2\t25.0\t2016-08-19 08:00:00",
+    "6\t104\tA_Team\t1\t15.0\t2017-01-03 12:00:00",
+    "7\t105\tHero\t2\t60.0\t2019-11-08 12:32:08",
+    "8\t102\t野狼 Hombre\t1\t20.0\t2019-11-08 12:32:08")
+
+  private def write(dir: String, file: String, lines: Seq[String]): Unit =
+    Files.write(Paths.get(dir, file), lines.map(_ + "\n").mkString.getBytes(UTF_8))
+
+  private def append(dir: String, file: String, line: String): Unit =
+    Files.write(Paths.get(dir, file), (line + "\n").getBytes(UTF_8),
+      StandardOpenOption.APPEND)
+
+  private def shopDir(orders: Seq[String] = orderLines): String = {
+    val dir = Files.createTempDirectory("graft_shop").toString
+    write(dir, "movie_info.csv", movieLines)
+    write(dir, "review.csv", reviewLines)
+    write(dir, "order.csv", orders)
+    dir
+  }
+
+  /** The endpoints' plans over a fresh read of the files. */
+  private class Fresh(s: SparkSession, dir: String) {
+    def movies: DataFrame = Tables.tsv(s, s"$dir/movie_info.csv", MovieShop.movieSchema)
+    def reviews: DataFrame = Tables.tsv(s, s"$dir/review.csv", MovieShop.reviewSchema)
+    def orders: DataFrame = Tables.tsv(s, s"$dir/order.csv", MovieShop.orderSchema)
+
+    def queryMovieList(startFrom: Int, limitation: Int, searchKey: String): DataFrame =
+      movies.filter(col("name").like(s"%$searchKey%"))
+        .orderBy(col("movie_id").asc).offset(startFrom).limit(limitation)
+        .select(col("movie_id"), col("name"), col("price"), col("ranking"),
+          from_json(col("information"), MovieShop.movieInfoSchema).as("information"))
+
+    def queryMovie(movieId: Int): DataFrame =
+      movies.filter(col("movie_id") === movieId)
+        .join(reviews.withColumnRenamed("ranking", "review_ranking"),
+          Seq("movie_id"), "left_outer")
+        .groupBy("movie_id", "name", "price", "ranking", "information")
+        .agg(sort_array(collect_list(when(col("review_id").isNotNull,
+          struct(col("review_id"), col("review_ranking"), col("content")))))
+          .as("reviews"))
+        .select(col("movie_id"), col("name"), col("price"), col("ranking"),
+          from_json(col("information"), MovieShop.movieInfoSchema).as("information"),
+          from_json(get_json_object(col("information"), "$.pubdate"),
+            ArrayType(StringType)).as("pubdate_decoded"),
+          col("reviews"))
+
+    def queryOrderList(startFrom: Int, limitation: Int, timePattern: String): DataFrame = {
+      val filtered =
+        if (timePattern == "%") orders else orders.filter(col("create_time").like(timePattern))
+      filtered.orderBy(col("create_time").desc, col("order_id").desc)
+        .offset(startFrom).limit(limitation)
+    }
+
+    def queryRecommendMovieList(limitation: Int): DataFrame =
+      movies.filter(col("ranking").isNotNull)
+        .orderBy(col("ranking").desc, col("movie_id").asc).limit(limitation)
+        .select("movie_id", "name", "price", "ranking")
+
+    def nextOrderId: Int =
+      orders.agg(coalesce(max(col("order_id")), lit(0))).collect()(0).getInt(0) + 1
+
+    def monthlySales: DataFrame =
+      orders.groupBy(substring(col("create_time"), 1, 4).as("y"),
+          substring(col("create_time"), 6, 2).as("m"))
+        .agg(round(sum(col("price_sum")), 1).as("sales")).orderBy("y", "m")
+
+    def salesRollup: DataFrame =
+      orders.rollup(substring(col("create_time"), 1, 4).as("y"),
+          substring(col("create_time"), 6, 2).as("m"))
+        .agg(round(sum(col("price_sum")), 1).as("sales"))
+        .orderBy(col("y").asc_nulls_first, col("m").asc_nulls_first)
+
+    def yearlySales: DataFrame =
+      orders.groupBy(substring(col("create_time"), 1, 4).as("y"))
+        .agg(round(sum(col("price_sum")), 1).as("sales")).orderBy("y")
+  }
+
+  private def assertSame(actual: DataFrame, expected: DataFrame, what: String): Unit = {
+    assert(actual.schema == expected.schema, what)
+    assert(actual.collect().toSeq == expected.collect().toSeq, what)
+  }
+
+  private val listForms = Seq((0, 10, ""), (2, 3, ""), (0, 10, "Kiss"), (0, 10, "%"),
+    (0, 10, "_"), (0, 10, "野"), (1, 1, "e"), (0, 10, "nothing"))
+  private val orderForms = Seq("%", "2015-%", "2015-07-%", "2015-07-19%", "%-%-03%",
+    "2015-%-19%", "%-%-19%")
+
+  /** Every endpoint against its fresh plan; the insert only reads. */
+  private def assertEndpoints(s: SparkSession, dir: String): Unit = {
+    val f = new Fresh(s, dir)
+    listForms.foreach { case (from, lim, key) =>
+      assertSame(MovieShop.queryMovieList(s, dir, from, lim, key),
+        f.queryMovieList(from, lim, key), s"queryMovieList($from, $lim, '$key')")
+    }
+    (101 to 107).foreach { id =>
+      assertSame(MovieShop.queryMovie(s, dir, id), f.queryMovie(id), s"queryMovie($id)")
+    }
+    Seq(15, 2).foreach { lim =>
+      assertSame(MovieShop.queryRecommendMovieList(s, dir, lim),
+        f.queryRecommendMovieList(lim), s"queryRecommendMovieList($lim)")
+    }
+    orderForms.foreach { p =>
+      assertSame(MovieShop.queryOrderList(s, dir, 0, 100, p), f.queryOrderList(0, 100, p),
+        s"queryOrderList('$p')")
+    }
+    assertSame(MovieShop.queryOrderList(s, dir, 2, 3), f.queryOrderList(2, 3, "%"),
+      "queryOrderList page")
+    assertSame(MovieShop.salesRollup(s, dir), f.salesRollup, "salesRollup")
+    assertSame(MovieShop.monthlySales(s, dir), f.monthlySales, "monthlySales")
+    val (monthly, yearly) = MovieShop.chartBundle(s, dir)
+    assertSame(monthly, f.monthlySales, "chartBundle monthly")
+    assertSame(yearly, f.yearlySales, "chartBundle yearly")
+    val ins = MovieShop.insertOrder(s, dir, 105, "Hero", 3, 89.951).collect()
+    assert(ins.length == 1)
+    assert(ins(0).toSeq.take(5) == Seq(f.nextOrderId, 105, "Hero", 3, 90.0))
+    assert(ins(0).getString(5).matches("""\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}"""))
+  }
+
+  private def orderIds(s: SparkSession, dir: String): Seq[Int] =
+    MovieShop.queryOrderList(s, dir, 0, 1000).collect().map(_.getInt(0)).toSeq
+
+  /** The ids of the checkpointed relations a plan reads. */
+  private def rddScans(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+
+  private def liveKeys(s: SparkSession, dir: String): Set[String] =
+    MovieShop.snapshots.keySet.asScala.collect {
+      case (ks, key) if (ks eq s) && (key.startsWith(s"$dir/") || key.startsWith(s"$dir#")) => key
+    }.toSet
+
+  test("every endpoint matches its plan over a fresh read, row for row") {
+    val dir = shopDir()
+    assertEndpoints(spark, dir)
+    // FIXTURES.md §A edge cases survive the snapshot
+    val kiss = MovieShop.queryMovie(spark, dir, 101).collect()(0)
+    assert(kiss.getAs[Row]("information").getAs[Row]("rating").getAs[String]("average") == "")
+    assert(kiss.getAs[scala.collection.Seq[String]]("pubdate_decoded") == Seq("1955-05-18(USA)"))
+    assert(kiss.getAs[scala.collection.Seq[Row]]("reviews").map(_.getInt(0)) == Seq(1, 2, 3))
+    val team = MovieShop.queryMovie(spark, dir, 104).collect()
+    assert(team.length == 1 && team(0).getAs[scala.collection.Seq[Row]]("reviews").isEmpty)
+    assert(MovieShop.queryMovie(spark, dir, 999).collect().isEmpty)
+    assert(MovieShop.queryMovieList(spark, dir, 0, 10, "").count() == 5) // null name excluded
+    assert(MovieShop.queryMovieList(spark, dir, 0, 10, "%").collect().map(_.getInt(0)).toSeq
+      == Seq(101, 102, 103, 104, 105))
+    assert(MovieShop.queryOrderList(spark, dir, 0, 100, "%-%-03%").count() == 3)
+    assert(MovieShop.queryOrderList(spark, dir, 0, 100, "2015-%-19%").count() == 2)
+  }
+
+  test("an append to order.csv is seen by the next insert, order list and rollup") {
+    val dir = shopDir()
+    assertEndpoints(spark, dir)
+    append(dir, "order.csv", "9\t104\tA_Team\t2\t30.0\t2020-02-02 02:02:02")
+    assertEndpoints(spark, dir)
+    assert(MovieShop.insertOrder(spark, dir, 101, "Kiss Me Deadly", 1, 12.5)
+      .collect()(0).getInt(0) == 10)
+    assert(orderIds(spark, dir).head == 9 && orderIds(spark, dir).size == 9)
+    val ru = MovieShop.salesRollup(spark, dir).collect()
+    assert(ru.exists(r => !r.isNullAt(0) && r.getString(0) == "2020" && r.isNullAt(1) &&
+      r.getDouble(2) == 30.0))
+    assert(ru.head.isNullAt(0) && ru.head.getDouble(2) == 262.2)
+  }
+
+  test("a rewrite of review.csv rebuilds the movie-detail view") {
+    val dir = shopDir()
+    assert(MovieShop.queryMovie(spark, dir, 104).collect()(0)
+      .getAs[scala.collection.Seq[Row]]("reviews").isEmpty)
+    val detail = MovieShop.snapshots.get((spark, s"$dir#movie_detail")).df
+    write(dir, "review.csv", reviewLines :+ "9\t104\t7.5\tteam")
+    assertEndpoints(spark, dir)
+    assert(MovieShop.queryMovie(spark, dir, 104).collect()(0)
+      .getAs[scala.collection.Seq[Row]]("reviews").map(_.getString(2)) == Seq("team"))
+    assert(!(MovieShop.snapshots.get((spark, s"$dir#movie_detail")).df eq detail))
+    // same length, new modification time: still a new version
+    val file = Paths.get(dir, "review.csv").toFile
+    val stamp = file.lastModified()
+    write(dir, "review.csv", reviewLines :+ "9\t104\t7.5\tmeam")
+    assert(file.setLastModified(stamp + 5000))
+    assertEndpoints(spark, dir)
+    assert(MovieShop.queryMovie(spark, dir, 104).collect()(0)
+      .getAs[scala.collection.Seq[Row]]("reviews").map(_.getString(2)) == Seq("meam"))
+  }
+
+  test("two directories and two sessions never share an entry") {
+    val a = shopDir()
+    val b = shopDir(orderLines.take(5))
+    val other = spark.newSession()
+    for (s <- Seq(spark, other); dir <- Seq(a, b)) assertEndpoints(s, dir)
+    assert(orderIds(spark, a).size == 8 && orderIds(spark, b).size == 5)
+    assert(orderIds(other, a).size == 8 && orderIds(other, b).size == 5)
+    assert(MovieShop.orders(other, a).sparkSession eq other)
+    assert(MovieShop.movies(spark, a).sparkSession eq spark)
+    assert(rddScans(MovieShop.orders(spark, a)) != rddScans(MovieShop.orders(other, a)))
+    assert(rddScans(MovieShop.orders(spark, a)) != rddScans(MovieShop.orders(spark, b)))
+    assert(liveKeys(spark, a) == liveKeys(other, a))
+    assert(liveKeys(spark, a).intersect(liveKeys(spark, b)).isEmpty)
+  }
+
+  test("one live entry per key after many appends") {
+    val dir = shopDir()
+    (9 to 20).foreach { id =>
+      append(dir, "order.csv", s"$id\t101\tKiss Me Deadly\t1\t12.5\t2018-0${id % 9 + 1}-01 00:00:00")
+      assert(MovieShop.insertOrder(spark, dir, 101, "Kiss Me Deadly", 1, 12.5)
+        .collect()(0).getInt(0) == id + 1)
+      assert(orderIds(spark, dir).size == id)
+      MovieShop.salesRollup(spark, dir).collect()
+      MovieShop.queryMovie(spark, dir, 101).collect()
+    }
+    assertEndpoints(spark, dir)
+    assert(liveKeys(spark, dir) == Set("movie_info.csv", "review.csv", "order.csv")
+      .map(f => s"$dir/$f") ++ Set(s"$dir#movie_detail", s"$dir#sales_rollup"))
+  }
+
+  test("chartBundle does not pin the order table: a later append is read") {
+    val dir = shopDir()
+    val (monthly, yearly) = MovieShop.chartBundle(spark, dir)
+    monthly.collect(); yearly.collect()
+    append(dir, "order.csv", "9\t104\tA_Team\t2\t30.0\t2020-02-02 02:02:02")
+    assert(MovieShop.insertOrder(spark, dir, 101, "Kiss Me Deadly", 1, 12.5)
+      .collect()(0).getInt(0) == 10)
+    assert(orderIds(spark, dir).size == 9)
+    val (monthly2, yearly2) = MovieShop.chartBundle(spark, dir)
+    assert(rddScans(monthly2) == rddScans(yearly2) && rddScans(monthly2).size == 1)
+    assert(yearly2.collect().map(_.getString(0)).toSeq == Seq("2015", "2016", "2017", "2019", "2020"))
+  }
+}

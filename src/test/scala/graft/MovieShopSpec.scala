@@ -1,6 +1,8 @@
 package graft
 
 import graft.movieshop.MovieShop
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Golden parity tests against the reference's own seed data
@@ -96,16 +98,18 @@ class MovieShopSpec extends SparkTestBase {
     assert(y2016.length == 1)
   }
 
-  test("chartBundle: cached orders feed both aggregations with consistent totals") {
+  test("chartBundle: one orders snapshot feeds both aggregations with consistent totals") {
     val (monthly, yearly) = MovieShop.chartBundle(spark, dir)
     val monthlyByYear = monthly.collect()
       .groupBy(_.getString(0)).view.mapValues(_.map(_.getDouble(2)).sum).toMap
     yearly.collect().foreach { r =>
       assert(math.abs(r.getDouble(1) - monthlyByYear(r.getString(0))) < 0.05)
     }
-    // the shared relation is actually cached (storageLevel resolves
-    // via the cache manager for any logically-equal plan)
-    assert(MovieShop.orders(spark, dir).storageLevel.useMemory)
+    // both series read the one checkpointed orders snapshot
+    def scans(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    assert(scans(monthly).size == 1 && scans(monthly) == scans(yearly))
+    assert(scans(monthly) == scans(MovieShop.orders(spark, dir)))
   }
 
   test("S5 row-to-JSON sink emits one JSON document per row") {
