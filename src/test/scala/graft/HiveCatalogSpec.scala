@@ -12,7 +12,7 @@ class HiveCatalogSpec extends SparkTestBase {
   val seed = ReferenceSeed.dir
 
   test("reference DDL + LOAD DATA runs verbatim; SQL queries hit the Hive tables") {
-    ReferenceSeed.assumePresent()
+    ReferenceSeed.assumePresent("movie_info.csv", "order.csv")
     spark.sql("CREATE DATABASE IF NOT EXISTS movie_shop")
     // the session is JVM-wide: whatever fails below, leave it in `default`
     // with neither table behind
