@@ -68,10 +68,13 @@ object VectorIndex {
       s"${java.nio.file.Paths.get(d).getFileName}-${sourceFingerprint(src)}",
       kind)
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    val f = p.toFile
-    if (f.isDirectory) f.listFiles().foreach(c => deleteRecursively(c.toPath))
-    java.nio.file.Files.deleteIfExists(p)
+  /** Deletes `p` and everything under it; a path already gone is no
+    * error. The one recursive delete in the library: index publish,
+    * snapshot pruning and delta-ledger folds all go through it.
+    */
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
+    Option(p.toFile.listFiles()).toSeq.flatten.foreach(c => deleteTree(c.toPath))
+    java.nio.file.Files.deleteIfExists(p); ()
   }
 
   /** Our own publish marker, written into the build dir AFTER the
@@ -122,12 +125,12 @@ object VectorIndex {
           Files.createDirectories(path.getParent)
           // a dir without our sentinel is a crashed writer's leftovers
           if (Files.exists(path) && !Files.exists(path.resolve(Sentinel)))
-            deleteRecursively(path)
+            deleteTree(path)
           Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
         } catch {
           case _: java.nio.file.FileAlreadyExistsException |
                _: java.nio.file.FileSystemException =>
-            deleteRecursively(tmp) // another JVM won the race — use theirs
+            deleteTree(tmp) // another JVM won the race — use theirs
         }
       }
     }

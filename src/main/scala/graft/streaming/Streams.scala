@@ -14,6 +14,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * plans are identical; tests drive them with MemoryStream) with the
   * events schema `(event_id, ts timestamp, user_id, event_type, value,
   * props)`.
+  *
+  * The `*MaintainStream` twins keep their state in a [[Ledger]] of
+  * per-batch deltas; its scaladoc states the layout, replay and
+  * empty-state rules they all share. Each twin's own doc says what it
+  * admits on and why its merged state equals the batch answer.
   */
 object Streams {
 
@@ -207,7 +212,7 @@ object Streams {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     new java.io.File(tableDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("snap_") && f.getName != snapName)
-      .foreach(d => { d.listFiles().foreach(_.delete()); d.delete() })
+      .foreach(d => graft.sources.VectorIndex.deleteTree(d.toPath))
   }
 
   /** Streaming MERGEABLE-SKETCH sink — the a29 posture maintained by
@@ -364,35 +369,26 @@ object Streams {
                              incomingMod: Long = 4L): org.apache.spark.sql.streaming.StreamingQuery = {
     // corpus-side relations materialize once, before the first batch
     val corpus = dedupCorpusSides(incoming.sparkSession, corpusDir, incomingMod)
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        incrementalDedupBatch(batch.toDF(), corpus, threshold)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)((batch, _) =>
+      incrementalDedupBatch(batch, corpus, threshold)
+        .write.mode("append").parquet(outDir))
   }
 
   /** Streaming twin of `Dedup.incrementalLshPairs` (DD17): the ingest
     * stream MAINTAINS the persisted LSH text index. Per micro-batch:
     *
     *  1. admission — docs already indexed (a redelivery) are dropped by
-    *     an anti-join against the delta directories' doc ids, so the
-    *     index never holds a document twice;
+    *     an anti-join against the band deltas' doc ids, so the index
+    *     never holds a document twice;
     *  2. delta publish — the batch's portable gram rows and banded
-    *     signatures are written as `b<batchId>` subdirectories (a
-    *     replayed micro-batch OVERWRITES its own delta — the standard
-    *     idempotent foreachBatch layout);
+    *     signatures;
     *  3. probe — the batch's bands join base ∪ all deltas for
     *     candidates, exact-verified over base ∪ delta grams, appended
     *     to the match output.
     *
-    * No keyed stream state: the index directories ARE the state
-    * (append-only, restart-safe), exactly the dd17 batch layout — so
-    * the union of emitted pairs over any wave/redelivery schedule
-    * equals the batch operator's answer (StreamingSpec equivalence).
+    * Base ∪ deltas is exactly the dd17 batch layout, so the union of
+    * emitted pairs over any wave/redelivery schedule equals the batch
+    * operator's answer (StreamingSpec equivalence).
     */
   def lshIndexMaintainStream(incoming: DataFrame, corpusDir: String,
                              boundary: Long, workDir: String,
@@ -405,14 +401,9 @@ object Streams {
     val baseGr = graft.sources.TextIndex
       .gramIndex(s, corpusDir, 3, portable = true)
       .filter(col("doc_id") < boundary).localCheckpoint()
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        indexMaintainBatch(batch.toDF(), batchId, base, baseGr, workDir,
-          threshold, numHashes, bands)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      indexMaintainBatch(_, _, base, baseGr, workDir,
+        threshold, numHashes, bands))
   }
 
   /** [[lshIndexMaintainStream]] in the CHARACTER shingle basis — the
@@ -435,41 +426,13 @@ object Streams {
       .filter(col("doc_id") < boundary).localCheckpoint()
     val baseGr = graft.sources.TextIndex.charGramIndex(s, corpusDir, k)
       .filter(col("doc_id") < boundary).localCheckpoint()
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        charIndexMaintainBatch(batch.toDF(), batchId, base, baseGr,
-          workDir, threshold, numHashes, bands, k)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      charIndexMaintainBatch(_, _, base, baseGr,
+        workDir, threshold, numHashes, bands, k))
   }
 
-  private def deltaDirs(workDir: String, kind: String): Seq[String] =
-    Option(new java.io.File(s"$workDir/$kind").listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("b"))
-      .map(_.getAbsolutePath)
-
-  /** The delta union, or — when NO batch has ever committed — an empty
-    * relation with the ledger's schema. `spark.read.parquet()` with
-    * zero paths throws, so without this every read-side function would
-    * crash on a maintained state that simply hasn't seen data yet; an
-    * empty state is a legitimate state and must answer with an empty
-    * (schema-correct) result instead.
-    */
-  private def deltasOrEmpty(s: org.apache.spark.sql.SparkSession,
-                            workDir: String, kind: String,
-                            ddl: String): DataFrame = {
-    val dirs = deltaDirs(workDir, kind)
-    if (dirs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    else s.read.parquet(dirs: _*)
-  }
-
-  /** One micro-batch of [[lshIndexMaintainStream]] — extracted so the
-    * CHECKPOINT-REPLAY path (same batchId re-run after a crash between
-    * delta publish and checkpoint commit) is directly testable.
+  /** One micro-batch of [[lshIndexMaintainStream]], callable directly
+    * so tests can replay a batch id.
     */
   private[graft] def indexMaintainBatch(batchDf: DataFrame, batchId: Long,
                                         base: DataFrame, baseGr: DataFrame,
@@ -509,31 +472,17 @@ object Streams {
                                      numHashes: Int, bands: Int): Unit = {
     import graft.operators.Dedup
     val s = batchDf.sparkSession
-    // Admission must EXCLUDE this batch's own delta directory: a
-    // checkpoint replay of batch N (crash after the delta publish,
-    // before the checkpoint commit) re-sees its own published rows,
-    // and filtering against them would overwrite delta N with an
-    // EMPTY relation — silently dropping those documents from the
-    // index. Excluded, the replay recomputes the identical delta
-    // and the overwrite is a no-op; docs redelivered in a LATER
-    // batch (different id) are still dropped by the other dirs.
-    val existingBands = deltaDirs(workDir, "bands")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val fresh = existingBands match {
-      case Seq() => batchDf
-      case dirs => batchDf.join(
-        s.read.parquet(dirs: _*).select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    }
+    // admission on doc_id against the band deltas' distinct ids
+    val fresh = Ledger.prior(s, workDir, "bands", batchId).fold(batchDf)(p =>
+      batchDf.join(p.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
     val bGr = gramsOf(fresh).localCheckpoint()
-    bGr.write.mode("overwrite").parquet(s"$workDir/grams/b$batchId")
-    Dedup.bandedSignatures(bGr, numHashes, bands)
-      .write.mode("overwrite").parquet(s"$workDir/bands/b$batchId")
+    Ledger.publish(bGr, workDir, "grams", batchId)
+    val batchBands = s.read.parquet(Ledger.publish(
+      Dedup.bandedSignatures(bGr, numHashes, bands), workDir, "bands", batchId))
     val allBands = base.unionByName(
-      s.read.parquet(deltaDirs(workDir, "bands"): _*))
+      Ledger.read(s, workDir, "bands", base.schema.toDDL))
     val allGr = baseGr.unionByName(
-      s.read.parquet(deltaDirs(workDir, "grams"): _*))
-    val batchBands = s.read.parquet(s"$workDir/bands/b$batchId")
+      Ledger.read(s, workDir, "grams", baseGr.schema.toDDL))
     // symmetric: arrival order is NOT id order, so the batch doc may
     // be either pair member — normalize to (least, greatest) so a
     // pair matches the batch operator's doc_a < doc_b orientation
@@ -557,18 +506,10 @@ object Streams {
     * micro-batch row is one (ok, pk) order line and a basket's lines
     * arrive within ONE micro-batch (baskets are atomic events), so
     * every pair is batch-local and the published deltas are exact.
-    * Per batch, the dd17 delta layout:
-    *
-    *  1. admission — orders already indexed (redelivered in a LATER
-    *     batch) are dropped by an anti-join on the item deltas' order
-    *     ids, EXCLUDING this batch's own delta (the checkpoint-replay
-    *     lesson: a replayed batch must recompute an identical delta,
-    *     not filter against its own rows and publish emptiness);
-    *  2. delta publish — the batch's distinct (ok, pk) items and its
-    *     canonical (pa, pb, ok) pair rows land in b<batchId> dirs (a
-    *     replay OVERWRITES its own delta — idempotent).
-    *
-    * No keyed stream state: the delta directories ARE the state.
+    * Per batch, orders already indexed (redelivered in a later batch)
+    * are dropped by an anti-join on the item deltas' order ids, then
+    * the batch's distinct (ok, pk) items and its canonical (pa, pb, ok)
+    * pair rows are published as deltas.
     * [[readSupportIndex]] aggregates the published pair/item rows and
     * enters the batch operator's own ranked tail
     * (Graph.supportFromCounts), so stream-maintained support over any
@@ -579,34 +520,17 @@ object Streams {
     */
   def supportIndexMaintainStream(incoming: DataFrame, workDir: String,
                                  checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        supportMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      supportMaintainBatch(_, _, workDir))
 
-  /** One micro-batch of [[supportIndexMaintainStream]] — extracted so
-    * the same-batch-id checkpoint replay is directly testable.
-    */
   private[graft] def supportMaintainBatch(batchDf: DataFrame, batchId: Long,
                                           workDir: String): Unit = {
     val s = batchDf.sparkSession
-    val existing = deltaDirs(workDir, "items")
-      .filterNot(_.endsWith(s"/b$batchId"))
     val batchItems = batchDf.select(col("ok"), col("pk")).distinct()
-    val fresh = existing match {
-      case Seq() => batchItems
-      case dirs => batchItems.join(
-        s.read.parquet(dirs: _*).select("ok").distinct(),
-        Seq("ok"), "left_anti")
-    }
-    fresh.write.mode("overwrite").parquet(s"$workDir/items/b$batchId")
-    val items = s.read.parquet(s"$workDir/items/b$batchId")
-    graft.operators.Graph.pairRowsOf(items)
-      .write.mode("overwrite").parquet(s"$workDir/pairs/b$batchId")
-    ()
+    val fresh = Ledger.prior(s, workDir, "items", batchId).fold(batchItems)(p =>
+      batchItems.join(p.select("ok").distinct(), Seq("ok"), "left_anti"))
+    val items = s.read.parquet(Ledger.publish(fresh, workDir, "items", batchId))
+    Ledger.publish(graft.operators.Graph.pairRowsOf(items), workDir, "pairs", batchId)
   }
 
   /** Read side of the streaming support index: aggregate the delta
@@ -614,8 +538,8 @@ object Streams {
     */
   def readSupportIndex(s: org.apache.spark.sql.SparkSession, workDir: String,
                        topK: Int = 100): DataFrame = {
-    val items = s.read.parquet(deltaDirs(workDir, "items"): _*)
-    val pairs = s.read.parquet(deltaDirs(workDir, "pairs"): _*)
+    val items = Ledger.read(s, workDir, "items", "ok BIGINT, pk BIGINT")
+    val pairs = Ledger.read(s, workDir, "pairs", "pa BIGINT, pb BIGINT, ok BIGINT")
     graft.operators.Graph.supportFromCounts(
       pairs.groupBy("pa", "pb").agg(count(lit(1)).as("pair_n")),
       items.groupBy("pk").agg(count(lit(1)).as("item_n")), topK)
@@ -630,25 +554,19 @@ object Streams {
     * not per-event accumulation.
     *
     * Per micro-batch:
-    *   1. ADMIT: dedup the batch on event_id against all PRIOR event
-    *      deltas (excluding the batch's own delta — the dd17
-    *      checkpoint-replay rule: a crash between publish and commit
-    *      re-runs the same batch id, which must overwrite its own
-    *      delta, not anti-join against it);
-    *   2. publish the fresh events as `events/b<id>` (append-only,
-    *      overwrite-idempotent);
-    *   3. RECOMPUTE: for exactly the users present in the fresh
+    *   1. ADMIT: dedup the batch on event_id against the earlier event
+    *      deltas, and publish the fresh events as an `events` delta;
+    *   2. RECOMPUTE: for exactly the users present in the fresh
     *      events, rebuild their ENTIRE path relation from all event
     *      deltas (the batch operator's own sessionPathRows chain) and
-    *      publish as `paths/b<id>` plus a `users/b<id>` presence
+    *      publish it as a `paths` delta plus a `users` presence
     *      marker — the marker, not the path rows, carries versioning,
     *      so a user whose recompute yields zero paths still
     *      supersedes their stale rows.
     *
-    * No keyed stream state: the deltas ARE the state. The read side
-    * keeps each user's LATEST version (max marker batch) and enters
-    * the batch operator's own ranked tail, so any wave / late
-    * redelivery / replay schedule lands on the batch sq3 answer
+    * The read side keeps each user's LATEST version (max marker batch)
+    * and enters the batch operator's own ranked tail, so any wave /
+    * late redelivery / replay schedule lands on the batch sq3 answer
     * (StreamingSpec equivalence). At 100 TB the per-batch cost is
     * (events of users active in the batch) — the standard
     * sessionization-maintenance cost — and reads prune to the
@@ -657,49 +575,32 @@ object Streams {
   def sessionPathMaintainStream(incoming: DataFrame, workDir: String,
                                 checkpointDir: String,
                                 gapMinutes: Int = 30): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sessionPathMaintainBatch(batch.toDF(), batchId, workDir, gapMinutes)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      sessionPathMaintainBatch(_, _, workDir, gapMinutes))
 
-  /** One micro-batch of [[sessionPathMaintainStream]] — extracted so
-    * the same-batch-id checkpoint replay is directly testable.
-    */
   private[graft] def sessionPathMaintainBatch(batchDf: DataFrame, batchId: Long,
                                               workDir: String,
                                               gapMinutes: Int): Unit = {
     val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "events")
-      .filterNot(_.endsWith(s"/b$batchId"))
     val batchEvents = batchDf
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .dropDuplicates("event_id")
-    val fresh = prior match {
-      case Seq() => batchEvents
-      case dirs =>
-        // the dedup anti-join only needs prior event ids OF THE
-        // BATCH'S USERS (event ids are globally unique and carry
-        // their user) — at scale, user-partitioned delta layout
-        // turns this into a pruned scan, not a full-history read
-        val batchUsers = batchEvents.select("user_id").distinct()
-        batchEvents.join(
-          s.read.parquet(dirs: _*).join(batchUsers, "user_id")
-            .select("event_id").distinct(),
-          Seq("event_id"), "left_anti")
-    }
-    fresh.write.mode("overwrite").parquet(s"$workDir/events/b$batchId")
-    val users = s.read.parquet(s"$workDir/events/b$batchId")
+    // the dedup anti-join only needs prior event ids OF THE BATCH'S
+    // USERS (event ids are globally unique and carry their user) — at
+    // scale, user-partitioned delta layout turns this into a pruned
+    // scan, not a full-history read
+    val fresh = Ledger.prior(s, workDir, "events", batchId).fold(batchEvents)(p =>
+      batchEvents.join(
+        p.join(batchEvents.select("user_id").distinct(), "user_id")
+          .select("event_id").distinct(),
+        Seq("event_id"), "left_anti"))
+    val users = s.read.parquet(Ledger.publish(fresh, workDir, "events", batchId))
       .select("user_id").distinct().localCheckpoint()
-    val affected = s.read.parquet(deltaDirs(workDir, "events"): _*)
+    val affected = Ledger.read(s, workDir, "events", fresh.schema.toDDL)
       .join(users, "user_id")
-    graft.operators.DataPrep.sessionPathRows(affected, gapMinutes)
-      .write.mode("overwrite").parquet(s"$workDir/paths/b$batchId")
-    users.withColumn("bid", lit(batchId))
-      .write.mode("overwrite").parquet(s"$workDir/users/b$batchId")
-    ()
+    Ledger.publish(graft.operators.DataPrep.sessionPathRows(affected, gapMinutes),
+      workDir, "paths", batchId)
+    Ledger.publish(users.withColumn("bid", lit(batchId)), workDir, "users", batchId)
   }
 
   /** Read side of the streaming path index: each user's latest
@@ -707,13 +608,10 @@ object Streams {
     */
   def readSessionPaths(s: org.apache.spark.sql.SparkSession,
                        workDir: String): DataFrame = {
-    val latest = s.read.parquet(deltaDirs(workDir, "users"): _*)
+    val latest = Ledger.read(s, workDir, "users", "user_id BIGINT, bid BIGINT")
       .groupBy("user_id").agg(max(col("bid")).as("bid"))
-    val paths = deltaDirs(workDir, "paths").map { dir =>
-      val bid = dir.substring(dir.lastIndexOf("/b") + 2).toLong
-      s.read.parquet(dir).withColumn("bid", lit(bid))
-    }.reduce(_ unionByName _)
-    paths.join(latest, Seq("user_id", "bid"))
+    Ledger.readVersioned(s, workDir, "paths", "user_id BIGINT, path STRING")
+      .join(latest, Seq("user_id", "bid"))
       .groupBy("path")
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"))
@@ -726,8 +624,7 @@ object Streams {
     * delta and the read side just sums deltas — no per-key recompute
     * (sq3's stream) and no keyed state. Admission still dedups on
     * event_id against the prior skinny id deltas (ids only — the
-    * events/ dirs carry nothing else), with the batch's own delta
-    * excluded (the checkpoint-replay rule). The read side feeds the
+    * events/ dirs carry nothing else). The read side feeds the
     * summed daily table into the batch operator's own scoring tail
     * (Windows.rollingAnomalyFrom), so stream-maintained anomalies
     * equal batch w16 under any wave/redelivery/replay schedule. At
@@ -737,35 +634,19 @@ object Streams {
     */
   def dailyCountMaintainStream(incoming: DataFrame, workDir: String,
                                checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dailyCountMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      dailyCountMaintainBatch(_, _, workDir))
 
   private[graft] def dailyCountMaintainBatch(batchDf: DataFrame, batchId: Long,
                                              workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "events")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchEvents = batchDf
-      .select(col("event_id"), col("ts"), col("event_type"))
-      .dropDuplicates("event_id")
-    val fresh = prior match {
-      case Seq() => batchEvents
-      case dirs => batchEvents.join(
-        s.read.parquet(dirs: _*), Seq("event_id"), "left_anti")
-    }
-    fresh.select("event_id")
-      .write.mode("overwrite").parquet(s"$workDir/events/b$batchId")
-    fresh
-      .groupBy(col("event_type"),
-        date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$workDir/counts/b$batchId")
-    ()
+    val fresh = admitOn("event_id",
+      batchDf.select(col("event_id"), col("ts"), col("event_type")),
+      workDir, "events", batchId)
+    Ledger.publish(fresh
+        .groupBy(col("event_type"),
+          date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
+        .agg(count(lit(1)).as("n")),
+      workDir, "counts", batchId)
   }
 
   /** Read side: sum the count deltas, then w16's own scoring tail. */
@@ -773,7 +654,7 @@ object Streams {
                          workDir: String,
                          threshold: Double = 1.5): DataFrame =
     graft.operators.Windows.rollingAnomalyFrom(
-      s.read.parquet(deltaDirs(workDir, "counts"): _*)
+      Ledger.read(s, workDir, "counts", "event_type STRING, day STRING, n BIGINT")
         .groupBy("event_type", "day")
         .agg(sum(col("n")).as("n")),
       threshold)
@@ -789,38 +670,28 @@ object Streams {
     * rewrites in a snapshot-published retention table — here it
     * composes instead). Admission dedups on the pair itself (an exact
     * redelivery and a same-user-same-day second event are the same
-    * no-op), against prior deltas EXCLUDING this batch's own (the
-    * checkpoint-replay rule: a replayed batch recomputes an identical
-    * delta and its overwrite is a no-op). At 100 TB the per-batch cost
+    * no-op). At 100 TB the per-batch cost
     * is the batch's own pairs; a day-partitioned delta layout prunes
     * the admission anti-join to the days present in the batch.
     */
   def activityIndexMaintainStream(incoming: DataFrame, workDir: String,
                                   checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        activityMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      activityMaintainBatch(_, _, workDir))
 
   private[graft] def activityMaintainBatch(batchDf: DataFrame, batchId: Long,
                                            workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "pairs")
-      .filterNot(_.endsWith(s"/b$batchId"))
     val batchPairs = batchDf
       .select(date_trunc("DAY", col("ts")).as("day"), col("user_id"))
       .distinct()
-    val fresh = prior match {
-      case Seq() => batchPairs
-      case dirs => batchPairs.join(
-        s.read.parquet(dirs: _*), Seq("day", "user_id"), "left_anti")
-    }
-    fresh.write.mode("overwrite").parquet(s"$workDir/pairs/b$batchId")
-    ()
+    Ledger.publish(
+      Ledger.admit(batchPairs, workDir, "pairs", batchId, Seq("day", "user_id")),
+      workDir, "pairs", batchId)
   }
+
+  private def activityPairs(s: org.apache.spark.sql.SparkSession,
+                            workDir: String): DataFrame =
+    Ledger.read(s, workDir, "pairs", "day TIMESTAMP, user_id BIGINT")
 
   /** Read side of the activity index: the deltas are disjoint by
     * construction, so their union IS the distinct pair relation;
@@ -830,8 +701,7 @@ object Streams {
     */
   def readRetention(s: org.apache.spark.sql.SparkSession,
                     workDir: String): DataFrame =
-    graft.operators.Analytics.retentionFromPairs(
-      s.read.parquet(deltaDirs(workDir, "pairs"): _*))
+    graft.operators.Analytics.retentionFromPairs(activityPairs(s, workDir))
 
   /** st6 over the same maintained pair index (one index, both
     * consumers — the point of keying the state on the shared
@@ -840,7 +710,7 @@ object Streams {
   def readRollingWau(s: org.apache.spark.sql.SparkSession,
                      workDir: String, windowDays: Int = 7): DataFrame =
     graft.operators.Analytics.rollingWauFromPairs(
-      s.read.parquet(deltaDirs(workDir, "pairs"): _*), windowDays)
+      activityPairs(s, workDir), windowDays)
 
   /** Streaming maintenance of gr15's weighted trade-edge index — the
     * stream twin of `GraphIndex.tradeWeightedDelta`, fed by a stream
@@ -851,8 +721,7 @@ object Streams {
     * `min(l_quantity)` per (src, dst), and min is IDEMPOTENT under
     * duplication — a redelivered line, a replayed batch, or a line
     * split across batches cannot change any edge's min. Each batch
-    * publishes only its own per-edge minima (batch-sized, overwrite-
-    * idempotent under checkpoint replay by batch id); the read side
+    * publishes only its own per-edge minima (batch-sized); the read side
     * re-mins across deltas, exactly the base ∪ delta merge gr15
     * proves equal to the monolithic derivation. At 100 TB the
     * per-batch cost is one batch-local aggregate; nightly compaction
@@ -860,13 +729,8 @@ object Streams {
     */
   def edgeIndexMaintainStream(incoming: DataFrame, workDir: String,
                               checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        edgeMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      edgeMaintainBatch(_, _, workDir))
 
   private[graft] def edgeMaintainBatch(batchDf: DataFrame, batchId: Long,
                                        workDir: String): Unit = {
@@ -874,12 +738,11 @@ object Streams {
     // long happens at read, after the cross-delta min — the same
     // min-then-cast order as the monolithic derivation (a cast per
     // batch would commute only for integral quantities)
-    batchDf
-      .groupBy((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .agg(min(col("l_quantity")).as("w"))
-      .write.mode("overwrite").parquet(s"$workDir/edges/b$batchId")
-    ()
+    Ledger.publish(batchDf
+        .groupBy((col("o_custkey") * 2).as("src"),
+          (col("l_suppkey") * 2 + 1).as("dst"))
+        .agg(min(col("l_quantity")).as("w")),
+      workDir, "edges", batchId)
   }
 
   /** Read side of the streaming edge index: per-edge min across all
@@ -889,7 +752,7 @@ object Streams {
     */
   def readEdgeIndex(s: org.apache.spark.sql.SparkSession,
                     workDir: String): DataFrame =
-    s.read.parquet(deltaDirs(workDir, "edges"): _*)
+    Ledger.read(s, workDir, "edges", "src BIGINT, dst BIGINT, w DOUBLE")
       .groupBy("src", "dst")
       .agg(min(col("w")).cast("long").as("w"))
 
@@ -899,11 +762,10 @@ object Streams {
     * SET-UNIONABLE — a micro-batch can only ever ADD pairs, so each
     * batch publishes the pairs of the documents it is FIRST to admit
     * and the logical index is the disjoint union of the deltas.
-    * Admission is doc_id-keyed against prior deltas EXCLUDING this
-    * batch's own (checkpoint-replay rule: a replayed batch recomputes
-    * an identical delta, overwrite is a no-op); a redelivered document
-    * is dropped wholesale — see [[chunkMaintainBatch]] for the
-    * first-version-wins mutation contract that keeps ban counts exact. Segmentation is [[graft.operators.Dedup.chunkRowsOf]] —
+    * Admission is doc_id-keyed; a redelivered document is dropped
+    * wholesale — see [[chunkMaintainBatch]] for the first-version-wins
+    * mutation contract that keeps ban counts exact. Segmentation is
+    * [[graft.operators.Dedup.chunkRowsOf]] —
     * the SAME definition the batch scrub uses, so the maintained ban
     * list cannot drift from the batch one. At 100 TB the per-batch
     * cost is the batch's own chunk pairs; the ban list read is a
@@ -912,13 +774,8 @@ object Streams {
   def chunkIndexMaintainStream(incoming: DataFrame, workDir: String,
                                checkpointDir: String, k: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        chunkMaintainBatch(batch.toDF(), batchId, workDir, k)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      chunkMaintainBatch(_, _, workDir, k))
 
   /** Admission is keyed on doc_id — a document is chunked into the
     * index exactly once, on FIRST delivery. This makes the mutation
@@ -935,39 +792,33 @@ object Streams {
     */
   private[graft] def chunkMaintainBatch(batchDf: DataFrame, batchId: Long,
                                         workDir: String, k: Int = 8): Unit = {
-    val s = batchDf.sparkSession
     // Layout migration: the admission ledger moved from chunks/ (pair
     // deltas, whose doc_id set IS the admitted set) to a dedicated
-    // docs/ directory. A workdir written by the old layout has chunk
-    // deltas but no docs/ ledger; without seeding, every previously
-    // admitted document would be re-admitted and its pairs
-    // double-published, breaking the disjointness invariant the read
-    // side's exact ban counts rely on. So the first docs-keyed batch
-    // to touch a legacy workdir seeds docs/blegacy from the distinct
-    // doc_ids already present in chunks/ — idempotent (overwrite of
-    // the same derivation) and a no-op for fresh workdirs.
-    val legacyChunks = deltaDirs(workDir, "chunks")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    if (deltaDirs(workDir, "docs").isEmpty && legacyChunks.nonEmpty)
-      s.read.parquet(legacyChunks: _*).select("doc_id").distinct()
-        .write.mode("overwrite").parquet(s"$workDir/docs/blegacy")
-    val prior = deltaDirs(workDir, "docs")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchDocs = batchDf.select(col("doc_id"), col("text"))
-      .dropDuplicates("doc_id")
-    val fresh = prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*), Seq("doc_id"), "left_anti")
-    }
-    // both directories per batch: the admission key set AND the chunk
-    // pairs derived from exactly the admitted documents
-    fresh.select("doc_id")
-      .write.mode("overwrite").parquet(s"$workDir/docs/b$batchId")
-    graft.operators.Dedup.chunkRowsOf(fresh, k)
-      .select("doc_id", "gh").distinct()
-      .write.mode("overwrite").parquet(s"$workDir/chunks/b$batchId")
-    ()
+    // docs/ ledger. Without the seed, every document a legacy workdir
+    // admitted would be re-admitted and its pairs double-published,
+    // breaking the disjointness the read side's exact ban counts rely on.
+    Ledger.seedLegacy(batchDf.sparkSession, workDir, "docs", "chunks",
+      Seq("doc_id"), batchId)
+    val fresh = admitOn("doc_id", batchDf.select(col("doc_id"), col("text")),
+      workDir, "docs", batchId)
+    Ledger.publish(graft.operators.Dedup.chunkRowsOf(fresh, k)
+        .select("doc_id", "gh").distinct(),
+      workDir, "chunks", batchId)
+  }
+
+  /** Single-key admission shared by the twins whose `kind` ledger
+    * holds admitted keys: the batch's rows deduplicated on `key`, minus
+    * those an earlier delta admitted. Publishes the admitted keys (plus
+    * `ledgerCols`) as this batch's `kind` delta and returns the admitted
+    * rows.
+    */
+  private def admitOn(key: String, rows: DataFrame, workDir: String,
+                      kind: String, batchId: Long,
+                      ledgerCols: String*): DataFrame = {
+    val fresh = Ledger.admit(rows.dropDuplicates(key), workDir, kind, batchId,
+      Seq(key))
+    Ledger.publish(fresh.select(key, ledgerCols: _*), workDir, kind, batchId)
+    fresh
   }
 
   /** Streaming maintenance of dd13/dd22's repeated-gram count state —
@@ -978,9 +829,8 @@ object Streams {
     * ([[graft.sources.TextIndex.repGramStateOf]] — the SAME definition
     * the persisted index's base/delta slices use, so stream and batch
     * can never count differently) and the read side sums the disjoint
-    * deltas and applies the floor. Admission is doc_id-keyed against
-    * prior deltas excluding this batch's own (checkpoint-replay rule);
-    * a redelivered document is dropped wholesale — first version wins,
+    * deltas and applies the floor. Admission is doc_id-keyed; a
+    * redelivered document is dropped wholesale — first version wins,
     * the [[chunkMaintainBatch]] mutation contract. At 100 TB a corpus
     * append costs the batch's own gram pass; the catalog read is a
     * sum over gh-keyed deltas, never a corpus re-gram.
@@ -988,33 +838,15 @@ object Streams {
   def repGramIndexMaintainStream(incoming: DataFrame, workDir: String,
                                  checkpointDir: String, n: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        repGramMaintainBatch(batch.toDF(), batchId, workDir, n)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      repGramMaintainBatch(_, _, workDir, n))
 
   private[graft] def repGramMaintainBatch(batchDf: DataFrame, batchId: Long,
                                           workDir: String, n: Int = 8): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "docs")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchDocs = batchDf.select(col("doc_id"), col("text"))
-      .dropDuplicates("doc_id")
-    val fresh = prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*), Seq("doc_id"), "left_anti")
-    }
-    // both directories per batch: the admission key set AND the count
-    // state derived from exactly the admitted documents
-    fresh.select("doc_id")
-      .write.mode("overwrite").parquet(s"$workDir/docs/b$batchId")
-    graft.sources.TextIndex.repGramStateOf(fresh, n)
-      .write.mode("overwrite").parquet(s"$workDir/repstate/b$batchId")
-    ()
+    val fresh = admitOn("doc_id", batchDf.select(col("doc_id"), col("text")),
+      workDir, "docs", batchId)
+    Ledger.publish(graft.sources.TextIndex.repGramStateOf(fresh, n),
+      workDir, "repstate", batchId)
   }
 
   /** Read side: sum the additive count states, apply the floor — the
@@ -1024,7 +856,8 @@ object Streams {
     */
   def readRepeatedGrams(s: org.apache.spark.sql.SparkSession,
                         workDir: String, floor: Long = 2L): DataFrame =
-    s.read.parquet(deltaDirs(workDir, "repstate"): _*)
+    Ledger.read(s, workDir, "repstate",
+        "gh BIGINT, gram STRING, n_docs BIGINT, n_occurrences BIGINT")
       .groupBy("gh")
       .agg(min(col("gram")).as("gram"),
         sum(col("n_docs")).as("n_docs"),
@@ -1039,10 +872,8 @@ object Streams {
     * re-derive as Σtf and the whole state is PER-DOCUMENT — disjoint
     * admitted-document sets publish disjoint posting rows, and the
     * read side unions deltas with NO re-aggregation (a document's
-    * postings live in exactly one delta). Admission is doc_id-keyed
-    * against prior deltas excluding this batch's own (the
-    * checkpoint-replay rule shared by every twin); a redelivered
-    * document is dropped wholesale — first version wins, the
+    * postings live in exactly one delta). Admission is doc_id-keyed; a
+    * redelivered document is dropped wholesale — first version wins, the
     * [[chunkMaintainBatch]] mutation contract. At 100 TB a corpus
     * append costs one tokenize of the batch's own documents; a query
     * read touches the query terms' posting lists plus the dl roll-up,
@@ -1051,37 +882,22 @@ object Streams {
   def postingsIndexMaintainStream(incoming: DataFrame, workDir: String,
                                   checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        postingsMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      postingsMaintainBatch(_, _, workDir))
 
   private[graft] def postingsMaintainBatch(batchDf: DataFrame, batchId: Long,
                                            workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "docs")
-      .filterNot(_.endsWith(s"/b$batchId"))
     // the admission ledger carries the doc's source alongside its id —
     // free at write time, and it is what lets the SAME maintained
     // artifact serve source-conditioned readouts (readDsir) without a
     // second corpus-scale state
-    val batchDocs = batchDf.select(col("doc_id"), col("text"), col("source"))
-      .dropDuplicates("doc_id")
-    val fresh = prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*), Seq("doc_id"), "left_anti")
-    }
-    fresh.select("doc_id", "source")
-      .write.mode("overwrite").parquet(s"$workDir/docs/b$batchId")
-    fresh.select(col("doc_id"),
-        explode(graft.functions.Text.tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      .write.mode("overwrite").parquet(s"$workDir/postings/b$batchId")
-    ()
+    val fresh = admitOn("doc_id",
+      batchDf.select(col("doc_id"), col("text"), col("source")),
+      workDir, "docs", batchId, "source")
+    Ledger.publish(fresh.select(col("doc_id"),
+          explode(graft.functions.Text.tokens(col("text"))).as("token"))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")),
+      workDir, "postings", batchId)
   }
 
   /** Streaming maintenance of cms1's Count-Min sketch — the
@@ -1105,13 +921,8 @@ object Streams {
   def cmsIndexMaintainStream(incoming: DataFrame, workDir: String,
                              checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cmsMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      cmsMaintainBatch(_, _, workDir))
 
   private[graft] val CmsProbeKeys: Seq[Long] = (1L to 20L).toSeq
   private[graft] val CmsEps = 0.001
@@ -1120,60 +931,57 @@ object Streams {
                                       workDir: String): Unit = {
     val s = batchDf.sparkSession
     import s.implicits._
-    val prior = deltaDirs(workDir, "likeys")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    // Order-keyed admission ASSUMES every delivery carries an order's
-    // COMPLETE line set (sketch counters are additive, not idempotent,
-    // so a partial first delivery or a grown redelivery would silently
-    // skew the merged counts against batch cms1). The ledger therefore
-    // records each admitted order's line count, and every redelivered
-    // order is checked against it — a violated delivery contract
-    // surfaces as a loud failure instead of corrupted counts.
-    val incomingCounts = batchDf.groupBy("l_orderkey")
-      .agg(count(lit(1)).as("n_lines"))
-    prior match {
-      case Seq() => ()
-      case dirs =>
-        // migration shim: pre-round-10 ledgers carry only l_orderkey.
-        // mergeSchema is REQUIRED — without it Spark infers the schema
-        // from one arbitrary footer, so a mixed old/new ledger could
-        // silently disarm the contract (old footer picked: no n_lines
-        // column) or null-pass every row (new footer picked: old rows
-        // read null, and null != x filters to nothing). With it the
-        // column exists whenever ANY delta has it, and the non-null
-        // restriction makes enforcement deterministic: new-format
-        // admissions are always checked, old-format ones (no recorded
-        // count) never are.
-        val ledger = s.read.option("mergeSchema", "true").parquet(dirs: _*)
-        if (ledger.columns.contains("n_lines")) {
-          val bad = incomingCounts
-            .join(ledger.filter(col("n_lines").isNotNull)
-              .withColumnRenamed("n_lines", "admitted_lines"),
-              "l_orderkey")
-            .filter(col("n_lines") =!= col("admitted_lines"))
-            .head(3)
-          if (bad.nonEmpty) throw new IllegalStateException(
-            "cms admission contract violated: redelivered order(s) with a " +
-              "different line set than at admission — " + bad.mkString(", "))
-        }
-    }
-    val fresh = prior match {
-      case Seq() => batchDf
-      case dirs => batchDf.join(s.read.parquet(dirs: _*),
-        Seq("l_orderkey"), "left_anti")
-    }
-    fresh.groupBy("l_orderkey").agg(count(lit(1)).as("n_lines"))
-      .write.mode("overwrite").parquet(s"$workDir/likeys/b$batchId")
+    // mergeSchema is REQUIRED by the migration shim: pre-round-10
+    // ledgers carry only l_orderkey, and without it Spark infers the
+    // schema from one arbitrary footer, so a mixed old/new ledger could
+    // silently disarm the contract (old footer picked: no n_lines
+    // column) or null-pass every row (new footer picked: old rows read
+    // null, and null != x filters to nothing). With it the column
+    // exists whenever ANY delta has it, so new-format admissions are
+    // always checked and old-format ones (no recorded count) never are.
+    val fresh = admitOrders(batchDf, workDir, "likeys", batchId, "cms",
+      mergeSchema = true)
     val cms = fresh.stat.countMinSketch("l_suppkey", CmsEps, 0.99, 42)
     val bos = new java.io.ByteArrayOutputStream()
     cms.writeTo(bos)
-    Seq((batchId, bos.toByteArray))
-      .toDF("batch_id", "sketch")
-      .write.mode("overwrite").parquet(s"$workDir/cms/b$batchId")
-    fresh.filter(col("l_suppkey").isin(CmsProbeKeys: _*))
-      .groupBy("l_suppkey").agg(count(lit(1)).as("exact_count"))
-      .write.mode("overwrite").parquet(s"$workDir/liexact/b$batchId")
-    ()
+    Ledger.publish(Seq((batchId, bos.toByteArray)).toDF("batch_id", "sketch"),
+      workDir, "cms", batchId)
+    Ledger.publish(fresh.filter(col("l_suppkey").isin(CmsProbeKeys: _*))
+        .groupBy("l_suppkey").agg(count(lit(1)).as("exact_count")),
+      workDir, "liexact", batchId)
+  }
+
+  /** Order-keyed admission of lineitem rows, shared by the cms and FK
+    * twins. It ASSUMES every delivery carries an order's COMPLETE line
+    * set: the maintained counts are additive, not idempotent, so a
+    * partial first delivery or a grown redelivery would silently skew
+    * them against the batch answer. The `kind` ledger therefore records
+    * each admitted order's line count, and every redelivered order is
+    * checked against it — a violated delivery contract fails loudly
+    * (naming `twin`) instead of corrupting counts. Returns the rows of
+    * the orders first delivered in this batch.
+    */
+  private def admitOrders(batchDf: DataFrame, workDir: String, kind: String,
+                          batchId: Long, twin: String,
+                          mergeSchema: Boolean = false): DataFrame = {
+    val ledger = Ledger.prior(batchDf.sparkSession, workDir, kind, batchId,
+      mergeSchema)
+    def lineCounts(d: DataFrame) =
+      d.groupBy("l_orderkey").agg(count(lit(1)).as("n_lines"))
+    ledger.filter(_.columns.contains("n_lines")).foreach { l =>
+      val bad = lineCounts(batchDf)
+        .join(l.filter(col("n_lines").isNotNull)
+          .withColumnRenamed("n_lines", "admitted_lines"), "l_orderkey")
+        .filter(col("n_lines") =!= col("admitted_lines"))
+        .head(3)
+      if (bad.nonEmpty) throw new IllegalStateException(
+        s"$twin admission contract violated: redelivered order(s) with a " +
+          "different line set than at admission — " + bad.mkString(", "))
+    }
+    val fresh = ledger.fold(batchDf)(l =>
+      batchDf.join(l.select("l_orderkey"), Seq("l_orderkey"), "left_anti"))
+    Ledger.publish(lineCounts(fresh), workDir, kind, batchId)
+    fresh
   }
 
   /** Read side: merge the serialized counter matrices (exact integer
@@ -1186,7 +994,7 @@ object Streams {
     // empty maintained state: the audit of zero admitted rows is the
     // probe rows against a zero sketch (all counts 0, all in-bounds),
     // not a reduce-over-nothing crash
-    val blobs = deltasOrEmpty(s, workDir, "cms",
+    val blobs = Ledger.read(s, workDir, "cms",
       "batch_id BIGINT, sketch BINARY")
       .select("sketch").collect()
       .map(r => org.apache.spark.util.sketch.CountMinSketch.readFrom(
@@ -1195,7 +1003,7 @@ object Streams {
       if (blobs.isEmpty)
         org.apache.spark.util.sketch.CountMinSketch.create(CmsEps, 0.99, 42)
       else blobs.reduce { (a, b) => a.mergeInPlace(b); a }
-    val exact = deltasOrEmpty(s, workDir, "liexact",
+    val exact = Ledger.read(s, workDir, "liexact",
       "l_suppkey BIGINT, exact_count BIGINT")
       .groupBy("l_suppkey")
       .agg(sum(col("exact_count")).as("exact_count"))
@@ -1212,7 +1020,7 @@ object Streams {
                terms: Seq[String] = Seq("window", "merge", "scan"),
                topK: Int = 20): DataFrame =
     graft.operators.TextAnalysis.bm25FromPostings(
-      deltasOrEmpty(s, workDir, "postings",
+      Ledger.read(s, workDir, "postings",
         "doc_id BIGINT, token STRING, tf BIGINT"), terms, topK)
 
   /** Second read path over the SAME maintained posting lists: dp25's
@@ -1227,14 +1035,14 @@ object Streams {
     */
   def readDsir(s: org.apache.spark.sql.SparkSession, workDir: String,
                target: String = "src0", topK: Int = 25): DataFrame = {
-    val occurrences = deltasOrEmpty(s, workDir, "postings",
+    val occurrences = Ledger.read(s, workDir, "postings",
         "doc_id BIGINT, token STRING, tf BIGINT")
       .select(col("doc_id"), col("token"),
         explode(sequence(lit(1L), col("tf"))).as("occ"))
       .select(col("doc_id"), xxhash64(col("token")).as("th"))
     graft.operators.DataPrep.dsirFromTokens(
       occurrences.join(
-        deltasOrEmpty(s, workDir, "docs", "doc_id BIGINT, source STRING"),
+        Ledger.read(s, workDir, "docs", "doc_id BIGINT, source STRING"),
         "doc_id"),
       target, topK)
   }
@@ -1251,9 +1059,9 @@ object Streams {
   def readSourceKl(s: org.apache.spark.sql.SparkSession,
                    workDir: String): DataFrame =
     graft.operators.TextAnalysis.sourceKlFromCounts(
-      deltasOrEmpty(s, workDir, "postings",
+      Ledger.read(s, workDir, "postings",
           "doc_id BIGINT, token STRING, tf BIGINT")
-        .join(deltasOrEmpty(s, workDir, "docs",
+        .join(Ledger.read(s, workDir, "docs",
           "doc_id BIGINT, source STRING"), "doc_id")
         .groupBy(col("source"), xxhash64(col("token")).as("th"))
         .agg(sum(col("tf")).as("c")))
@@ -1278,43 +1086,27 @@ object Streams {
   def mgIndexMaintainStream(incoming: DataFrame, workDir: String,
                             checkpointDir: String, k: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        mgMaintainBatch(batch.toDF(), batchId, workDir, k)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      mgMaintainBatch(_, _, workDir, k))
 
   private[graft] def mgMaintainBatch(batchDf: DataFrame, batchId: Long,
                                      workDir: String, k: Int = 64): Unit = {
     val s = batchDf.sparkSession
     import s.implicits._
-    val prior = deltaDirs(workDir, "docs")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchDocs = batchDf.select(col("doc_id"), col("text"))
-      .dropDuplicates("doc_id")
-    val fresh = prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*), Seq("doc_id"), "left_anti")
-    }
-    fresh.select("doc_id")
-      .write.mode("overwrite").parquet(s"$workDir/docs/b$batchId")
+    val fresh = admitOn("doc_id", batchDf.select(col("doc_id"), col("text")),
+      workDir, "docs", batchId)
     val toks = fresh
       .select(explode(graft.functions.Text.tokens(col("text"))).as("t"))
     val summary = toks.as[String]
       .select(new graft.functions.MisraGries.MGAgg(k).toColumn).head()
-    summary.counters.toSeq.map { case (t, c) => (batchId, t, c) }
-      .toDF("batch_id", "token", "cnt")
-      .write.mode("overwrite").parquet(s"$workDir/mgsum/b$batchId")
+    Ledger.publish(summary.counters.toSeq.map { case (t, c) => (batchId, t, c) }
+        .toDF("batch_id", "token", "cnt"),
+      workDir, "mgsum", batchId)
     // batch processed count must survive even when counters are empty
-    Seq(summary.processed).toDF("processed")
-      .write.mode("overwrite").parquet(s"$workDir/mgn/b$batchId")
-    toks.groupBy(col("t").as("token"))
-      .agg(count(lit(1)).as("exact_count"))
-      .write.mode("overwrite").parquet(s"$workDir/mgexact/b$batchId")
-    ()
+    Ledger.publish(Seq(summary.processed).toDF("processed"), workDir, "mgn", batchId)
+    Ledger.publish(toks.groupBy(col("t").as("token"))
+        .agg(count(lit(1)).as("exact_count")),
+      workDir, "mgexact", batchId)
   }
 
   /** Read side: reassemble each batch's summary, merge with the
@@ -1329,9 +1121,9 @@ object Streams {
     val agg = new MGAgg(k)
     // counters collect ≤ k rows per batch — a SUMMARY, the sanctioned
     // driver-side artifact (the cms blob precedent)
-    val counterRows = deltasOrEmpty(s, workDir, "mgsum",
+    val counterRows = Ledger.read(s, workDir, "mgsum",
         "batch_id BIGINT, token STRING, cnt BIGINT").collect()
-    val totalN = deltasOrEmpty(s, workDir, "mgn", "processed BIGINT")
+    val totalN = Ledger.read(s, workDir, "mgn", "processed BIGINT")
       .groupBy().agg(coalesce(sum(col("processed")), lit(0L))).head.getLong(0)
     val merged0 = counterRows
       .groupBy(_.getAs[Long]("batch_id")).values.map { rows =>
@@ -1342,7 +1134,7 @@ object Streams {
     // processed counts enter through the mgn ledger (an empty-counter
     // batch writes no mgsum rows but its n still moves the threshold)
     val merged = MGSummary(merged0.counters, totalN)
-    val exact = deltasOrEmpty(s, workDir, "mgexact",
+    val exact = Ledger.read(s, workDir, "mgexact",
         "token STRING, exact_count BIGINT")
       .groupBy("token").agg(sum(col("exact_count")).as("exact_count"))
     graft.operators.Sketches.mgAuditTail(exact, merged, k)
@@ -1372,76 +1164,27 @@ object Streams {
   def refIntegrityOrdersStream(incoming: DataFrame, workDir: String,
                                checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        refIntegrityOrdersBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      refIntegrityOrdersBatch(_, _, workDir))
 
   def refIntegrityLineitemStream(incoming: DataFrame, workDir: String,
                                  checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        refIntegrityLineitemBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      refIntegrityLineitemBatch(_, _, workDir))
 
   private[graft] def refIntegrityOrdersBatch(batchDf: DataFrame, batchId: Long,
                                              workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "rorders")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchOrders = batchDf.select(col("o_orderkey"), col("o_custkey"))
-      .dropDuplicates("o_orderkey")
-    val fresh = prior match {
-      case Seq() => batchOrders
-      case dirs => batchOrders.join(
-        s.read.parquet(dirs: _*).select("o_orderkey"),
-        Seq("o_orderkey"), "left_anti")
-    }
-    fresh.write.mode("overwrite").parquet(s"$workDir/rorders/b$batchId")
-    ()
+    admitOn("o_orderkey", batchDf.select(col("o_orderkey"), col("o_custkey")),
+      workDir, "rorders", batchId, "o_custkey")
   }
 
   private[graft] def refIntegrityLineitemBatch(batchDf: DataFrame,
                                                batchId: Long,
-                                               workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "rlikeys")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    // the cms1 delivery contract at the order grain: ledger the line
-    // count at admission, surface a grown/shrunk redelivery loudly
-    val incomingCounts = batchDf.groupBy("l_orderkey")
-      .agg(count(lit(1)).as("n_lines"))
-    prior match {
-      case Seq() => ()
-      case dirs =>
-        val bad = incomingCounts
-          .join(s.read.parquet(dirs: _*)
-            .withColumnRenamed("n_lines", "admitted_lines"), "l_orderkey")
-          .filter(col("n_lines") =!= col("admitted_lines"))
-          .head(3)
-        if (bad.nonEmpty) throw new IllegalStateException(
-          "refIntegrity admission contract violated: redelivered order(s) " +
-            "with a different line set than at admission — " +
-            bad.mkString(", "))
-    }
-    val fresh = prior match {
-      case Seq() => batchDf
-      case dirs => batchDf.join(s.read.parquet(dirs: _*),
-        Seq("l_orderkey"), "left_anti")
-    }
-    fresh.groupBy("l_orderkey").agg(count(lit(1)).as("n_lines"))
-      .write.mode("overwrite").parquet(s"$workDir/rlikeys/b$batchId")
-    graft.operators.DataQuality.lineitemKeyCounts(fresh)
-      .write.mode("overwrite").parquet(s"$workDir/rlicounts/b$batchId")
-    ()
-  }
+                                               workDir: String): Unit =
+    Ledger.publish(graft.operators.DataQuality.lineitemKeyCounts(
+        admitOrders(batchDf, workDir, "rlikeys", batchId, "refIntegrity")),
+      workDir, "rlicounts", batchId)
 
   /** Read side: sum the additive per-key count deltas, union the
     * disjoint admitted-orders deltas, then the batch audit's own
@@ -1451,10 +1194,10 @@ object Streams {
     */
   def readRefIntegrity(s: org.apache.spark.sql.SparkSession,
                        workDir: String, d: String): DataFrame = {
-    val liCounts = deltasOrEmpty(s, workDir, "rlicounts",
+    val liCounts = Ledger.read(s, workDir, "rlicounts",
         "kind STRING, k BIGINT, n BIGINT")
       .groupBy("kind", "k").agg(sum(col("n")).as("n"))
-    val orders = deltasOrEmpty(s, workDir, "rorders",
+    val orders = Ledger.read(s, workDir, "rorders",
       "o_orderkey BIGINT, o_custkey BIGINT")
     graft.operators.DataQuality.refIntegrityFromCounts(s, d, liCounts, orders)
   }
@@ -1480,38 +1223,22 @@ object Streams {
                                checkpointDir: String,
                                threshold: Double = 0.5)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        componentsMaintainBatch(batch.toDF(), batchId, workDir, threshold)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      componentsMaintainBatch(_, _, workDir, threshold))
 
   private[graft] def componentsMaintainBatch(batchDf: DataFrame, batchId: Long,
                                              workDir: String,
                                              threshold: Double = 0.5): Unit = {
     val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "docs")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchDocs = batchDf.select(col("doc_id"), col("text"))
-      .dropDuplicates("doc_id")
-    val fresh = prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*), Seq("doc_id"), "left_anti")
-    }
-    fresh.select("doc_id")
-      .write.mode("overwrite").parquet(s"$workDir/docs/b$batchId")
-    graft.operators.Dedup.gramRowsOf(fresh, 3)
-      .write.mode("overwrite").parquet(s"$workDir/grams/b$batchId")
+    val fresh = admitOn("doc_id", batchDf.select(col("doc_id"), col("text")),
+      workDir, "docs", batchId)
+    val freshGrams = graft.operators.Dedup.gramRowsOf(fresh, 3)
+    val batchGrams = s.read.parquet(Ledger.publish(freshGrams, workDir, "grams", batchId))
     // the gram union INCLUDES this batch's just-written delta, so
     // fresh × fresh pairs are found in their admission batch
-    val allGrams = s.read.parquet(deltaDirs(workDir, "grams"): _*)
-    graft.operators.Dedup.pairsTouching(allGrams,
-        s.read.parquet(s"$workDir/grams/b$batchId"), threshold)
-      .write.mode("overwrite").parquet(s"$workDir/pairs/b$batchId")
-    ()
+    val allGrams = Ledger.read(s, workDir, "grams", freshGrams.schema.toDDL)
+    Ledger.publish(graft.operators.Dedup.pairsTouching(allGrams, batchGrams, threshold),
+      workDir, "pairs", batchId)
   }
 
   /** Read side: the batch operator's own min-label fixpoint over the
@@ -1522,8 +1249,8 @@ object Streams {
   def readComponents(s: org.apache.spark.sql.SparkSession,
                      workDir: String): DataFrame =
     graft.operators.Dedup.componentsFromPairs(
-      deltasOrEmpty(s, workDir, "docs", "doc_id BIGINT"),
-      deltasOrEmpty(s, workDir, "pairs", "doc_a BIGINT, doc_b BIGINT"))
+      Ledger.read(s, workDir, "docs", "doc_id BIGINT"),
+      Ledger.read(s, workDir, "pairs", "doc_a BIGINT, doc_b BIGINT"))
 
   /** Streaming maintenance of dq4's PSI drift state — the
     * serving-side drift monitor: what the audit needs from history is
@@ -1531,8 +1258,7 @@ object Streams {
     * so each batch publishes only its own admitted orders' counts and
     * the read side sums the disjoint deltas. Admission dedups on
     * o_orderkey (an order is atomic — it contributes to both features
-    * exactly once), against prior deltas excluding this batch's own
-    * (checkpoint-replay rule). Bucketing is
+    * exactly once). Bucketing is
     * [[graft.operators.DataQuality.psiFeatureRows]] — the batch
     * audit's own definition — so stream and batch can never bucket
     * differently; the report tail is shared too.
@@ -1540,40 +1266,20 @@ object Streams {
   def psiIndexMaintainStream(incoming: DataFrame, workDir: String,
                              checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        psiMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      psiMaintainBatch(_, _, workDir))
 
   private[graft] def psiMaintainBatch(batchDf: DataFrame, batchId: Long,
                                       workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "orders")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchOrders = batchDf
-      .select("o_orderkey", "o_orderdate", "o_totalprice",
-        "o_orderpriority")
-      .dropDuplicates("o_orderkey")
-    val fresh = prior match {
-      case Seq() => batchOrders
-      case dirs => batchOrders.join(
-        s.read.parquet(dirs: _*).select("o_orderkey"),
-        Seq("o_orderkey"), "left_anti")
-    }
-    // both directories per batch: the admission key set AND the
-    // count delta derived from exactly the admitted rows
-    fresh.select("o_orderkey")
-      .write.mode("overwrite").parquet(s"$workDir/orders/b$batchId")
-    graft.operators.DataQuality.psiFeatureRows(fresh)
-      .groupBy("feature", "bucket")
-      .agg(sum(col("in_a")).as("na"),
-        sum(lit(1L) - col("in_a")).as("nb"))
-      .write.mode("overwrite").parquet(s"$workDir/counts/b$batchId")
-    ()
+    val fresh = admitOn("o_orderkey", batchDf.select("o_orderkey",
+      "o_orderdate", "o_totalprice", "o_orderpriority"), workDir, "orders", batchId)
+    Ledger.publish(graft.operators.DataQuality.psiFeatureRows(fresh)
+        .groupBy("feature", "bucket")
+        .agg(sum(col("in_a")).as("na"),
+          sum(lit(1L) - col("in_a")).as("nb")),
+      workDir, "counts", batchId)
   }
+
 
   /** Read side: sum the additive count deltas, then the shared PSI
     * report tail — stream-maintained drift equals the batch
@@ -1582,7 +1288,8 @@ object Streams {
   def readPsiDrift(s: org.apache.spark.sql.SparkSession,
                    workDir: String): DataFrame =
     graft.operators.DataQuality.psiFromCounts(
-      s.read.parquet(deltaDirs(workDir, "counts"): _*)
+      Ledger.read(s, workDir, "counts",
+          "feature STRING, bucket STRING, na BIGINT, nb BIGINT")
         .groupBy("feature", "bucket")
         .agg(sum(col("na")).as("na"), sum(col("nb")).as("nb")))
 
@@ -1591,48 +1298,29 @@ object Streams {
     * only ever needs the per-bucket (count, content-hash sum) digests,
     * which are ADDITIVE over documents, so each batch publishes the
     * digest delta of its newly-admitted docs and the read side sums
-    * the disjoint deltas. Admission dedups on doc_id against prior
-    * deltas excluding this batch's own (checkpoint-replay rule).
-    * Digesting is [[graft.operators.DataQuality.bucketDigestRows]] —
+    * the disjoint deltas. Admission dedups on doc_id. Digesting is
+    * [[graft.operators.DataQuality.bucketDigestRows]] —
     * the batch audit's own definition — and the diff tail is shared
     * too, so stream and batch can never disagree on what changed.
     */
   def bucketDigestMaintainStream(incoming: DataFrame, workDir: String,
                                  checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        bucketDigestMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      bucketDigestMaintainBatch(_, _, workDir))
 
   private[graft] def bucketDigestMaintainBatch(batchDf: DataFrame,
                                                batchId: Long,
                                                workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "docs")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchDocs = batchDf.select("doc_id", "text")
-      .dropDuplicates("doc_id")
-    val fresh = prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*), Seq("doc_id"), "left_anti")
-    }
-    // both directories per batch: the admission key set AND the digest
-    // delta derived from exactly the admitted rows
-    fresh.select("doc_id")
-      .write.mode("overwrite").parquet(s"$workDir/docs/b$batchId")
-    graft.operators.DataQuality.bucketDigestRows(fresh)
-      .groupBy("bucket")
-      .agg(count(lit(1)).cast("long").as("n_a"),
-        sum(col("ha")).as("hsum_a"),
-        count(lit(1)).cast("long").as("n_b"),
-        sum(col("hb")).as("hsum_b"))
-      .write.mode("overwrite").parquet(s"$workDir/digests/b$batchId")
-    ()
+    val fresh = admitOn("doc_id", batchDf.select("doc_id", "text"),
+      workDir, "docs", batchId)
+    Ledger.publish(graft.operators.DataQuality.bucketDigestRows(fresh)
+        .groupBy("bucket")
+        .agg(count(lit(1)).cast("long").as("n_a"),
+          sum(col("ha")).as("hsum_a"),
+          count(lit(1)).cast("long").as("n_b"),
+          sum(col("hb")).as("hsum_b")),
+      workDir, "digests", batchId)
   }
 
   /** Read side: sum the additive digest deltas, then the shared diff
@@ -1642,7 +1330,8 @@ object Streams {
   def readBucketDiff(s: org.apache.spark.sql.SparkSession,
                      workDir: String): DataFrame =
     graft.operators.DataQuality.bucketDiffFromCounts(
-      s.read.parquet(deltaDirs(workDir, "digests"): _*)
+      Ledger.read(s, workDir, "digests",
+          "bucket BIGINT, n_a BIGINT, hsum_a BIGINT, n_b BIGINT, hsum_b BIGINT")
         .groupBy("bucket")
         .agg(sum(col("n_a")).as("n_a"), sum(col("hsum_a")).as("hsum_a"),
           sum(col("n_b")).as("n_b"), sum(col("hsum_b")).as("hsum_b")))
@@ -1656,44 +1345,29 @@ object Streams {
     * tx25-spectrum move, applied to distinct-cardinality instead of
     * token counts. The derivation tail
     * ([[graft.operators.DataQuality.profileFromStats]]) is shared
-    * with the batch gate. Admission dedups on event_id against prior
-    * deltas excluding this batch's own.
+    * with the batch gate. Admission dedups on event_id.
     */
   def profileIndexMaintainStream(incoming: DataFrame, workDir: String,
                                  checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        profileMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      profileMaintainBatch(_, _, workDir))
 
   private[graft] def profileMaintainBatch(batchDf: DataFrame, batchId: Long,
                                           workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "pevents")
-      .filterNot(_.endsWith(s"/b$batchId"))
     val batchEvents = batchDf
       .select("event_id", "ts", "event_type", "props", "user_id", "value")
       .dropDuplicates("event_id")
-    val fresh = prior match {
-      case Seq() => batchEvents
-      case dirs => batchEvents.join(
-        s.read.parquet(dirs: _*), Seq("event_id"), "left_anti")
-    }
     // a multi-output batch: admission keys, additive counts, and the
     // distinct-value key delta all derive from the SAME admitted set,
     // so localCheckpoint once instead of recomputing the anti-join
-    val admitted = fresh.localCheckpoint(true)
-    admitted.select("event_id")
-      .write.mode("overwrite").parquet(s"$workDir/pevents/b$batchId")
-    graft.operators.DataQuality.profileCountRows(admitted)
-      .write.mode("overwrite").parquet(s"$workDir/pcounts/b$batchId")
-    graft.operators.DataQuality.profileValueKeys(admitted)
-      .write.mode("overwrite").parquet(s"$workDir/pvalues/b$batchId")
-    ()
+    val admitted = Ledger.admit(batchEvents, workDir, "pevents", batchId,
+      Seq("event_id")).localCheckpoint(true)
+    Ledger.publish(admitted.select("event_id"), workDir, "pevents", batchId)
+    Ledger.publish(graft.operators.DataQuality.profileCountRows(admitted),
+      workDir, "pcounts", batchId)
+    Ledger.publish(graft.operators.DataQuality.profileValueKeys(admitted),
+      workDir, "pvalues", batchId)
   }
 
   /** Read side: sum the additive count deltas, dedup the value-key
@@ -1703,11 +1377,13 @@ object Streams {
     */
   def readProfileDrift(s: org.apache.spark.sql.SparkSession,
                        workDir: String): DataFrame = {
-    val counts = s.read.parquet(deltaDirs(workDir, "pcounts"): _*)
+    val counts = Ledger.read(s, workDir, "pcounts", "col_name STRING, " +
+        "n_a BIGINT, n_null_a BIGINT, n_b BIGINT, n_null_b BIGINT")
       .groupBy("col_name")
       .agg(sum(col("n_a")).as("n_a"), sum(col("n_null_a")).as("n_null_a"),
         sum(col("n_b")).as("n_b"), sum(col("n_null_b")).as("n_null_b"))
-    val distincts = s.read.parquet(deltaDirs(workDir, "pvalues"): _*)
+    val distincts = Ledger.read(s, workDir, "pvalues",
+        "col_name STRING, half STRING, vh BIGINT")
       .dropDuplicates("col_name", "half", "vh")
       .groupBy("col_name")
       .agg(
@@ -1733,48 +1409,25 @@ object Streams {
     * from the merged state through their batch tails
     * (mannKendallFromMonthly / runsTestFromMonthly), so the monitor
     * can never disagree with the a50/a51 readouts. Admission dedups on
-    * o_orderkey against prior deltas excluding this batch's own (the
-    * checkpoint-replay rule shared by every sum-based twin).
+    * o_orderkey.
     */
   def trendIndexMaintainStream(incoming: DataFrame, workDir: String,
                                checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        trendMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      trendMaintainBatch(_, _, workDir))
 
   private[graft] def trendMaintainBatch(batchDf: DataFrame, batchId: Long,
                                         workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "orders")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchOrders = batchDf
-      .select("o_orderkey", "o_orderdate", "o_totalprice")
-      .dropDuplicates("o_orderkey")
-    val fresh = prior match {
-      case Seq() => batchOrders
-      case dirs => batchOrders.join(
-        s.read.parquet(dirs: _*).select("o_orderkey"),
-        Seq("o_orderkey"), "left_anti")
-    }
-    fresh.select("o_orderkey")
-      .write.mode("overwrite").parquet(s"$workDir/orders/b$batchId")
-    graft.operators.Analytics.monthlyRevenueState(fresh)
-      .write.mode("overwrite").parquet(s"$workDir/monthly/b$batchId")
-    ()
+    val fresh = admitOn("o_orderkey", batchDf.select("o_orderkey",
+      "o_orderdate", "o_totalprice"), workDir, "orders", batchId)
+    Ledger.publish(graft.operators.Analytics.monthlyRevenueState(fresh),
+      workDir, "monthly", batchId)
   }
 
   private def mergedMonthly(s: org.apache.spark.sql.SparkSession,
                             workDir: String): DataFrame =
-    // deltasOrEmpty, not read.parquet: a monitor attached before the
-    // first batch commits must answer with an empty series, not crash
-    // on a zero-path read (the same never-crash contract the mg/fk
-    // read sides honor).
-    deltasOrEmpty(s, workDir, "monthly", "x BIGINT, c BIGINT")
+    Ledger.read(s, workDir, "monthly", "x BIGINT, c BIGINT")
       .groupBy("x").agg(sum(col("c")).as("c"))
 
   /** Read side #1: the live Mann–Kendall monitor off the merged state. */
@@ -1808,21 +1461,14 @@ object Streams {
     * run deltas are disjoint by construction: each run's later member
     * pins its batch). The read side is a plain union + re-sort — the
     * accumulated deltas ARE batch `dd26_exact_substring`. Admission is
-    * doc_id-keyed against prior deltas excluding this batch's own
-    * (first version wins; a same-batch-id replay recomputes against
-    * the same prior view and overwrites its own delta, invariant).
+    * doc_id-keyed (first version wins).
     */
   def substringIndexMaintainStream(incoming: DataFrame, workDir: String,
                                    checkpointDir: String,
                                    anchor: Int = 8, minRun: Int = 13)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        substringMaintainBatch(batch.toDF(), batchId, workDir, anchor, minRun)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      substringMaintainBatch(_, _, workDir, anchor, minRun))
 
   private[graft] def substringMaintainBatch(batchDf: DataFrame, batchId: Long,
                                             workDir: String,
@@ -1830,25 +1476,13 @@ object Streams {
                                             minRun: Int = 13): Unit = {
     import graft.operators.Dedup
     val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "ssdocs")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchDocs = batchDf.select("doc_id", "text")
-      .dropDuplicates("doc_id")
-    val fresh = (prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*).select("doc_id"), Seq("doc_id"), "left_anti")
-    }).localCheckpoint(true)
-    fresh.write.mode("overwrite").parquet(s"$workDir/ssdocs/b$batchId")
+    val priorDocs = Ledger.prior(s, workDir, "ssdocs", batchId)
+    val fresh = Ledger.admit(batchDf.select("doc_id", "text").dropDuplicates("doc_id"),
+      workDir, "ssdocs", batchId, Seq("doc_id")).localCheckpoint(true)
+    Ledger.publish(fresh, workDir, "ssdocs", batchId)
     val freshAnchors = Dedup.anchorRowsOf(fresh, anchor).localCheckpoint(true)
-    freshAnchors.write.mode("overwrite")
-      .parquet(s"$workDir/ssanchors/b$batchId")
-    val priorAnchors = prior match {
-      case Seq() => None
-      case _ => Some(s.read.parquet(
-        deltaDirs(workDir, "ssanchors")
-          .filterNot(_.endsWith(s"/b$batchId")): _*))
-    }
+    Ledger.publish(freshAnchors, workDir, "ssanchors", batchId)
+    val priorAnchors = Ledger.prior(s, workDir, "ssanchors", batchId)
     // strict fan-out guard on the index side of the probe join (the
     // dd26 discipline, ADVICE r11): anchor DF here is over docs
     // ADMITTED SO FAR — a gram can cross the cap in a later batch, and
@@ -1857,19 +1491,15 @@ object Streams {
     val allAnchors = Dedup.capAnchorFreq(
       priorAnchors.map(_.unionByName(freshAnchors)).getOrElse(freshAnchors),
       Dedup.DefaultMaxGramDocFreq, "substring-maintain")
-    val allDocs = prior match {
-      case Seq() => fresh
-      case dirs => s.read.parquet(dirs: _*).unionByName(fresh)
-    }
+    val allDocs = priorDocs.fold(fresh)(_.unionByName(fresh))
     val stride = minRun - anchor + 1
     val probe = freshAnchors.filter(((col("pos") - 1) % stride) === 0)
     val cand = probe.as("p").join(allAnchors.as("x"),
         col("p.gh") === col("x.gh") && col("p.doc_id") =!= col("x.doc_id"))
       .select(col("p.doc_id").as("da"), col("p.pos").as("pa"),
         col("x.doc_id").as("db"), col("x.pos").as("pb"))
-    Dedup.extendToMaximalRuns(cand, allDocs, anchor, minRun)
-      .write.mode("overwrite").parquet(s"$workDir/ssruns/b$batchId")
-    ()
+    Ledger.publish(Dedup.extendToMaximalRuns(cand, allDocs, anchor, minRun),
+      workDir, "ssruns", batchId)
   }
 
   /** Read side: the union of the run deltas, deduped and re-sorted —
@@ -1888,7 +1518,7 @@ object Streams {
     // convention); a run's maximality does not depend on the
     // threshold, so each reader's >= filter recovers exactly its own
     // relation — one state, three monitors (runs, scrub, decontam)
-    deltasOrEmpty(s, workDir, "ssruns",
+    Ledger.read(s, workDir, "ssruns",
         "doc_a BIGINT, doc_b BIGINT, start_a BIGINT, start_b BIGINT, " +
           "run_len BIGINT")
       .filter(col("run_len") >= minRun)
@@ -1931,7 +1561,7 @@ object Streams {
   def readSubstringScrub(s: org.apache.spark.sql.SparkSession,
                          workDir: String): DataFrame =
     graft.operators.Dedup.exactSubstringScrubOf(
-      deltasOrEmpty(s, workDir, "ssdocs", "doc_id BIGINT, text STRING"),
+      Ledger.read(s, workDir, "ssdocs", "doc_id BIGINT, text STRING"),
       readSubstringRuns(s, workDir))
 
   /** Nightly compaction for the substring stream's grow-forever delta
@@ -1944,12 +1574,9 @@ object Streams {
     * delta: READ, never recomputed; deduped by the ledger's key so
     * replay-republished rows collapse once at fold time instead of at
     * every read; re-clustered on the ledger's probe key (anchors on
-    * gh for the maintain join, runs on doc_a for the monitors). The
-    * fold publishes under a fresh `bfold<n>` name ([[deltaDirs]]
-    * serves any b-prefixed dir, and a numeric batch id can never
-    * collide with it) BEFORE the inputs are deleted, so a crash
-    * between the two steps leaves a state whose union is unchanged —
-    * at worst with duplicates the RETAINED read-side dedup removes.
+    * gh for the maintain join, runs on doc_a for the monitors)
+    * ([[Ledger.compact]]). A crash mid-fold leaves at worst duplicates
+    * the RETAINED read-side dedup removes.
     * Correctness never requires compaction; a batch replayed AFTER
     * its delta was folded re-publishes rows the fold already holds
     * (same read-side dedup), and its admission view still sees the
@@ -1957,34 +1584,10 @@ object Streams {
     */
   def compactSubstringState(s: org.apache.spark.sql.SparkSession,
                             workDir: String): Unit = {
-    compactDeltaLedger(s, workDir, "ssdocs", Seq("doc_id"), Seq("doc_id"))
-    compactDeltaLedger(s, workDir, "ssanchors",
-      Seq("doc_id", "pos"), Seq("gh"))
-    compactDeltaLedger(s, workDir, "ssruns",
+    Ledger.compact(s, workDir, "ssdocs", Seq("doc_id"), Seq("doc_id"))
+    Ledger.compact(s, workDir, "ssanchors", Seq("doc_id", "pos"), Seq("gh"))
+    Ledger.compact(s, workDir, "ssruns",
       Seq("doc_a", "doc_b", "start_a", "start_b"), Seq("doc_a"))
-  }
-
-  private def compactDeltaLedger(s: org.apache.spark.sql.SparkSession,
-                                 workDir: String, kind: String,
-                                 keys: Seq[String],
-                                 cluster: Seq[String]): Unit = {
-    val dirs = deltaDirs(workDir, kind)
-    if (dirs.size < 2) return // nothing to fold
-    val next = dirs.map(new java.io.File(_).getName)
-      .collect { case n if n.startsWith("bfold") => n.drop(5).toLong }
-      .maxOption.getOrElse(-1L) + 1
-    s.read.parquet(dirs: _*)
-      .dropDuplicates(keys)
-      .repartitionByRange(cluster.map(col): _*)
-      .sortWithinPartitions(cluster.map(col): _*)
-      .write.mode("overwrite").parquet(s"$workDir/$kind/bfold$next")
-    dirs.foreach(p => deleteDirTree(new java.io.File(p)))
-  }
-
-  private def deleteDirTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteDirTree)
-    f.delete(); ()
   }
 
   /** Streaming maintenance of sp9's priority-sampling state — the
@@ -2000,50 +1603,34 @@ object Streams {
     * serves τ and the Duffield–Lund–Thorup estimator through the batch
     * query's own tail ([[graft.operators.Sampling
     * .priorityEstimateFromRanked]]), so stream and batch can never
-    * disagree. Admission is doc_id-keyed against prior deltas
-    * excluding this batch's own (the checkpoint-replay rule shared by
-    * every sum-based twin — totals are additive, not idempotent).
+    * disagree. Admission is doc_id-keyed (totals are additive, not
+    * idempotent).
     */
   def priorityIndexMaintainStream(incoming: DataFrame, workDir: String,
                                   checkpointDir: String, k: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        priorityMaintainBatch(batch.toDF(), batchId, workDir, k)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      priorityMaintainBatch(_, _, workDir, k))
 
   private[graft] def priorityMaintainBatch(batchDf: DataFrame, batchId: Long,
                                            workDir: String,
                                            k: Int = 16): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "spdocs")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchDocs = batchDf.select("doc_id", "source", "n_chars")
-      .dropDuplicates("doc_id")
-    val fresh = prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*), Seq("doc_id"), "left_anti")
-    }
     // admission keys, the bounded top-(k+1) summary, and the additive
     // totals all derive from the SAME admitted set — checkpoint once
-    val admitted = fresh.localCheckpoint(true)
-    admitted.select("doc_id")
-      .write.mode("overwrite").parquet(s"$workDir/spdocs/b$batchId")
-    graft.operators.Sampling.priorityProjection(admitted)
-      .withColumn("rnk", row_number()
-        .over(graft.operators.Sampling.priorityRankWindow))
-      .filter(col("rnk") <= k + 1)
-      .select("source", "doc_id", "q", "w")
-      .write.mode("overwrite").parquet(s"$workDir/sptop/b$batchId")
-    admitted.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).cast("long").as("sum_chars"))
-      .write.mode("overwrite").parquet(s"$workDir/sptot/b$batchId")
-    ()
+    val admitted = Ledger.admit(
+      batchDf.select("doc_id", "source", "n_chars").dropDuplicates("doc_id"),
+      workDir, "spdocs", batchId, Seq("doc_id")).localCheckpoint(true)
+    Ledger.publish(admitted.select("doc_id"), workDir, "spdocs", batchId)
+    Ledger.publish(graft.operators.Sampling.priorityProjection(admitted)
+        .withColumn("rnk", row_number()
+          .over(graft.operators.Sampling.priorityRankWindow))
+        .filter(col("rnk") <= k + 1)
+        .select("source", "doc_id", "q", "w"),
+      workDir, "sptop", batchId)
+    Ledger.publish(admitted.groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).cast("long").as("sum_chars")),
+      workDir, "sptot", batchId)
   }
 
   /** Read side: re-rank the merged per-batch top-(k+1) summaries (the
@@ -2054,11 +1641,11 @@ object Streams {
     */
   def readPriorityEstimate(s: org.apache.spark.sql.SparkSession,
                            workDir: String, k: Int = 16): DataFrame = {
-    val ranked = deltasOrEmpty(s, workDir, "sptop",
+    val ranked = Ledger.read(s, workDir, "sptop",
         "source STRING, doc_id BIGINT, q DOUBLE, w DOUBLE")
       .withColumn("rnk", row_number()
         .over(graft.operators.Sampling.priorityRankWindow))
-    val totals = deltasOrEmpty(s, workDir, "sptot",
+    val totals = Ledger.read(s, workDir, "sptot",
         "source STRING, n_docs BIGINT, sum_chars BIGINT")
       .groupBy("source")
       .agg(sum(col("n_docs")).as("n_docs"),
@@ -2071,9 +1658,8 @@ object Streams {
     * hash debris arriving). Per-token first-occurrence doc ids are
     * additive-by-MIN and the document-id set is union-mergeable —
     * both IDEMPOTENT, so like the Kaplan–Meier twin this needs no
-    * admission ledger: a redelivered document re-asserts bounds and
-    * ids the merge already holds, and a checkpoint replay overwrites
-    * its own delta. Each batch publishes its own per-token
+    * admission: a redelivered document re-asserts bounds and ids the
+    * merge already holds. Each batch publishes its own per-token
     * ([[graft.operators.TextAnalysis.tokenFirstDocState]]) and doc-id
     * deltas; the read side merges by min / distinct and applies the
     * batch query's own curve tail.
@@ -2081,23 +1667,16 @@ object Streams {
   def heapsIndexMaintainStream(incoming: DataFrame, workDir: String,
                                checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        heapsMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      heapsMaintainBatch(_, _, workDir))
 
   private[graft] def heapsMaintainBatch(batchDf: DataFrame, batchId: Long,
                                         workDir: String): Unit = {
     val batch = batchDf.select(col("doc_id"), col("text"))
       .dropDuplicates("doc_id")
-    batch.select("doc_id")
-      .write.mode("overwrite").parquet(s"$workDir/docs/b$batchId")
-    graft.operators.TextAnalysis.tokenFirstDocState(batch)
-      .write.mode("overwrite").parquet(s"$workDir/vocab/b$batchId")
-    ()
+    Ledger.publish(batch.select("doc_id"), workDir, "docs", batchId)
+    Ledger.publish(graft.operators.TextAnalysis.tokenFirstDocState(batch),
+      workDir, "vocab", batchId)
   }
 
   /** Read side: merge the idempotent per-token minima and the doc-id
@@ -2108,9 +1687,9 @@ object Streams {
   def readHeapsCurve(s: org.apache.spark.sql.SparkSession,
                      workDir: String, steps: Int = 10): DataFrame =
     graft.operators.TextAnalysis.heapsFromState(
-      s.read.parquet(deltaDirs(workDir, "vocab"): _*)
+      Ledger.read(s, workDir, "vocab", "h BIGINT, fd BIGINT")
         .groupBy("h").agg(min(col("fd")).as("fd")),
-      s.read.parquet(deltaDirs(workDir, "docs"): _*)
+      Ledger.read(s, workDir, "docs", "doc_id BIGINT")
         .select("doc_id").distinct(),
       steps)
 
@@ -2119,9 +1698,8 @@ object Streams {
     * from history is per-user (first-activity, first-conversion,
     * last-activity), which is additive-by-MIN/MAX — and min/max are
     * IDEMPOTENT, so unlike the sum-based twins this one needs no
-    * admission ledger at all: a redelivered event can only re-assert
-    * bounds the merge already holds, and a checkpoint replay
-    * overwrites its own delta with identical bytes. Each batch
+    * admission at all: a redelivered event can only re-assert bounds
+    * the merge already holds. Each batch
     * publishes its own per-user partial
     * ([[graft.operators.DataPrep.kmUserState]] — the batch query's own
     * state definition); the read side merges by (min, min, max) and
@@ -2134,19 +1712,13 @@ object Streams {
   def kmIndexMaintainStream(incoming: DataFrame, workDir: String,
                             checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        kmMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      kmMaintainBatch(_, _, workDir))
 
   private[graft] def kmMaintainBatch(batchDf: DataFrame, batchId: Long,
                                      workDir: String): Unit = {
-    graft.operators.DataPrep.kmUserState(batchDf)
-      .write.mode("overwrite").parquet(s"$workDir/kmuser/b$batchId")
-    ()
+    Ledger.publish(graft.operators.DataPrep.kmUserState(batchDf),
+      workDir, "kmuser", batchId)
   }
 
   /** Read side: merge the idempotent per-user bounds, then the shared
@@ -2156,7 +1728,8 @@ object Streams {
   def readKaplanMeier(s: org.apache.spark.sql.SparkSession,
                       workDir: String): DataFrame =
     graft.operators.DataPrep.kaplanMeierFromPerUser(
-      s.read.parquet(deltaDirs(workDir, "kmuser"): _*)
+      Ledger.read(s, workDir, "kmuser",
+          "user_id BIGINT, fd DATE, cv DATE, md DATE")
         .groupBy("user_id")
         .agg(min(col("fd")).as("fd"), min(col("cv")).as("cv"),
           max(col("md")).as("md")))
@@ -2171,38 +1744,20 @@ object Streams {
     * the batch estimator's own tail
     * ([[graft.operators.Analytics.cupedFromPerUser]]), so the monitor
     * and the a48 readout can never disagree on the estimator.
-    * Admission dedups on event_id against prior deltas excluding this
-    * batch's own (the checkpoint-replay rule shared by every twin
-    * here).
+    * Admission dedups on event_id.
     */
   def cupedIndexMaintainStream(incoming: DataFrame, workDir: String,
                                checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cupedMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      cupedMaintainBatch(_, _, workDir))
 
   private[graft] def cupedMaintainBatch(batchDf: DataFrame, batchId: Long,
                                         workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "events")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchEvents = batchDf.select("event_id", "user_id", "ts", "value")
-      .dropDuplicates("event_id")
-    val fresh = prior match {
-      case Seq() => batchEvents
-      case dirs => batchEvents.join(
-        s.read.parquet(dirs: _*), Seq("event_id"), "left_anti")
-    }
-    fresh.select("event_id")
-      .write.mode("overwrite").parquet(s"$workDir/events/b$batchId")
-    graft.operators.Analytics.cupedPerUserRows(fresh)
-      .write.mode("overwrite").parquet(s"$workDir/sums/b$batchId")
-    ()
+    val fresh = admitOn("event_id", batchDf.select("event_id", "user_id", "ts",
+      "value"), workDir, "events", batchId)
+    Ledger.publish(graft.operators.Analytics.cupedPerUserRows(fresh),
+      workDir, "sums", batchId)
   }
 
   /** Read side: merge the additive per-user deltas, then the shared
@@ -2212,7 +1767,7 @@ object Streams {
   def readCupedAbTest(s: org.apache.spark.sql.SparkSession,
                       workDir: String): DataFrame =
     graft.operators.Analytics.cupedFromPerUser(
-      s.read.parquet(deltaDirs(workDir, "sums"): _*)
+      Ledger.read(s, workDir, "sums", "user_id BIGINT, x DOUBLE, y DOUBLE")
         .groupBy("user_id")
         .agg(sum(col("x")).as("x"), sum(col("y")).as("y")))
 
@@ -2227,39 +1782,22 @@ object Streams {
     * query's own statistics tail
     * ([[graft.operators.TextAnalysis.diversityFromSpectrum]]), so
     * stream and batch can never disagree on the formulas. Admission
-    * dedups on doc_id against prior deltas excluding this batch's own
-    * (the checkpoint-replay rule shared by every twin here).
+    * dedups on doc_id.
     */
   def spectrumMaintainStream(incoming: DataFrame, workDir: String,
                              checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        spectrumMaintainBatch(batch.toDF(), batchId, workDir)
-      }
-      .start()
+    Ledger.maintain(incoming, checkpointDir)(
+      spectrumMaintainBatch(_, _, workDir))
 
   private[graft] def spectrumMaintainBatch(batchDf: DataFrame,
                                            batchId: Long,
                                            workDir: String): Unit = {
-    val s = batchDf.sparkSession
-    val prior = deltaDirs(workDir, "sdocs")
-      .filterNot(_.endsWith(s"/b$batchId"))
-    val batchDocs = batchDf.select("doc_id", "source", "text")
-      .dropDuplicates("doc_id")
-    val fresh = prior match {
-      case Seq() => batchDocs
-      case dirs => batchDocs.join(
-        s.read.parquet(dirs: _*), Seq("doc_id"), "left_anti")
-    }
-    fresh.select("doc_id")
-      .write.mode("overwrite").parquet(s"$workDir/sdocs/b$batchId")
-    graft.operators.TextAnalysis.tokenSpectrum(
-        fresh.select("source", "text"))
-      .write.mode("overwrite").parquet(s"$workDir/spectrum/b$batchId")
-    ()
+    val fresh = admitOn("doc_id", batchDf.select("doc_id", "source", "text"),
+      workDir, "sdocs", batchId)
+    Ledger.publish(graft.operators.TextAnalysis.tokenSpectrum(
+        fresh.select("source", "text")),
+      workDir, "spectrum", batchId)
   }
 
   /** Read side: sum the disjoint spectrum deltas into the merged
@@ -2271,7 +1809,7 @@ object Streams {
   def readLexicalDiversity(s: org.apache.spark.sql.SparkSession,
                            workDir: String): DataFrame =
     graft.operators.TextAnalysis.diversityFromSpectrum(
-      s.read.parquet(deltaDirs(workDir, "spectrum"): _*)
+      Ledger.read(s, workDir, "spectrum", "source STRING, t STRING, n BIGINT")
         .groupBy("source", "t")
         .agg(sum(col("n")).as("n")))
 
@@ -2285,7 +1823,7 @@ object Streams {
   def readSpanScrub(s: org.apache.spark.sql.SparkSession,
                     workDir: String, corpusDir: String,
                     k: Int = 8, minDocs: Long = 3L): DataFrame = {
-    val banned = s.read.parquet(deltaDirs(workDir, "chunks"): _*)
+    val banned = Ledger.read(s, workDir, "chunks", "doc_id BIGINT, gh BIGINT")
       .groupBy("gh").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
       .select("gh")

@@ -1609,6 +1609,66 @@ class StreamingSpec extends SparkTestBase {
     assert(sp9.columns.toSeq ==
       Seq("source", "n_docs", "m_sampled", "exact_chars", "est_chars"))
     assert(sp9.count() == 0, "priority estimate over no sources is empty")
+    // the remaining read sides, each against its batch twin's columns
+    import graft.operators.{Analytics, DataPrep, DataQuality, TextAnalysis, Windows}
+    Seq(
+      "support" -> (Streams.readSupportIndex(spark, root),
+        graft.operators.Graph.copurchaseSupport(spark, sf)),
+      "session paths" -> (Streams.readSessionPaths(spark, root),
+        DataPrep.sessionPaths(spark, sf)),
+      "daily anomalies" -> (Streams.readDailyAnomalies(spark, root),
+        Windows.rollingAnomaly(spark, sf)),
+      "retention" -> (Streams.readRetention(spark, root),
+        Analytics.dayRetention(spark, sf)),
+      "rolling WAU" -> (Streams.readRollingWau(spark, root),
+        Analytics.rollingWau(spark, sf)),
+      "edge index" -> (Streams.readEdgeIndex(spark, root),
+        graft.sources.GraphIndex.tradeWeightedEdges(spark, sf)),
+      "repeated grams" -> (Streams.readRepeatedGrams(spark, root),
+        graft.sources.TextIndex.repeatedGramIndex(spark, sf, 8)),
+      "PSI drift" -> (Streams.readPsiDrift(spark, root),
+        DataQuality.psiDrift(spark, sf)),
+      "bucket diff" -> (Streams.readBucketDiff(spark, root),
+        DataQuality.bucketDiff(spark, sf)),
+      "profile drift" -> (Streams.readProfileDrift(spark, root),
+        DataQuality.profileDrift(spark, sf)),
+      "Heaps curve" -> (Streams.readHeapsCurve(spark, root),
+        TextAnalysis.heapsCurve(spark, sf)),
+      "Kaplan-Meier" -> (Streams.readKaplanMeier(spark, root),
+        DataPrep.kaplanMeier(spark, sf)),
+      "CUPED" -> (Streams.readCupedAbTest(spark, root),
+        Analytics.cupedAbTest(spark, sf)),
+      "lexical diversity" -> (Streams.readLexicalDiversity(spark, root),
+        TextAnalysis.lexicalDiversity(spark, sf))
+    ).foreach { case (name, (streamed, batch)) =>
+      assert(streamed.count() == 0, s"$name over an empty state is empty")
+      assert(streamed.columns.toSeq == batch.columns.toSeq,
+        s"$name keeps its schema over an empty state")
+    }
+    // no chunk admitted → nothing banned: the scrub passes every doc whole
+    val scrub = Streams.readSpanScrub(spark, root, sf)
+    assert(scrub.columns.toSeq ==
+      graft.operators.Dedup.spanScrub(spark, sf).columns.toSeq)
+    assert(scrub.count() == Tables.documents(spark, sf).count() &&
+      scrub.filter(col("n_removed") =!= 0).count() == 0,
+      "an empty ban list removes no chunk")
+  }
+
+  test("a replay of batch 1 leaves out only its own b1 delta, not b11, bfold1 or blegacy") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("ledgernames").toString
+    // the admission ledger holds one event id per delta directory
+    Seq("b1" -> 1L, "b11" -> 11L, "bfold1" -> 21L, "blegacy" -> 31L).foreach {
+      case (dir, id) => Seq(id).toDF("event_id").write.parquet(s"$root/events/$dir")
+    }
+    val replay = Seq(1L, 11L, 21L, 31L, 41L)
+      .map(id => (id, ts("2024-01-01 00:00:00"), "click"))
+      .toDF("event_id", "ts", "event_type")
+    Streams.dailyCountMaintainBatch(replay, 1L, root)
+    assert(spark.read.parquet(s"$root/events/b1").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 41L), "batch 1 re-admits its own event and the new one only")
+    assert(spark.read.parquet(s"$root/counts/b1").select("n").as[Long].collect()
+      .toSeq == Seq(2L), "the replayed count delta covers exactly those two")
   }
 
   test("cms admission contract: a grown cross-batch redelivery fails loudly") {
