@@ -47,128 +47,103 @@ object Soak {
   private val Copies = 10
   private val Stride = 1000000L
 
-  private def buildIfMissing(s: SparkSession, base: String, out: String): Unit = {
-    val done = new java.io.File(out, "_SOAK_OK")
-    if (done.exists()) return
-    val outDir = new java.io.File(out)
-    outDir.mkdirs()
+  /** Publishes `<out>/<name>.parquet` from `frame` once, through the
+    * artifact store's publish protocol: a table left half-written by a
+    * killed run is rebuilt, a published one is never rewritten.
+    */
+  private def derive(out: String, name: String)(frame: => DataFrame): Unit =
+    graft.sources.Artifacts.ensure(java.nio.file.Paths.get(out, s"$name.parquet"))(
+      frame.write.mode("overwrite").parquet(_))
 
+  /** The union of [[Copies]] variants of a table, copy `i` from `f(i)`. */
+  private def copies(f: Int => DataFrame): DataFrame =
+    (0 until Copies).map(f).reduce(_ unionByName _)
+
+  private def deriveAll(s: SparkSession, base: String, out: String): Unit = {
     // documents: disjoint vocabularies per copy via per-copy alphabet
     // rotation (see scaladoc — bijective on chars, so char-gram
     // structure is preserved exactly; odd shifts 3,5,…,19 have no
     // vocab collisions). Rotation also keeps text LENGTH, so the
     // table's n_chars column stays consistent in the derived corpus.
-    val alpha = "abcdefghijklmnopqrstuvwxyz"
-    val docs = Tables.documents(s, base)
-    (0 until Copies).map { i =>
-      val shift = 2 * i + 1
-      val remapped =
-        if (i == 0) docs
-        else docs.withColumn("text",
-          translate(col("text"), alpha, alpha.drop(shift) + alpha.take(shift)))
-      remapped.withColumn("doc_id", col("doc_id") + lit(i * Stride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    derive(out, "documents") {
+      val alpha = "abcdefghijklmnopqrstuvwxyz"
+      val docs = Tables.documents(s, base)
+      copies { i =>
+        val shift = 2 * i + 1
+        val remapped =
+          if (i == 0) docs
+          else docs.withColumn("text",
+            translate(col("text"), alpha, alpha.drop(shift) + alpha.take(shift)))
+        remapped.withColumn("doc_id", col("doc_id") + lit(i * Stride))
+      }
+    }
 
     // embeddings: shifted ids, per-copy jitter on dim 0
-    val emb = Tables.embeddings(s, base)
-    (0 until Copies).map { i =>
-      emb.withColumn("vec_id", col("vec_id") + lit(i * Stride))
-        .withColumn("embedding",
-          concat(array((element_at(col("embedding"), 1) +
-            lit(i * 0.001f)).cast("float")),
-            slice(col("embedding"), 2, 10000)))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    derive(out, "embeddings") {
+      val emb = Tables.embeddings(s, base)
+      copies { i =>
+        emb.withColumn("vec_id", col("vec_id") + lit(i * Stride))
+          .withColumn("embedding",
+            concat(array((element_at(col("embedding"), 1) +
+              lit(i * 0.001f)).cast("float")),
+              slice(col("embedding"), 2, 10000)))
+      }
+    }
 
     // events: shifted ids/users, ts re-encoded as nano longs so
     // Tables.events reads the soak dir like the driver's files
-    val ev = Tables.events(s, base)
-    (0 until Copies).map { i =>
-      ev.withColumn("event_id", col("event_id") + lit(i * Stride))
-        .withColumn("user_id", col("user_id") + lit(i * Stride))
-    }.reduce(_ unionByName _)
-      .withColumn("ts", unix_micros(col("ts")) * lit(1000L))
-      .write.mode("overwrite").parquet(s"$out/events.parquet")
+    derive(out, "events") {
+      val ev = Tables.events(s, base)
+      copies { i =>
+        ev.withColumn("event_id", col("event_id") + lit(i * Stride))
+          .withColumn("user_id", col("user_id") + lit(i * Stride))
+      }.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
+    }
 
-    java.nio.file.Files.createFile(done.toPath)
-    ()
-  }
+    // Sales tables for the graph-family soak, derived DISJOINTLY (every
+    // key shifted per copy): the trade / co-purchase graphs become 10
+    // independent copies of the base's, so iteration count stays fixed
+    // while per-round join volume is exactly 10× — the per-row factor
+    // measures the operator, not a densified graph.
+    derive(out, "orders") {
+      val ord = Tables.orders(s, base)
+      copies { i =>
+        ord.withColumn("o_orderkey", col("o_orderkey") + lit(i * Stride))
+          .withColumn("o_custkey", col("o_custkey") + lit(i * Stride))
+      }
+    }
+    derive(out, "lineitem") {
+      val li = Tables.lineitem(s, base)
+      copies { i =>
+        li.withColumn("l_orderkey", col("l_orderkey") + lit(i * Stride))
+          .withColumn("l_partkey", col("l_partkey") + lit(i * Stride))
+          .withColumn("l_suppkey", col("l_suppkey") + lit(i * Stride))
+      }
+    }
 
-  /** Sales tables for the graph-family soak, derived DISJOINTLY (every
-    * key shifted per copy): the trade / co-purchase graphs become 10
-    * independent copies of sf0.1's, so iteration count stays fixed
-    * while per-round join volume is exactly 10× — the per-row factor
-    * measures the operator, not a densified graph. Guarded separately
-    * from the corpus tables so pre-existing soak dirs pick these up
-    * without a rebuild.
-    */
-  private def buildSalesIfMissing(s: SparkSession, base: String, out: String): Unit = {
-    val done = new java.io.File(out, "_SOAK_OK_SALES")
-    if (done.exists()) return
-    new java.io.File(out).mkdirs()
-    val ord = Tables.orders(s, base)
-    (0 until Copies).map { i =>
-      ord.withColumn("o_orderkey", col("o_orderkey") + lit(i * Stride))
-        .withColumn("o_custkey", col("o_custkey") + lit(i * Stride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/orders.parquet")
-    val li = Tables.lineitem(s, base)
-    (0 until Copies).map { i =>
-      li.withColumn("l_orderkey", col("l_orderkey") + lit(i * Stride))
-        .withColumn("l_partkey", col("l_partkey") + lit(i * Stride))
-        .withColumn("l_suppkey", col("l_suppkey") + lit(i * Stride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    java.nio.file.Files.createFile(done.toPath)
-    ()
-  }
+    // customer copies, custkey-shifted in lockstep with the orders
+    // copies so the a36/a37 rank-statistics joins soak end-to-end.
+    derive(out, "customer") {
+      val c = Tables.customer(s, base)
+      copies(i => c.withColumn("c_custkey", col("c_custkey") + lit(i * Stride)))
+    }
 
-  /** customer copies, custkey-shifted in lockstep with the orders
-    * copies so the a36/a37 rank-statistics joins soak end-to-end.
-    */
-  private def buildCustomerIfMissing(s: SparkSession, base: String,
-                                     out: String): Unit = {
-    val done = new java.io.File(out, "_SOAK_OK_CUST")
-    if (done.exists()) return
-    new java.io.File(out).mkdirs()
-    val c = Tables.customer(s, base)
-    (0 until Copies).map { i =>
-      c.withColumn("c_custkey", col("c_custkey") + lit(i * Stride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/customer.parquet")
-    java.nio.file.Files.createFile(done.toPath)
-    ()
-  }
-
-  /** part / supplier keys shifted in lockstep with the lineitem
-    * copies, nation / region copied VERBATIM (their keys are never
-    * shifted in customer/supplier, so the tiny dimensions stay the
-    * shared parents of every copy) — completes the FK schema so
-    * dq6's referential audit soaks end-to-end with orphan counts
-    * exactly 10× base.
-    */
-  private def buildDimsIfMissing(s: SparkSession, base: String,
-                                 out: String): Unit = {
-    val done = new java.io.File(out, "_SOAK_OK_DIMS")
-    if (done.exists()) return
-    new java.io.File(out).mkdirs()
-    val p = Tables.part(s, base)
-    (0 until Copies).map { i =>
-      p.withColumn("p_partkey", col("p_partkey") + lit(i * Stride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/part.parquet")
-    val sup = Tables.supplier(s, base)
-    (0 until Copies).map { i =>
-      sup.withColumn("s_suppkey", col("s_suppkey") + lit(i * Stride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/supplier.parquet")
-    Tables.nation(s, base)
-      .write.mode("overwrite").parquet(s"$out/nation.parquet")
-    Tables.region(s, base)
-      .write.mode("overwrite").parquet(s"$out/region.parquet")
-    java.nio.file.Files.createFile(done.toPath)
-    ()
+    // part / supplier keys shifted in lockstep with the lineitem
+    // copies, nation / region copied VERBATIM (their keys are never
+    // shifted in customer/supplier, so the tiny dimensions stay the
+    // shared parents of every copy) — completes the FK schema so
+    // dq6's referential audit soaks end-to-end with orphan counts
+    // exactly 10× base.
+    derive(out, "part") {
+      val p = Tables.part(s, base)
+      copies(i => p.withColumn("p_partkey", col("p_partkey") + lit(i * Stride)))
+    }
+    derive(out, "supplier") {
+      val sup = Tables.supplier(s, base)
+      copies(i => sup.withColumn("s_suppkey", col("s_suppkey") + lit(i * Stride)))
+    }
+    derive(out, "nation")(Tables.nation(s, base))
+    derive(out, "region")(Tables.region(s, base))
   }
 
   /** The soaked families: everything here reads only documents /
@@ -304,10 +279,7 @@ object Soak {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Session.local(cpus.toInt)
 
-    buildIfMissing(spark, base, out)
-    buildSalesIfMissing(spark, base, out)
-    buildCustomerIfMissing(spark, base, out)
-    buildDimsIfMissing(spark, base, out)
+    deriveAll(spark, base, out)
 
     def run(name: String, dir: String, soakSide: Boolean): Double = {
       val fn = (if (soakSide) soakForm(name) else None)

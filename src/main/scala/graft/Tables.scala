@@ -8,8 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `\t`-delimited, no header).
   *
   * All reads are parquet scans with the schema served from
-  * [[graft.sources.SchemaCache]] (inferred from footers once per JVM,
-  * the metastore analogue — a bare `spark.read.parquet` re-runs the
+  * [[graft.sources.SchemaCache]] through [[graft.sources.Artifacts.read]]
+  * (inferred from footers once per JVM and file version, the metastore
+  * analogue — a bare `spark.read.parquet` re-runs the
   * footer-inference job on every DataFrame construction) so Catalyst
   * owns predicate pushdown / column pruning / partition sizing;
   * nothing else is cached or collected here. At cluster scale the same
@@ -19,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.sources.SchemaCache.parquet(spark, s"$dir/$name.parquet")
+    graft.sources.Artifacts.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

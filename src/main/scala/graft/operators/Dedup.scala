@@ -765,19 +765,11 @@ object Dedup {
   // the portable Text.h60, so the ENTIRE pipeline — hash, balance
   // signs, chunks, hamming — is replayed by the DuckDB oracle
   // (OracleGen.dd4) and hash-checked, not rows-only. ---
-  /** The 60-bit SimHash signature relation (doc_id, sig) — the
-    * deterministic per-document function [[graft.sources.TextIndex
-    * .simhashIndex]] persists (same build-once rationale as the
-    * MinHash band index: the signature pass is corpus-wide work no
-    * QUERY should repeat).
-    */
-  private[graft] def simhashSignatures(s: SparkSession, d: String,
-                                       bits: Int = 60): DataFrame =
-    simhashSignaturesOf(Tables.documents(s, d), bits)
-
-  /** Same signature pass over an arbitrary (doc_id, text) relation —
-    * the form the incremental index slices (TextIndex.simhashIndex
-    * Base/Delta) compute per document slice.
+  /** The 60-bit SimHash signature relation (doc_id, sig) over a
+    * (doc_id, text) relation — the deterministic per-document function
+    * [[graft.sources.TextIndex.simhashIndex]] and its slices persist
+    * (same build-once rationale as the MinHash band index: the
+    * signature pass is corpus-wide work no QUERY should repeat).
     */
   private[graft] def simhashSignaturesOf(docs: DataFrame,
                                          bits: Int = 60): DataFrame = {

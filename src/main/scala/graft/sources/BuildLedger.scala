@@ -1,21 +1,13 @@
 package graft.sources
 
-/** Shared build-time ledger for EVERY persisted index artifact —
-  * text (gram/band/prefix/repeated-gram/simhash), vector (LSH/IVF/PQ),
-  * graph (edge/degree), and the bucketed marts all publish through
-  * [[VectorIndex.ensure]], which reports each build it actually ran
-  * (cache hits record nothing) into this registry keyed by the
-  * artifact directory name, with the wall seconds it took.
+/** Build-time ledger for every persisted artifact: [[Artifacts]]
+  * records each build it actually ran (cache hits record nothing),
+  * keyed by the artifact directory name, with the wall seconds it took.
   *
   * The bench reads this to report one-time build cost separately from
   * steady-state probe timings: a cold-cache run shows every artifact
   * the warm-up forced into existence; a steady-state run honestly
-  * shows `{}`. Keeping the ledger HERE (not inside one index family)
-  * is what makes "builds" mean all builds — round 8 shipped it as
-  * `VectorIndex.buildLog`, which read correctly only because every
-  * family happens to funnel through that object's `ensure`; the
-  * shared registry makes the contract structural instead of
-  * incidental.
+  * shows `{}`.
   */
 object BuildLedger {
   private val ledger =

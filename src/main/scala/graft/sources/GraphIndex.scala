@@ -38,57 +38,43 @@ import org.apache.spark.sql.functions._
   * basket pairs are stored UNTHRESHOLDED with their counts, so one
   * index serves every `minSupport` (the threshold is a pushed-down
   * scan filter, and association mining reads the counts it needs
-  * directly). Lifecycle (fingerprinted path, atomic-rename publish,
-  * crash-safe rebuild) is [[VectorIndex.ensure]]'s — one protocol for
-  * every index family.
+  * directly). Every index here is published and read through
+  * [[Artifacts]].
   */
 object GraphIndex {
 
-  private def lineitemFile(d: String) = new java.io.File(d, "lineitem.parquet")
-  private def ordersFile(d: String)   = new java.io.File(d, "orders.parquet")
+  private def persist(s: SparkSession, d: String, kind: String)
+                     (frame: => DataFrame): DataFrame =
+    Artifacts.persist(s, new java.io.File(d, "lineitem.parquet"), d, kind)(frame)
 
-  /** The trade graphs join TWO sources; the path fingerprints lineitem
-    * and the kind carries orders' fingerprint, so regenerating either
-    * table moves the index directory.
+  /** The trade graphs join orders too, so their kind carries its
+    * fingerprint.
     */
-  private def tradePath(d: String, kind: String): java.nio.file.Path =
-    VectorIndex.indexPathFor(lineitemFile(d), d,
-      s"${kind}_o${VectorIndex.sourceFingerprint(ordersFile(d))}")
+  private def persistTrade(s: SparkSession, d: String, kind: String)
+                          (frame: => DataFrame): DataFrame =
+    persist(s, d,
+      Artifacts.alsoOver(kind, "o", new java.io.File(d, "orders.parquet")))(frame)
 
   /** Directed distinct (src = cust·2, dst = supp·2+1) trade edges —
     * one canonical direction; [[Graph]] consumers mirror it for the
     * undirected algorithms and use it as-is for the bipartite ones
     * (HITS).
     */
-  def tradeEdges(s: SparkSession, d: String): DataFrame = {
-    val path = tradePath(d, "trade")
-    VectorIndex.ensure(path) { out =>
+  def tradeEdges(s: SparkSession, d: String): DataFrame =
+    persistTrade(s, d, "trade") {
       Tables.orders(s, d)
         .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** Trade edges with the cheapest hand-off weight
     * (`min(l_quantity)` over the lines linking the pair) — gr6's
     * Bellman–Ford edge relation.
     */
-  def tradeWeightedEdges(s: SparkSession, d: String): DataFrame = {
-    val path = tradePath(d, "trade_w")
-    VectorIndex.ensure(path) { out =>
-      Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .groupBy((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .agg(min(col("l_quantity")).cast("long").as("w"))
-        .write.mode("overwrite").parquet(out)
-    }
-    SchemaCache.parquet(s, path.toString)
-  }
+  def tradeWeightedEdges(s: SparkSession, d: String): DataFrame =
+    tradeWeightedSlice(s, d, Artifacts.Whole)
 
   /** One order-key slice of the weighted trade derivation — the
     * building block of the INCREMENTAL edge index (the graph leg of
@@ -100,33 +86,27 @@ object GraphIndex {
     * relation — bit-exactly (asserted by GraphIndexSpec and the
     * gr15 oracle, which replays the monolithic derivation).
     */
-  private def tradeWeightedSlice(s: SparkSession, d: String, tag: String)(
-      ordersFilter: DataFrame => DataFrame): DataFrame = {
-    val path = tradePath(d, s"trade_w_$tag")
-    VectorIndex.ensure(path) { out =>
-      ordersFilter(Tables.orders(s, d))
+  private def tradeWeightedSlice(s: SparkSession, d: String,
+                                 slice: Artifacts.Slice): DataFrame =
+    persistTrade(s, d, s"trade_w${slice.suffix}") {
+      slice.keep(Tables.orders(s, d))
         .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
         .groupBy((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
         .agg(min(col("l_quantity")).cast("long").as("w"))
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** The weighted edge index as it stood BEFORE the batch:
     * orders < `boundary`.
     */
   def tradeWeightedBase(s: SparkSession, d: String, boundary: Long): DataFrame =
-    tradeWeightedSlice(s, d, s"lt$boundary")(
-      _.filter(col("o_orderkey") < boundary))
+    tradeWeightedSlice(s, d, Artifacts.below("o_orderkey", boundary))
 
   /** The batch delta: orders >= `boundary` — the only edge-derivation
     * work an ingest pays.
     */
   def tradeWeightedDelta(s: SparkSession, d: String, boundary: Long): DataFrame =
-    tradeWeightedSlice(s, d, s"ge$boundary")(
-      _.filter(col("o_orderkey") >= boundary))
+    tradeWeightedSlice(s, d, Artifacts.from("o_orderkey", boundary))
 
   /** base ∪ delta with per-edge min-merge — answer-identical to
     * [[tradeWeightedEdges]] (an edge present in both slices keeps the
@@ -141,28 +121,20 @@ object GraphIndex {
   /** The distinct (ok, pk) basket-item relation — the shared input of
     * item counts, basket totals, and the pair relation below.
     */
-  def basketItems(s: SparkSession, d: String): DataFrame = {
-    val path = VectorIndex.indexPathFor(lineitemFile(d), d, "basket_items")
-    VectorIndex.ensure(path) { out =>
+  def basketItems(s: SparkSession, d: String): DataFrame =
+    persist(s, d, "basket_items") {
       Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** Canonical (pa < pb) co-purchase pair counts, UNTHRESHOLDED — the
     * per-basket self-join paid once; every support threshold is a
     * filter over this relation.
     */
-  def basketPairCounts(s: SparkSession, d: String): DataFrame = {
-    val path = VectorIndex.indexPathFor(lineitemFile(d), d, "basket_pairs")
-    VectorIndex.ensure(path) { out =>
+  def basketPairCounts(s: SparkSession, d: String): DataFrame =
+    persist(s, d, "basket_pairs") {
       graft.operators.Graph.pairRowsOf(basketItems(s, d))
         .groupBy("pa", "pb").agg(count(lit(1)).as("pair_n"))
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 }

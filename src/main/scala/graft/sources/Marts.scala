@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Derived physical layouts over the synthetic tables — the two
   * storage-side levers a 100 TB deployment pulls BEFORE any query
-  * optimization, materialized once per (dataset, layout) via the
-  * [[VectorIndex.ensure]] publish protocol (fingerprinted path, atomic
-  * rename, sentinel):
+  * optimization, materialized once per (dataset, layout) through
+  * [[Artifacts]]:
   *
   *  - [[eventsByDay]]: the fact table hive-partitioned by event day.
   *    A time-ranged query then prunes at the DIRECTORY level — Spark's
@@ -32,6 +31,8 @@ import org.apache.spark.sql.functions._
   */
 object Marts {
 
+  private def eventsFile(d: String) = new java.io.File(d, "events.parquet")
+
   // --- Partition-pruned events mart ---
 
   /** Events partitioned by `event_date` (derived with `to_date(ts)` in
@@ -39,16 +40,12 @@ object Marts {
     * only — consumers needing global order must sort, same as any
     * partitioned table.
     */
-  def eventsByDay(s: SparkSession, d: String): DataFrame = {
-    val path = VectorIndex.indexPathFor(
-      new java.io.File(d, "events.parquet"), d, "events_by_day")
-    VectorIndex.ensure(path) { out =>
+  def eventsByDay(s: SparkSession, d: String): DataFrame =
+    Artifacts.read(s, Artifacts.ensure(eventsFile(d), d, "events_by_day") { out =>
       Tables.events(s, d)
         .withColumn("event_date", to_date(col("ts")))
         .write.partitionBy("event_date").parquet(out)
-    }
-    SchemaCache.parquet(s, path.toString)
-  }
+    }.toString)
 
   /** PP1: daily activity rollup over a date slice of the partitioned
     * mart. The `event_date` predicate is a partition filter — the scan
@@ -128,10 +125,8 @@ object Marts {
     * at build time and are replayed by the oracle as subqueries.
     */
   def eventsZOrdered(s: SparkSession, d: String,
-                     numFiles: Int = 16): DataFrame = {
-    val path = VectorIndex.indexPathFor(
-      new java.io.File(d, "events.parquet"), d, s"events_zorder_$numFiles")
-    VectorIndex.ensure(path) { out =>
+                     numFiles: Int = 16): DataFrame =
+    Artifacts.persist(s, eventsFile(d), d, s"events_zorder_$numFiles") {
       val hourIdx = "unix_timestamp(ts) div 3600"
       val stats = Tables.events(s, d)
         .agg(max(col("user_id")).as("umax"),
@@ -143,10 +138,7 @@ object Marts {
           expr(s"(($hourIdx) - $hmin) * 1024 div ${hmax - hmin + 1}")))
         .repartitionByRange(numFiles, col("zkey"))
         .sortWithinPartitions("zkey")
-        .write.parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** ZO1: the leading edge of the z-ordered layout — first k events in
     * Morton order (codegen'd [[graft.plans.MortonInterleave]] key,
@@ -179,19 +171,17 @@ object Marts {
     * keep listing the files of the directory it replaced.
     */
   private def ensureBucketed(s: SparkSession, table: String,
-                             location: java.nio.file.Path,
+                             src: java.io.File, d: String, kind: String,
                              key: String)(df: => DataFrame): DataFrame = {
-    val abs = location.toAbsolutePath.toString
-    val name = f"${table}_${abs.hashCode}%08x"
     var built = false
-    VectorIndex.ensure(location) { out =>
+    val location = Artifacts.ensure(src, d, kind) { out =>
       built = true
       // Build via a TEMP catalog table at the build path: bucket file
       // naming/layout must come from the bucketed-write committer, and
       // only saveAsTable engages it. The temp entry is dropped right
       // after — the durable artifact is the data + sentinel, and every
       // session (re)declares its own catalog entry below.
-      val tmpName = s"${name}_build_${ProcessHandle.current().pid()}"
+      val tmpName = s"${table}_build_${ProcessHandle.current().pid()}"
       // absolute path: saveAsTable resolves a RELATIVE path option
       // against the warehouse/working dir, not the JVM cwd the ensure
       // protocol stamps its sentinel into
@@ -202,6 +192,8 @@ object Marts {
         .saveAsTable(tmpName)
       s.sql(s"DROP TABLE IF EXISTS $tmpName")
     }
+    val abs = location.toAbsolutePath.toString
+    val name = f"${table}_${abs.hashCode}%08x"
     if (!s.catalog.tableExists(name)) {
       val ddl = df.schema.toDDL
       s.sql(
@@ -212,19 +204,13 @@ object Marts {
     s.table(name)
   }
 
-  def bucketedOrders(s: SparkSession, d: String): DataFrame = {
-    val path = VectorIndex.indexPathFor(
-      new java.io.File(d, "orders.parquet"), d, s"orders_bkt$NumBuckets")
-    ensureBucketed(s, "graft_b_orders", path, "o_orderkey")(
-      Tables.orders(s, d))
-  }
+  def bucketedOrders(s: SparkSession, d: String): DataFrame =
+    ensureBucketed(s, "graft_b_orders", new java.io.File(d, "orders.parquet"),
+      d, s"orders_bkt$NumBuckets", "o_orderkey")(Tables.orders(s, d))
 
-  def bucketedLineitem(s: SparkSession, d: String): DataFrame = {
-    val path = VectorIndex.indexPathFor(
-      new java.io.File(d, "lineitem.parquet"), d, s"lineitem_bkt$NumBuckets")
-    ensureBucketed(s, "graft_b_lineitem", path, "l_orderkey")(
-      Tables.lineitem(s, d))
-  }
+  def bucketedLineitem(s: SparkSession, d: String): DataFrame =
+    ensureBucketed(s, "graft_b_lineitem", new java.io.File(d, "lineitem.parquet"),
+      d, s"lineitem_bkt$NumBuckets", "l_orderkey")(Tables.lineitem(s, d))
 
   /** The co-located fact-fact join itself — orders ⋈ lineitem on the
     * bucket key, NO exchange on either side (asserted by MartsSpec: the

@@ -16,29 +16,27 @@ import org.apache.spark.sql.types.StructType
   * measurable fixed tax on all 331 queries. A catalog-backed
   * deployment (Hive metastore, Iceberg) never pays it — the schema
   * comes from table METADATA; this cache is that behavior for bare
-  * paths: infer once per (JVM, path), serve every later read with
-  * the explicit schema, which skips inference entirely.
+  * paths: infer once per (JVM, path, contents), serve every later read
+  * with the explicit schema, which skips inference entirely.
   *
-  * This caches schema METADATA only — never rows, never results;
-  * every read still scans the parquet freshly. Writers that rewrite
-  * a path in place with a DIFFERENT schema must [[invalidate]] it
-  * (none of the index families do — rebuilds and compactions are
-  * schema-stable by construction, and [[VectorIndex.ensure]] builds
-  * into fresh temp dirs).
+  * An entry holds the `version` it was inferred at — the artifact
+  * store's fingerprint of what is at the path, which [[Artifacts.read]]
+  * passes in — so a path rewritten in place (with a wider schema, say)
+  * is inferred afresh. This caches schema METADATA only — never rows,
+  * never results; every read still scans the parquet freshly.
   */
 object SchemaCache {
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
-  def parquet(s: SparkSession, path: String): DataFrame = {
+  private[sources] def parquet(s: SparkSession, path: String,
+                               version: String): DataFrame = {
     val hit = cache.get(path)
-    if (hit != null) s.read.schema(hit).parquet(path)
+    if (hit != null && hit._1 == version) s.read.schema(hit._2).parquet(path)
     else {
       val df = s.read.parquet(path)
-      cache.put(path, df.schema)
+      cache.put(path, (version, df.schema))
       df
     }
   }
-
-  def invalidate(path: String): Unit = { cache.remove(path); () }
 }

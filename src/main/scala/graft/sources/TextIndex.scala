@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persisted text-dedup indexes over the `documents` table — the
   * build-once side of the MinHash/LSH dedup scale path, mirroring what
-  * [[VectorIndex]] does for ANN (same fingerprinted path layout, same
-  * atomic-rename publish via `VectorIndex.ensure`).
+  * [[VectorIndex]] does for ANN; every index here is published and read
+  * through [[Artifacts]].
   *
   * Round 4 recomputed shingles + 64 minhash permutations for the whole
   * corpus inside EVERY query that touched the LSH family (dd3, dd12,
@@ -34,7 +34,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TextIndex {
 
-  private def docsFile(d: String) = new java.io.File(d, "documents.parquet")
+  private def persist(s: SparkSession, d: String, kind: String)
+                     (frame: => DataFrame): DataFrame =
+    Artifacts.persist(s, new java.io.File(d, "documents.parquet"), d, kind)(frame)
 
   /** Persisted distinct (doc_id, gh) gram relation. `portable = false`
     * gives the xxhash64 basis (exact-dedup family), `portable = true`
@@ -43,14 +45,9 @@ object TextIndex {
   def gramIndex(s: SparkSession, d: String, n: Int = 3,
                 portable: Boolean = false): DataFrame = {
     val basis = if (portable) "h60" else "xx64"
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"grams_${n}_$basis")
-    VectorIndex.ensure(path) { out =>
-      val base =
-        if (portable) Dedup.gramRowsPortable(s, d, n)
-        else Dedup.gramRows(s, d, n)
-      base.write.mode("overwrite").parquet(out)
+    persist(s, d, s"grams_${n}_$basis") {
+      if (portable) Dedup.gramRowsPortable(s, d, n) else Dedup.gramRows(s, d, n)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   /** Persisted winnowing-fingerprint relation (doc_id, fp) — tx7's
@@ -65,14 +62,10 @@ object TextIndex {
     * asserted by TextIndexSpec.
     */
   def fingerprintIndex(s: SparkSession, d: String,
-                       window: Int = 4): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"winnow_3md5_w$window")
-    VectorIndex.ensure(path) { out =>
+                       window: Int = 4): DataFrame =
+    persist(s, d, s"winnow_3md5_w$window") {
       graft.operators.TextAnalysis.winnowingFingerprintsRaw(s, d, window)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** Persisted POSITIONAL anchor relation (doc_id, pos, gh) — dd26's
     * candidate-generation input: the anchor-k-gram hash at EVERY
@@ -81,27 +74,18 @@ object TextIndex {
     * A pure corpus function of (docs, k), so persisted like the gram
     * index; probes (including the strided probe side) filter it.
     */
-  def anchorIndex(s: SparkSession, d: String, k: Int = 8): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"anchors_${k}_xx64")
-    VectorIndex.ensure(path) { out =>
-      Dedup.anchorRows(s, d, k).write.mode("overwrite").parquet(out)
-    }
-    SchemaCache.parquet(s, path.toString)
-  }
+  def anchorIndex(s: SparkSession, d: String, k: Int = 8): DataFrame =
+    anchorSlice(s, d, Artifacts.Whole, k)
 
   /** [[anchorIndex]] in the CHARACTER token basis over the de-spaced
     * corpus — dd33's candidate-generation input (the CJK-honest
     * substring seam: one positional anchor per character position of
     * the no-delimiter text). Same purity argument, same layout.
     */
-  def charAnchorIndex(s: SparkSession, d: String, k: Int = 16): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"canchors_${k}_xx64")
-    VectorIndex.ensure(path) { out =>
+  def charAnchorIndex(s: SparkSession, d: String, k: Int = 16): DataFrame =
+    persist(s, d, s"canchors_${k}_xx64") {
       Dedup.anchorRowsOf(Dedup.despacedDocuments(s, d), k, Dedup.charTokens)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** Persisted distinct (doc_id, gh) CHARACTER k-shingle relation
     * over the de-spaced corpus, h60 basis — dd35's verify input (the
@@ -109,14 +93,10 @@ object TextIndex {
     * exists here because the char family's one consumer is
     * oracle-replayed end to end).
     */
-  def charGramIndex(s: SparkSession, d: String, k: Int = 12): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"cgrams_${k}_h60")
-    VectorIndex.ensure(path) { out =>
+  def charGramIndex(s: SparkSession, d: String, k: Int = 12): DataFrame =
+    persist(s, d, s"cgrams_${k}_h60") {
       Dedup.charGramRowsOf(Dedup.despacedDocuments(s, d), k)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** Persisted (doc_id, band, bucket) LSH banding of the char-shingle
     * MinHash signatures — dd35's candidate-generation input (the char
@@ -125,15 +105,10 @@ object TextIndex {
     */
   def charBandIndex(s: SparkSession, d: String,
                     numHashes: Int = 64, bands: Int = 16,
-                    k: Int = 12): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"cbands_${numHashes}x${bands}_$k")
-    VectorIndex.ensure(path) { out =>
+                    k: Int = 12): DataFrame =
+    persist(s, d, s"cbands_${numHashes}x${bands}_$k") {
       Dedup.bandedSignatures(charGramIndex(s, d, k), numHashes, bands)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** Persisted per-basis gram relation of the MIXED-SCRIPT corpus view
     * (dd36's verify input): the routed side's distinct (doc_id, gh)
@@ -145,13 +120,9 @@ object TextIndex {
   def mixedGramIndex(s: SparkSession, d: String, basis: String, size: Int,
                      ratioThreshold: Double = 0.3): DataFrame = {
     val pct = math.round(ratioThreshold * 100)
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"mgrams_${basis}_${size}_r$pct")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"mgrams_${basis}_${size}_r$pct") {
       Dedup.mixedBasisGrams(s, d, basis, size, ratioThreshold)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   /** Persisted per-basis LSH banding over [[mixedGramIndex]] — dd36's
@@ -162,26 +133,17 @@ object TextIndex {
                      numHashes: Int = 64, bands: Int = 16, size: Int = 12,
                      ratioThreshold: Double = 0.3): DataFrame = {
     val pct = math.round(ratioThreshold * 100)
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"mbands_${basis}_${numHashes}x${bands}_${size}_r$pct")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"mbands_${basis}_${numHashes}x${bands}_${size}_r$pct") {
       Dedup.bandedSignatures(
           mixedGramIndex(s, d, basis, size, ratioThreshold), numHashes, bands)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
-  private def anchorSlice(s: SparkSession, d: String, kindSuffix: String,
-                          k: Int)(slice: DataFrame => DataFrame): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"anchors_${k}_xx64_$kindSuffix")
-    VectorIndex.ensure(path) { out =>
-      slice(Dedup.anchorRows(s, d, k))
-        .write.mode("overwrite").parquet(out)
+  private def anchorSlice(s: SparkSession, d: String, slice: Artifacts.Slice,
+                          k: Int): DataFrame =
+    persist(s, d, s"anchors_${k}_xx64${slice.suffix}") {
+      slice.keep(Dedup.anchorRows(s, d, k))
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** The anchor index as it stood BEFORE the batch: docs < `boundary`.
     * Positional anchors are a pure per-document function (no global
@@ -191,16 +153,14 @@ object TextIndex {
     */
   def anchorIndexBase(s: SparkSession, d: String, boundary: Long,
                       k: Int = 8): DataFrame =
-    anchorSlice(s, d, s"lt$boundary", k)(
-      _.filter(org.apache.spark.sql.functions.col("doc_id") < boundary))
+    anchorSlice(s, d, Artifacts.below("doc_id", boundary), k)
 
   /** The batch delta: docs >= `boundary` — the only anchor work an
     * ingest pays, published as its own directory next to the base.
     */
   def anchorIndexDelta(s: SparkSession, d: String, boundary: Long,
                        k: Int = 8): DataFrame =
-    anchorSlice(s, d, s"ge$boundary", k)(
-      _.filter(org.apache.spark.sql.functions.col("doc_id") >= boundary))
+    anchorSlice(s, d, Artifacts.from("doc_id", boundary), k)
 
   /** Nightly compaction of the incremental anchor layout: fold base +
     * delta into a successor directory by READING FILES — anchors are
@@ -213,16 +173,12 @@ object TextIndex {
   def compactAnchorIndex(s: SparkSession, d: String, boundary: Long,
                          k: Int = 8): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"anchors_${k}_xx64_compacted$boundary")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"anchors_${k}_xx64_compacted$boundary") {
       anchorIndexBase(s, d, boundary, k)
         .unionByName(anchorIndexDelta(s, d, boundary, k))
         .repartitionByRange(col("gh"))
         .sortWithinPartitions("gh")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   /** Persisted (doc_id, band, bucket) LSH banding of the MinHash
@@ -232,16 +188,8 @@ object TextIndex {
     */
   def bandIndex(s: SparkSession, d: String,
                 numHashes: Int = 64, bands: Int = 16,
-                n: Int = 3): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"bands_${numHashes}x${bands}_$n")
-    VectorIndex.ensure(path) { out =>
-      Dedup.bandedSignatures(gramIndex(s, d, n, portable = true),
-          numHashes, bands)
-        .write.mode("overwrite").parquet(out)
-    }
-    SchemaCache.parquet(s, path.toString)
-  }
+                n: Int = 3): DataFrame =
+    bandSlice(s, d, Artifacts.Whole, numHashes, bands, n)
 
   /** Persisted (doc_id, gh, n) SSJoin PREFIX relation — dd19's
     * candidate-generation input (each doc's rarest n − ⌈t·n⌉ + 1
@@ -267,28 +215,21 @@ object TextIndex {
     * determinism), so the corpus-wide collect aggregation is paid at
     * build time, not per probe.
     */
-  def docGramIndex(s: SparkSession, d: String, n: Int = 3): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"docgrams_${n}_xx64")
-    VectorIndex.ensure(path) { out =>
+  def docGramIndex(s: SparkSession, d: String, n: Int = 3): DataFrame =
+    persist(s, d, s"docgrams_${n}_xx64") {
       Dedup.docGramArrays(gramIndex(s, d, n))
         .coalesce(4)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   def prefixIndex(s: SparkSession, d: String, n: Int = 3,
                   threshold: Double = 0.5): DataFrame = {
     val pct = math.round(threshold * 100)
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"prefix_${n}_t$pct")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"prefix_${n}_t$pct") {
       // few fat files: probes scan the whole relation, so file-open
       // count (not row-group pruning) is what the layout optimizes
       Dedup.prefixRelation(gramIndex(s, d, n), threshold)
         .coalesce(4)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   /** Persisted (gram, n_docs, n_occurrences) catalog of word n-grams
@@ -301,15 +242,11 @@ object TextIndex {
     * written as few fat files like [[prefixIndex]].
     */
   def repeatedGramIndex(s: SparkSession, d: String, n: Int = 8,
-                        floor: Long = 2L): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"repgrams_${n}_f$floor")
-    VectorIndex.ensure(path) { out =>
+                        floor: Long = 2L): DataFrame =
+    persist(s, d, s"repgrams_${n}_f$floor") {
       Dedup.repeatedGramCatalog(s, d, n, floor)
         .coalesce(4)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** Persisted near-dup COMPONENT assignment: (doc_id, comp) at the
     * given Jaccard threshold — the cluster relation every post-dedup
@@ -326,14 +263,11 @@ object TextIndex {
   def componentsIndex(s: SparkSession, d: String,
                       threshold: Double = 0.5): DataFrame = {
     val pct = math.round(threshold * 100)
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"comps_t$pct")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"comps_t$pct") {
       Dedup.componentsFromScratch(s, d, threshold)
         .repartitionByRange(org.apache.spark.sql.functions.col("doc_id"))
         .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   /** The pre-append slice of [[componentsIndex]]: labels of docs with
@@ -345,15 +279,11 @@ object TextIndex {
   def componentsIndexBase(s: SparkSession, d: String, boundary: Long,
                           threshold: Double = 0.5): DataFrame = {
     val pct = math.round(threshold * 100)
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"comps_base_t${pct}_b$boundary")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"comps_base_t${pct}_b$boundary") {
       Dedup.baseComponentsOf(s, d, boundary, threshold)
         .repartitionByRange(org.apache.spark.sql.functions.col("doc_id"))
         .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   /** Persisted VOCABULARY-sized (h, token) string catalog over the
@@ -368,34 +298,16 @@ object TextIndex {
     * `isin(winnerHashes)` probe prunes at parquet row-group stats
     * level: a probe touches a few row groups, never the vocabulary.
     */
-  def tokenCatalog(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val path = VectorIndex.indexPathFor(docsFile(d), d, "tokcat_ws")
-    VectorIndex.ensure(path) { out =>
-      graft.Tables.documents(s, d)
-        .select(explode(split(col("text"), " ")).as("token"))
-        .distinct()
-        .select(xxhash64(col("token")).as("h"), col("token"))
-        .repartitionByRange(4, col("h"))
-        .sortWithinPartitions("h")
-        .write.mode("overwrite").parquet(out)
-    }
-    SchemaCache.parquet(s, path.toString)
-  }
+  def tokenCatalog(s: SparkSession, d: String): DataFrame =
+    tokenCatalogSlice(s, d, Artifacts.Whole)
 
   /** Persisted (doc_id, sig) 60-bit SimHash signatures — dd4's
     * corpus-wide signature pass, paid once per corpus instead of per
     * query (the same lesson as [[bandIndex]]; bit-identical to the
     * inline chain, so the dd4 oracle replay is unaffected).
     */
-  def simhashIndex(s: SparkSession, d: String, bits: Int = 60): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d, s"simhash_$bits")
-    VectorIndex.ensure(path) { out =>
-      Dedup.simhashSignatures(s, d, bits)
-        .write.mode("overwrite").parquet(out)
-    }
-    SchemaCache.parquet(s, path.toString)
-  }
+  def simhashIndex(s: SparkSession, d: String, bits: Int = 60): DataFrame =
+    simhashSlice(s, d, Artifacts.Whole, bits)
 
   // --- Incremental maintenance (dd17). A MinHash signature is a pure
   // per-document function, so the band index of corpus ∪ batch is
@@ -406,25 +318,18 @@ object TextIndex {
   // (TextIndexSpec asserts base bytes are untouched by a delta build
   // and that base ∪ delta is row-identical to the full index). ---
 
-  private def bandSlice(s: SparkSession, d: String, kindSuffix: String,
-                        numHashes: Int, bands: Int, n: Int)
-                       (slice: DataFrame => DataFrame): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"bands_${numHashes}x${bands}_${n}_$kindSuffix")
-    VectorIndex.ensure(path) { out =>
-      Dedup.bandedSignatures(slice(gramIndex(s, d, n, portable = true)),
+  private def bandSlice(s: SparkSession, d: String, slice: Artifacts.Slice,
+                        numHashes: Int, bands: Int, n: Int): DataFrame =
+    persist(s, d, s"bands_${numHashes}x${bands}_$n${slice.suffix}") {
+      Dedup.bandedSignatures(slice.keep(gramIndex(s, d, n, portable = true)),
           numHashes, bands)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** The band index as it stood BEFORE the batch: docs < `boundary`. */
   def bandIndexBase(s: SparkSession, d: String, boundary: Long,
                     numHashes: Int = 64, bands: Int = 16,
                     n: Int = 3): DataFrame =
-    bandSlice(s, d, s"lt$boundary", numHashes, bands, n)(
-      _.filter(org.apache.spark.sql.functions.col("doc_id") < boundary))
+    bandSlice(s, d, Artifacts.below("doc_id", boundary), numHashes, bands, n)
 
   /** The batch delta: docs >= `boundary` — the ONLY signature work an
     * ingest pays; published as its own directory next to the base.
@@ -432,8 +337,7 @@ object TextIndex {
   def bandIndexDelta(s: SparkSession, d: String, boundary: Long,
                      numHashes: Int = 64, bands: Int = 16,
                      n: Int = 3): DataFrame =
-    bandSlice(s, d, s"ge$boundary", numHashes, bands, n)(
-      _.filter(org.apache.spark.sql.functions.col("doc_id") >= boundary))
+    bandSlice(s, d, Artifacts.from("doc_id", boundary), numHashes, bands, n)
 
   /** Nightly compaction of the incremental layout: fold base + delta
     * into a successor directory by READING FILES — signatures are
@@ -449,16 +353,12 @@ object TextIndex {
                        numHashes: Int = 64, bands: Int = 16,
                        n: Int = 3): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"bands_${numHashes}x${bands}_${n}_compacted$boundary")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"bands_${numHashes}x${bands}_${n}_compacted$boundary") {
       bandIndexBase(s, d, boundary, numHashes, bands, n)
         .unionByName(bandIndexDelta(s, d, boundary, numHashes, bands, n))
         .repartitionByRange(col("band"), col("bucket"))
         .sortWithinPartitions("band", "bucket")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   // --- Incremental maintenance for the SimHash index (dd4). A SimHash
@@ -468,48 +368,34 @@ object TextIndex {
   // one delta directory, existing files are never touched, and
   // compaction is a pure file fold. ---
 
-  private def simhashSlice(s: SparkSession, d: String, kindSuffix: String,
-                           bits: Int)(pred: org.apache.spark.sql.Column)
-      : DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"simhash_${bits}_$kindSuffix")
-    VectorIndex.ensure(path) { out =>
-      Dedup.simhashSignaturesOf(
-          graft.Tables.documents(s, d).filter(pred), bits)
-        .write.mode("overwrite").parquet(out)
+  private def simhashSlice(s: SparkSession, d: String, slice: Artifacts.Slice,
+                           bits: Int): DataFrame =
+    persist(s, d, s"simhash_$bits${slice.suffix}") {
+      Dedup.simhashSignaturesOf(slice.keep(graft.Tables.documents(s, d)), bits)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** The SimHash index as it stood BEFORE the batch: docs < boundary. */
   def simhashIndexBase(s: SparkSession, d: String, boundary: Long,
                        bits: Int = 60): DataFrame =
-    simhashSlice(s, d, s"lt$boundary", bits)(
-      org.apache.spark.sql.functions.col("doc_id") < boundary)
+    simhashSlice(s, d, Artifacts.below("doc_id", boundary), bits)
 
   /** The batch delta: docs >= boundary — the only signature work an
     * ingest pays.
     */
   def simhashIndexDelta(s: SparkSession, d: String, boundary: Long,
                         bits: Int = 60): DataFrame =
-    simhashSlice(s, d, s"ge$boundary", bits)(
-      org.apache.spark.sql.functions.col("doc_id") >= boundary)
+    simhashSlice(s, d, Artifacts.from("doc_id", boundary), bits)
 
   /** Compaction: fold base + delta BY READING FILES — signatures are
     * never recomputed; row-identical to the from-scratch
     * [[simhashIndex]] (TextIndexSpec pins the equivalence).
     */
   def compactSimhashIndex(s: SparkSession, d: String, boundary: Long,
-                          bits: Int = 60): DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"simhash_${bits}_compacted$boundary")
-    VectorIndex.ensure(path) { out =>
+                          bits: Int = 60): DataFrame =
+    persist(s, d, s"simhash_${bits}_compacted$boundary") {
       simhashIndexBase(s, d, boundary, bits)
         .unionByName(simhashIndexDelta(s, d, boundary, bits))
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   // --- Incremental maintenance for the repeated-gram catalog (dd13/
   // dd22). Per-gram (n_docs, n_occurrences) counts are ADDITIVE over
@@ -544,32 +430,23 @@ object TextIndex {
         count(lit(1)).as("n_occurrences"))
   }
 
-  private def repGramSlice(s: SparkSession, d: String, kindSuffix: String,
-                           n: Int)(pred: org.apache.spark.sql.Column)
-      : DataFrame = {
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"repstate_${n}_$kindSuffix")
-    VectorIndex.ensure(path) { out =>
-      repGramStateOf(graft.Tables.documents(s, d).filter(pred), n)
-        .coalesce(4)
-        .write.mode("overwrite").parquet(out)
+  private def repGramSlice(s: SparkSession, d: String, slice: Artifacts.Slice,
+                           n: Int): DataFrame =
+    persist(s, d, s"repstate_$n${slice.suffix}") {
+      repGramStateOf(slice.keep(graft.Tables.documents(s, d)), n).coalesce(4)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** The count state as it stood BEFORE the batch: docs < `boundary`. */
   def repGramStateBase(s: SparkSession, d: String, boundary: Long,
                        n: Int = 8): DataFrame =
-    repGramSlice(s, d, s"lt$boundary", n)(
-      org.apache.spark.sql.functions.col("doc_id") < boundary)
+    repGramSlice(s, d, Artifacts.below("doc_id", boundary), n)
 
   /** The batch delta: docs >= `boundary` — the ONLY gram work an
     * ingest pays; published as its own directory next to the base.
     */
   def repGramStateDelta(s: SparkSession, d: String, boundary: Long,
                         n: Int = 8): DataFrame =
-    repGramSlice(s, d, s"ge$boundary", n)(
-      org.apache.spark.sql.functions.col("doc_id") >= boundary)
+    repGramSlice(s, d, Artifacts.from("doc_id", boundary), n)
 
   /** Compaction: merge the additive states by summation, apply the
     * floor, and publish the small catalog — row-identical to the
@@ -580,9 +457,7 @@ object TextIndex {
   def compactRepeatedGramIndex(s: SparkSession, d: String, boundary: Long,
                                n: Int = 8, minRepeat: Long = 2L): DataFrame = {
     import org.apache.spark.sql.functions._
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"repgrams_${n}_f${minRepeat}_compacted$boundary")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"repgrams_${n}_f${minRepeat}_compacted$boundary") {
       repGramStateBase(s, d, boundary, n)
         .unionByName(repGramStateDelta(s, d, boundary, n))
         .groupBy("gh")
@@ -592,9 +467,7 @@ object TextIndex {
         .filter(col("n_docs") >= minRepeat)
         .select("gram", "n_docs", "n_occurrences")
         .coalesce(4)
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   // --- Incremental maintenance for the token catalog (tx23/tx27/
@@ -609,37 +482,29 @@ object TextIndex {
   // to the same answer. ---
 
   private def tokenCatalogSlice(s: SparkSession, d: String,
-                                kindSuffix: String)
-                               (pred: org.apache.spark.sql.Column)
-      : DataFrame = {
-    import org.apache.spark.sql.functions._
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"tokcat_ws_$kindSuffix")
-    VectorIndex.ensure(path) { out =>
-      graft.Tables.documents(s, d).filter(pred)
+                                slice: Artifacts.Slice): DataFrame = {
+    import org.apache.spark.sql.functions.{col, explode, split, xxhash64}
+    persist(s, d, s"tokcat_ws${slice.suffix}") {
+      slice.keep(graft.Tables.documents(s, d))
         .select(explode(split(col("text"), " ")).as("token"))
         .distinct()
         .select(xxhash64(col("token")).as("h"), col("token"))
         .repartitionByRange(4, col("h"))
         .sortWithinPartitions("h")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   /** The vocabulary as it stood BEFORE the batch: docs < `boundary`. */
   def tokenCatalogBase(s: SparkSession, d: String,
                        boundary: Long): DataFrame =
-    tokenCatalogSlice(s, d, s"lt$boundary")(
-      org.apache.spark.sql.functions.col("doc_id") < boundary)
+    tokenCatalogSlice(s, d, Artifacts.below("doc_id", boundary))
 
   /** The batch vocabulary delta: docs >= `boundary` — one batch-sized
     * tokenize, published beside the base.
     */
   def tokenCatalogDelta(s: SparkSession, d: String,
                         boundary: Long): DataFrame =
-    tokenCatalogSlice(s, d, s"ge$boundary")(
-      org.apache.spark.sql.functions.col("doc_id") >= boundary)
+    tokenCatalogSlice(s, d, Artifacts.from("doc_id", boundary))
 
   /** Compaction: distinct-union the slices BY READING FILES (tokens
     * are never re-derived from text) and restore the h-sorted probe
@@ -649,16 +514,12 @@ object TextIndex {
   def compactTokenCatalog(s: SparkSession, d: String,
                           boundary: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    val path = VectorIndex.indexPathFor(docsFile(d), d,
-      s"tokcat_ws_compacted$boundary")
-    VectorIndex.ensure(path) { out =>
+    persist(s, d, s"tokcat_ws_compacted$boundary") {
       tokenCatalogBase(s, d, boundary)
         .unionByName(tokenCatalogDelta(s, d, boundary))
         .dropDuplicates("h", "token")
         .repartitionByRange(4, col("h"))
         .sortWithinPartitions("h")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 }

@@ -24,116 +24,13 @@ import org.apache.spark.sql.functions._
   * centroids), which is what lets the DuckDB oracle recompute the
   * index inline and hash-check the probing queries (OracleGen.sim*).
   *
-  * Lifecycle: `target/graft-index/<sf-leaf>-<source-fingerprint>/<kind>`;
-  * built lazily on first use, reused by every later query. The path
-  * fingerprints the SOURCE (absolute path + each part file's
-  * name/size/mtime — Spark part names are per-write UUIDs, so any
-  * regeneration moves the fingerprint), so swapped data lands in a
-  * fresh directory instead of silently serving a stale index; every
-  * index parameter (incl. dim) is part of `kind`. Builds go to a
-  * per-process temp dir and publish via atomic rename — concurrent
-  * JVMs race safely (the loser discards its build), and a crashed
-  * half-write (dir without our own sentinel marker) is treated as
-  * garbage.
+  * Every artifact here is published and read through [[Artifacts]].
   */
 object VectorIndex {
 
-  /** Source fingerprint = every part file's (name, size, mtime), not
-    * the directory entry's own length/mtime: a directory's length is
-    * not content-derived and its mtime tick is coarse, so an in-place
-    * regeneration could otherwise serve a stale index. Spark writes
-    * part files under fresh UUID names, so any rewrite changes the
-    * name list even within one mtime tick.
-    */
-  private[sources] def sourceFingerprint(src: java.io.File): String = {
-    // A single-file source (the shipped testdata layout) has no part
-    // files — fingerprint the file itself, or the path-only hash would
-    // silently serve a stale index after an in-place regeneration.
-    val parts =
-      if (src.isDirectory)
-        src.listFiles().sortBy(_.getName)
-          .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-          .mkString(",")
-      else s"${src.length}:${src.lastModified}"
-    Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(
-      s"${src.getAbsolutePath}|$parts"))
-  }
-
-  private def indexPath(d: String, kind: String): java.nio.file.Path =
-    indexPathFor(new java.io.File(d, "embeddings.parquet"), d, kind)
-
-  private[sources] def indexPathFor(src: java.io.File, d: String,
-                                    kind: String): java.nio.file.Path =
-    java.nio.file.Paths.get("target", "graft-index",
-      s"${java.nio.file.Paths.get(d).getFileName}-${sourceFingerprint(src)}",
-      kind)
-
-  /** Deletes `p` and everything under it; a path already gone is no
-    * error. The one recursive delete in the library: index publish,
-    * snapshot pruning and delta-ledger folds all go through it.
-    */
-  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
-    Option(p.toFile.listFiles()).toSeq.flatten.foreach(c => deleteTree(c.toPath))
-    java.nio.file.Files.deleteIfExists(p); ()
-  }
-
-  /** Our own publish marker, written into the build dir AFTER the
-    * parquet write completes and BEFORE the atomic rename — so a
-    * published dir always carries it, independent of whether Spark's
-    * committer was configured to emit `_SUCCESS`
-    * (mapreduce.fileoutputcommitter.marksuccessfuljobs=false would
-    * otherwise make every call classify a healthy index as crashed
-    * leftovers and delete a directory live readers may still scan).
-    */
-  private val Sentinel = "_GRAFT_INDEX_OK"
-
-  /** Every artifact family funnels through [[ensure]] — text/vector/
-    * graph indexes and the bucketed marts alike — and each build is
-    * reported into the shared [[BuildLedger]] registry, which the
-    * bench reads to separate one-time build cost from steady-state
-    * probe timings. Kept as an alias for callers that still address
-    * the ledger through this object.
-    */
-  def buildLog: Map[String, Double] = BuildLedger.log
-
-  /** Build into a temp dir, publish with an atomic rename. The object
-    * lock serializes threads in THIS JVM; the rename protocol covers
-    * other JVMs: whoever renames first wins, the loser keeps the
-    * winner's index and deletes its own build. Shared with
-    * [[TextIndex]] — one publish protocol for every index family.
-    */
-  private[sources] def ensure(path: java.nio.file.Path)(build: String => Unit): Unit =
-    synchronized {
-      import java.nio.file.{Files, StandardCopyOption}
-      // Migration shim: a published dir from before the sentinel switch
-      // carries Spark's _SUCCESS but not our marker — adopt it (write
-      // the sentinel) instead of deleting a healthy index other readers
-      // may be scanning. A crashed write has neither marker and is
-      // still rebuilt.
-      if (!Files.exists(path.resolve(Sentinel)) &&
-          Files.exists(path.resolve("_SUCCESS")))
-        Files.createFile(path.resolve(Sentinel))
-      if (!Files.exists(path.resolve(Sentinel))) {
-        val tmp = path.resolveSibling(path.getFileName.toString +
-          ".tmp." + ProcessHandle.current().pid())
-        val t0 = System.nanoTime()
-        build(tmp.toString)
-        BuildLedger.record(path.getFileName.toString,
-          (System.nanoTime() - t0) / 1e9)
-        Files.createFile(tmp.resolve(Sentinel))
-        try {
-          Files.createDirectories(path.getParent)
-          // a dir without our sentinel is a crashed writer's leftovers
-          if (Files.exists(path) && !Files.exists(path.resolve(Sentinel)))
-            deleteTree(path)
-          Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException |
-               _: java.nio.file.FileSystemException =>
-            deleteTree(tmp) // another JVM won the race — use theirs
-        }
-      }
-    }
+  private def persist(s: SparkSession, d: String, kind: String)
+                     (frame: => DataFrame): DataFrame =
+    Artifacts.persist(s, new java.io.File(d, "embeddings.parquet"), d, kind)(frame)
 
   /** Multi-table hyperplane-LSH index: one (vec_id, embedding, tbl,
     * bucket, bkey) row per (vector, table). Same plane family as
@@ -143,7 +40,7 @@ object VectorIndex {
   def lshIndex(s: SparkSession, d: String,
                numTables: Int = 8, planesPerTable: Int = 4,
                dim: Int = 64): DataFrame =
-    lshIndexSlice(s, d, "", numTables, planesPerTable, dim)(identity)
+    lshIndexSlice(s, d, Artifacts.Whole, numTables, planesPerTable, dim)
 
   /** Bucketing is a pure per-vector function, so the index of any
     * corpus slice is the row-subset of the full index — which is what
@@ -151,35 +48,30 @@ object VectorIndex {
     * of TextIndex's dd17 maintenance; VectorIndexSpec asserts base
     * bytes untouched and base ∪ delta == full).
     */
-  private def lshIndexSlice(s: SparkSession, d: String, kindSuffix: String,
-                            numTables: Int, planesPerTable: Int, dim: Int)
-                           (slice: DataFrame => DataFrame): DataFrame = {
-    val path = indexPath(d,
-      s"lsh_${numTables}x${planesPerTable}x$dim$kindSuffix")
-    ensure(path) { out =>
+  private def lshIndexSlice(s: SparkSession, d: String, slice: Artifacts.Slice,
+                            numTables: Int, planesPerTable: Int,
+                            dim: Int): DataFrame =
+    persist(s, d, s"lsh_${numTables}x${planesPerTable}x$dim${slice.suffix}") {
       val tb = (0 until numTables).map { t =>
         val planes = Vectors.randomPlanes(planesPerTable, dim, 42L + t)
         struct(lit(t).as("tbl"),
           Vectors.lshBucket(col("embedding"), planes).as("bucket"))
       }
-      slice(Tables.embeddings(s, d))
+      slice.keep(Tables.embeddings(s, d))
         .select(col("vec_id"), col("embedding"), explode(array(tb: _*)).as("e"))
         .select(col("vec_id"), col("embedding"),
           col("e.tbl").as("tbl"), col("e.bucket").as("bucket"),
           (col("e.tbl").cast("long") * lit(65536L) + col("e.bucket")).as("bkey"))
         .repartitionByRange(col("bkey"))
         .sortWithinPartitions("bkey")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** The ANN index as it stood before the batch: vectors < boundary. */
   def lshIndexBase(s: SparkSession, d: String, boundary: Long,
                    numTables: Int = 8, planesPerTable: Int = 4,
                    dim: Int = 64): DataFrame =
-    lshIndexSlice(s, d, s"_lt$boundary", numTables, planesPerTable, dim)(
-      _.filter(col("vec_id") < boundary))
+    lshIndexSlice(s, d, Artifacts.below("vec_id", boundary),
+      numTables, planesPerTable, dim)
 
   /** The arriving batch's delta: vectors >= boundary — the only
     * bucketing work an embedding ingest pays; its own directory, the
@@ -188,8 +80,8 @@ object VectorIndex {
   def lshIndexDelta(s: SparkSession, d: String, boundary: Long,
                     numTables: Int = 8, planesPerTable: Int = 4,
                     dim: Int = 64): DataFrame =
-    lshIndexSlice(s, d, s"_ge$boundary", numTables, planesPerTable, dim)(
-      _.filter(col("vec_id") >= boundary))
+    lshIndexSlice(s, d, Artifacts.from("vec_id", boundary),
+      numTables, planesPerTable, dim)
 
   /** Training-scan bound for [[lloydCentroids]]: corpora with more
     * rows than this train the quantizer on a deterministic systematic
@@ -233,11 +125,9 @@ object VectorIndex {
     */
   def lloydCentroids(s: SparkSession, d: String, k: Int,
                      iters: Int, dim: Int = 64,
-                     maxTrainRows: Long = LloydTrainCap): DataFrame = {
-    val path = indexPath(d, s"lloyd_${k}x${iters}x${dim}t$maxTrainRows")
-    lloydTrainSlice(s, d, k, iters, 0, dim, maxTrainRows, path)
-    SchemaCache.parquet(s, path.toString)
-  }
+                     maxTrainRows: Long = LloydTrainCap): DataFrame =
+    lloydTrainSlice(s, d, s"lloyd_${k}x${iters}x${dim}t$maxTrainRows",
+      k, iters, 0, dim, maxTrainRows)
 
   /** Shared Lloyd loop over `embedding[lo, lo+len)` sub-vectors —
     * `lo = 0, len = dim` is the full-vector coarse quantizer
@@ -246,12 +136,11 @@ object VectorIndex {
     * corpus rows, sliced), same argmax-dot assignment and 1e-6 grid
     * snap, so the DuckDB replay differs only in the slice bounds.
     */
-  private def lloydTrainSlice(s: SparkSession, d: String, k: Int,
-                              iters: Int, lo: Int, len: Int,
-                              maxTrainRows: Long,
-                              path: java.nio.file.Path): Unit = {
+  private def lloydTrainSlice(s: SparkSession, d: String, kind: String,
+                              k: Int, iters: Int, lo: Int, len: Int,
+                              maxTrainRows: Long): DataFrame = {
     require(iters >= 1, "lloydCentroids needs at least one M-step")
-    ensure(path) { out =>
+    persist(s, d, kind) {
       import org.apache.spark.sql.types._
       val e = Tables.embeddings(s, d)
       val n = e.count()
@@ -298,8 +187,7 @@ object VectorIndex {
       (0 until k).foreach { i =>
         rows.add(org.apache.spark.sql.Row(i, counts(i), cents(i).toSeq))
       }
-      s.createDataFrame(rows, schema)
-        .repartition(1).write.mode("overwrite").parquet(out)
+      s.createDataFrame(rows, schema).repartition(1)
     }
   }
 
@@ -320,11 +208,9 @@ object VectorIndex {
     */
   def pqCodebook(s: SparkSession, d: String, m: Int, k: Int,
                  iters: Int, subDim: Int,
-                 maxTrainRows: Long = LloydTrainCap): DataFrame = {
-    val path = indexPath(d, s"pqlloyd_${m}_${k}x${iters}x${subDim}t$maxTrainRows")
-    lloydTrainSlice(s, d, k, iters, m * subDim, subDim, maxTrainRows, path)
-    SchemaCache.parquet(s, path.toString)
-  }
+                 maxTrainRows: Long = LloydTrainCap): DataFrame =
+    lloydTrainSlice(s, d, s"pqlloyd_${m}_${k}x${iters}x${subDim}t$maxTrainRows",
+      k, iters, m * subDim, subDim, maxTrainRows)
 
   /** Collected form of [[pqCodebook]] — k·subDim floats per subspace. */
   def pqCodebookArrays(s: SparkSession, d: String, m: Int, k: Int,
@@ -369,19 +255,14 @@ object VectorIndex {
     */
   def ivfIndex(s: SparkSession, d: String, numCells: Int,
                kind: String = "")
-              (cellOf: Column => Column): DataFrame = {
-    val path = indexPath(d,
-      if (kind.nonEmpty) kind else s"ivf_$numCells")
-    ensure(path) { out =>
+              (cellOf: Column => Column): DataFrame =
+    persist(s, d, if (kind.nonEmpty) kind else s"ivf_$numCells") {
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           cellOf(col("embedding")).as("cell"))
         .repartitionByRange(col("cell"))
         .sortWithinPartitions("cell")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
-  }
 
   /** Product-quantization code index: (vec_id, m, code) — every
     * corpus vector reduced to `mSub` small codebook ids (the
@@ -399,8 +280,7 @@ object VectorIndex {
               iters: Int, subDim: Int): DataFrame = {
     val books = (0 until mSub).map(m =>
       pqCodebookArrays(s, d, m, k, iters, subDim))
-    val path = indexPath(d, s"pqcodes_${mSub}x${k}x${iters}x$subDim")
-    ensure(path) { out =>
+    persist(s, d, s"pqcodes_${mSub}x${k}x${iters}x$subDim") {
       val codeCols = (0 until mSub).map { m =>
         struct(lit(m).as("m"),
           graft.functions.Vectors.nearestCellByDot(books(m))(
@@ -412,9 +292,7 @@ object VectorIndex {
           col("mc.code").cast("int").as("code"))
         .repartitionByRange(col("vec_id"), col("m"))
         .sortWithinPartitions("vec_id", "m")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 
   /** Wide PQ code layout: ONE (vec_id, c0..c{mSub-1}) row per vector —
@@ -431,20 +309,17 @@ object VectorIndex {
     */
   def pqIndexWide(s: SparkSession, d: String, mSub: Int, k: Int,
                   iters: Int, subDim: Int): DataFrame = {
-    // Materialize the long index (and its codebooks) BEFORE the ensure
+    // Materialize the long index (and its codebooks) BEFORE the build
     // closure so the ledger charges this artifact the pivot alone, not
     // the nested builds it depends on.
     val long = pqIndex(s, d, mSub, k, iters, subDim)
-    val path = indexPath(d, s"pqcodes_wide_${mSub}x${k}x${iters}x$subDim")
-    ensure(path) { out =>
+    persist(s, d, s"pqcodes_wide_${mSub}x${k}x${iters}x$subDim") {
       val first +: rest = (0 until mSub).map(m =>
         max(when(col("m") === m, col("code"))).as(s"c$m"))
       long
         .groupBy("vec_id").agg(first, rest: _*)
         .repartitionByRange(col("vec_id"))
         .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(out)
     }
-    SchemaCache.parquet(s, path.toString)
   }
 }

@@ -118,7 +118,7 @@ private[graft] object Ledger {
           .repartitionByRange(cluster.map(col): _*)
           .sortWithinPartitions(cluster.map(col): _*),
         workDir, kind, s"bfold$next")
-      ds.foreach(d => graft.sources.VectorIndex.deleteTree(d.toPath))
+      ds.foreach(d => graft.sources.Artifacts.deleteTree(d.toPath))
     }
   }
 

@@ -212,7 +212,7 @@ object Streams {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     new java.io.File(tableDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("snap_") && f.getName != snapName)
-      .foreach(d => graft.sources.VectorIndex.deleteTree(d.toPath))
+      .foreach(d => graft.sources.Artifacts.deleteTree(d.toPath))
   }
 
   /** Streaming MERGEABLE-SKETCH sink — the a29 posture maintained by
