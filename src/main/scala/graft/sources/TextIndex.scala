@@ -191,6 +191,20 @@ object TextIndex {
                 n: Int = 3): DataFrame =
     bandSlice(s, d, Artifacts.Whole, numHashes, bands, n)
 
+  /** Persisted per-doc gram-set ARRAY relation (doc_id, grams) — the
+    * verify input of dd19's PPJoin tail: each candidate pair reads
+    * both docs' full gram sets as one array row each and intersects
+    * per row. A pure corpus function of (docs, n) like [[gramIndex]]
+    * (it IS the gram index pivoted to one row per doc, sorted for
+    * determinism), so the corpus-wide collect aggregation is paid at
+    * build time, not per probe.
+    */
+  def docGramIndex(s: SparkSession, d: String, n: Int = 3): DataFrame =
+    persist(s, d, s"docgrams_${n}_xx64") {
+      Dedup.docGramArrays(gramIndex(s, d, n))
+        .coalesce(4)
+    }
+
   /** Persisted (doc_id, gh, n) SSJoin PREFIX relation — dd19's
     * candidate-generation input (each doc's rarest n − ⌈t·n⌉ + 1
     * grams under the global (df, gh) order, plus its gram count), a
@@ -207,20 +221,6 @@ object TextIndex {
     * re-rank only docs holding grams whose df-rank crossed their
     * prefix cut, which is exact but not implemented here).
     */
-  /** Persisted per-doc gram-set ARRAY relation (doc_id, grams) — the
-    * verify input of dd19's PPJoin tail: each candidate pair reads
-    * both docs' full gram sets as one array row each and intersects
-    * per row. A pure corpus function of (docs, n) like [[gramIndex]]
-    * (it IS the gram index pivoted to one row per doc, sorted for
-    * determinism), so the corpus-wide collect aggregation is paid at
-    * build time, not per probe.
-    */
-  def docGramIndex(s: SparkSession, d: String, n: Int = 3): DataFrame =
-    persist(s, d, s"docgrams_${n}_xx64") {
-      Dedup.docGramArrays(gramIndex(s, d, n))
-        .coalesce(4)
-    }
-
   def prefixIndex(s: SparkSession, d: String, n: Int = 3,
                   threshold: Double = 0.5): DataFrame = {
     val pct = math.round(threshold * 100)

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import graft.ShopFixture._
 import graft.movieshop.MovieShop
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{LocalTableScanExec, LogicalRDD}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
@@ -119,10 +120,6 @@ class MovieShopServingSpec extends SparkTestBase {
   private def orderIds(s: SparkSession, dir: String): Seq[Int] =
     MovieShop.queryOrderList(s, dir, 0, 1000).collect().map(_.getInt(0)).toSeq
 
-  /** The ids of the checkpointed relations a plan reads. */
-  private def rddScans(df: DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
-
   private def liveKeys(s: SparkSession, dir: String): Set[String] =
     MovieShop.snapshots.keySet.asScala.collect {
       case (ks, key) if (ks eq s) && (key.startsWith(s"$dir/") || key.startsWith(s"$dir#")) => key
@@ -189,8 +186,8 @@ class MovieShopServingSpec extends SparkTestBase {
     assert(orderIds(other, a).size == 8 && orderIds(other, b).size == 5)
     assert(MovieShop.orders(other, a).sparkSession eq other)
     assert(MovieShop.movies(spark, a).sparkSession eq spark)
-    assert(rddScans(MovieShop.orders(spark, a)) != rddScans(MovieShop.orders(other, a)))
-    assert(rddScans(MovieShop.orders(spark, a)) != rddScans(MovieShop.orders(spark, b)))
+    assert(snapshotScans(MovieShop.orders(spark, a)) != snapshotScans(MovieShop.orders(other, a)))
+    assert(snapshotScans(MovieShop.orders(spark, a)) != snapshotScans(MovieShop.orders(spark, b)))
     assert(liveKeys(spark, a) == liveKeys(other, a))
     assert(liveKeys(spark, a).intersect(liveKeys(spark, b)).isEmpty)
   }
@@ -207,7 +204,8 @@ class MovieShopServingSpec extends SparkTestBase {
     }
     assertEndpoints(spark, dir)
     assert(liveKeys(spark, dir) == Set("movie_info.csv", "review.csv", "order.csv")
-      .map(f => s"$dir/$f") ++ Set(s"$dir#movie_detail", s"$dir#sales_rollup"))
+      .map(f => s"$dir/$f") ++ Set("movie_list", "recommend", "movie_detail",
+        "order_list", "max_order_id", "sales_rollup").map(v => s"$dir#$v"))
   }
 
   test("chartBundle does not pin the order table: a later append is read") {
@@ -219,7 +217,90 @@ class MovieShopServingSpec extends SparkTestBase {
       .collect()(0).getInt(0) == 10)
     assert(orderIds(spark, dir).size == 9)
     val (monthly2, yearly2) = MovieShop.chartBundle(spark, dir)
-    assert(rddScans(monthly2) == rddScans(yearly2) && rddScans(monthly2).size == 1)
+    assert(snapshotScans(monthly2) == snapshotScans(yearly2) && snapshotScans(monthly2).size == 1)
     assert(yearly2.collect().map(_.getString(0)).toSeq == Seq("2015", "2016", "2017", "2019", "2020"))
+  }
+
+  /** Runs `body` with the driver's budget for held rows at `bytes`. */
+  private def withBudget[T](bytes: Long)(body: => T): T = {
+    val prior = MovieShop.heldBudget
+    MovieShop.heldBudget = bytes
+    try body finally MovieShop.heldBudget = prior
+  }
+
+  /** Whether a snapshot is held on the driver (else a checkpoint). */
+  private def held(df: DataFrame): Boolean = df.queryExecution.logical match {
+    case _: LocalRelation => true
+    case _: LogicalRDD => false
+  }
+
+  private def heldBytes: Long = MovieShop.snapshots.values.asScala.map(_.bytes).sum
+
+  test("within the driver's budget every read endpoint is one local scan: no job") {
+    val dir = shopDir()
+    val endpoints: Seq[(String, DataFrame)] =
+      listForms.map { case (from, lim, key) =>
+        s"queryMovieList($from, $lim, '$key')" -> MovieShop.queryMovieList(spark, dir, from, lim, key)
+      } ++ Seq(101, 104, 999).map(id => s"queryMovie($id)" -> MovieShop.queryMovie(spark, dir, id)) ++
+        Seq(15, 2).map(lim => s"queryRecommendMovieList($lim)" ->
+          MovieShop.queryRecommendMovieList(spark, dir, lim)) ++
+        orderForms.map(p => s"queryOrderList('$p')" -> MovieShop.queryOrderList(spark, dir, 0, 100, p)) ++
+        Seq("queryOrderList page" -> MovieShop.queryOrderList(spark, dir, 2, 3),
+          "salesRollup" -> MovieShop.salesRollup(spark, dir),
+          "insertOrder" -> MovieShop.insertOrder(spark, dir, 105, "Hero", 3, 89.951))
+    endpoints.foreach { case (what, df) =>
+      val plan = df.queryExecution.executedPlan
+      assert(plan.isInstanceOf[LocalTableScanExec], s"$what:\n$plan")
+    }
+    assert(Seq(MovieShop.movies(spark, dir), MovieShop.reviews(spark, dir),
+      MovieShop.orders(spark, dir)).forall(held))
+  }
+
+  test("with no budget every endpoint reads checkpoints and matches") {
+    withBudget(0) {
+      val dir = shopDir()
+      assertEndpoints(spark, dir)
+      assert(!Seq(MovieShop.movies(spark, dir), MovieShop.reviews(spark, dir),
+        MovieShop.orders(spark, dir), MovieShop.salesRollup(spark, dir)).exists(held))
+      assert(!(MovieShop.snapshots.get((spark, s"$dir#movie_detail")).df.queryExecution
+        .logical.isInstanceOf[LocalRelation]))
+      append(dir, "order.csv", "9\t104\tA_Team\t2\t30.0\t2020-02-02 02:02:02")
+      assertEndpoints(spark, dir)
+      assert(!held(MovieShop.orders(spark, dir)))
+    }
+  }
+
+  test("a snapshot is held exactly when its rows fit in the room the other snapshots leave") {
+    val a = shopDir()
+    val size = { MovieShop.orders(spark, a); MovieShop.snapshots.get((spark, s"$a/order.csv")).bytes }
+    assert(size > 0)
+    // the same rows in two more directories: one byte short of room, then exactly room
+    val (b, c) = (shopDir(), shopDir())
+    withBudget(heldBytes + size - 1)(assert(!held(MovieShop.orders(spark, b))))
+    withBudget(heldBytes + size)(assert(held(MovieShop.orders(spark, c))))
+    assert(MovieShop.snapshots.get((spark, s"$c/order.csv")).bytes == size)
+  }
+
+  test("a table leaving the budget between versions drops its held views and still matches") {
+    val dir = shopDir()
+    val orderViews = Set("order_list", "max_order_id").map(v => s"$dir#$v")
+    val movieViews = Set("movie_list", "recommend").map(v => s"$dir#$v")
+    assertEndpoints(spark, dir)
+    assert(held(MovieShop.orders(spark, dir)) && held(MovieShop.movies(spark, dir)))
+    assert((orderViews ++ movieViews).subsetOf(liveKeys(spark, dir)))
+    withBudget(0) {
+      // the next orders version is a checkpoint; the movies version is unchanged and held
+      append(dir, "order.csv", "9\t104\tA_Team\t2\t30.0\t2020-02-02 02:02:02")
+      assertEndpoints(spark, dir)
+      assert(!held(MovieShop.orders(spark, dir)) && held(MovieShop.movies(spark, dir)))
+      assert(liveKeys(spark, dir).intersect(orderViews).isEmpty)
+      assert(movieViews.subsetOf(liveKeys(spark, dir)))
+    }
+    // back within the budget, the version after is held again, views and all
+    append(dir, "order.csv", "10\t101\tKiss Me Deadly\t1\t12.5\t2020-02-03 03:03:03")
+    assertEndpoints(spark, dir)
+    assert(held(MovieShop.orders(spark, dir)))
+    assert((orderViews ++ movieViews).subsetOf(liveKeys(spark, dir)))
+    assert(MovieShop.queryOrderList(spark, dir, 0, 1).collect()(0).getInt(0) == 10)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.movieshop.MovieShop
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** MovieShop's endpoints on two inputs.
@@ -123,9 +122,8 @@ class MovieShopSpec extends SparkTestBase {
     yearly.collect().foreach { r =>
       assert(math.abs(r.getDouble(1) - monthlyByYear(r.getString(0))) < 0.05)
     }
-    // both series read the one checkpointed orders snapshot
-    def scans(df: DataFrame) =
-      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    // both series read the one orders snapshot
+    def scans(df: DataFrame) = ShopFixture.snapshotScans(df)
     assert(scans(monthly).size == 1 && scans(monthly) == scans(yearly))
     assert(scans(monthly) == scans(MovieShop.orders(spark, fixture)))
   }

@@ -3,6 +3,9 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.Assertions
 
 /** Small reference-shaped MovieShop TSVs the suite writes itself
@@ -47,6 +50,24 @@ object ShopFixture {
   def append(dir: String, file: String, line: String): Unit =
     Files.write(Paths.get(dir, file), (line + "\n").getBytes(UTF_8),
       StandardOpenOption.APPEND)
+
+  /** A reference compared by identity, not by value. */
+  final class Identity(val ref: AnyRef) {
+    override def equals(o: Any): Boolean = o match {
+      case i: Identity => i.ref eq ref
+      case _ => false
+    }
+    override def hashCode: Int = System.identityHashCode(ref)
+  }
+
+  /** The snapshot relations a plan reads, by identity: a checkpoint's
+    * RDD id, or the rows of a relation held on the driver (two sessions
+    * holding equal rows still read two relations). */
+  def snapshotScans(df: DataFrame): Set[Any] =
+    df.queryExecution.analyzed.collect {
+      case r: LogicalRDD => r.rdd.id
+      case l: LocalRelation => new Identity(l.data)
+    }.toSet
 
   /** A new temp directory holding the three TSVs. */
   def shopDir(orders: Seq[String] = orderLines): String = {
