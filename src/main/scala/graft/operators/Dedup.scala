@@ -597,9 +597,8 @@ object Dedup {
   // what makes the fixed cap safe at corpus scale. The jump join is
   // deferred because real near-dup graphs are almost always shallow
   // (profiled: always-jump costs +50% per round at sf0.1 and saves
-  // nothing when diameter <= 3). The driver loop only checks a
-  // convergence COUNT — no data is collected; lineage is cut per
-  // round via localCheckpoint so plans don't nest across iterations. ---
+  // nothing when diameter <= 3). The rounds run in [[Rounds.fixpoint]];
+  // no data is collected. ---
   def dedupComponents(s: SparkSession, d: String,
                       threshold: Double = 0.5, maxIter: Int = 20,
                       jumpFrom: Int = 4): DataFrame =
@@ -684,19 +683,18 @@ object Dedup {
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .localCheckpoint()
     // near-dup pair relations are tiny next to the corpus (they're the
-    // DUPLICATES); below Graph's cap, broadcasting the edge side makes
+    // DUPLICATES); below the state cap, broadcasting the edge side makes
     // each propagation round a labels-scan + hash probe instead of a
     // co-shuffle of labels + edges (same checkpointed-stats rationale
-    // as Graph.guardedBroadcast — a LogicalRDD never broadcasts on its
+    // as Rounds.guardedBroadcast — a LogicalRDD never broadcasts on its
     // own). Past the cap the plain shuffle join is the right plan.
-    val edges = Graph.guardedBroadcast(edgesCk, edgesCk.count())
-    var labels = nodes
+    val edges = Rounds.guardedBroadcast(edgesCk, edgesCk.count())
+    val labels0 = nodes
       .select(col("doc_id"), col("doc_id").as("comp"))
       .localCheckpoint()
     // label-vector size (one row per node): feeds the pointer-jump
     // broadcast guard and the loop's data-proportional shuffle width
-    val nNodes = labels.count()
-    val parts = Graph.partsFor(nNodes, labels.sparkSession)
+    val nNodes = labels0.count()
     // min-label propagation is MONOTONE (labels only decrease, node
     // set fixed), so "no label changed" is exactly "sum(comp)
     // unchanged" — one cheap agg per round instead of a full
@@ -709,48 +707,31 @@ object Dedup {
     def totalOf(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = totalOf(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // round bodies are broadcast-shaped below the cap — AQE scoped
-      // off and the one hash-agg shuffle pinned to the proportional
-      // width (Graph.withLoopConf rationale); past the cap rounds
-      // shuffle-join and keep AQE for skew splitting
-      val (next, nextSum) = Graph.withLoopConf(labels.sparkSession, parts,
-        adaptive = nNodes > Graph.StateBcastRowCap) {
-        val viaNeighbor = edges
-          .join(labels, edges("doc_b") === labels("doc_id"))
-          .select(edges("doc_a").as("doc_id"), col("comp"))
-        val withJump =
-          if (iter < jumpFrom) labels.unionByName(viaNeighbor)
-          else {
-            // the parent lookup side is the same node-sized label
-            // vector — broadcast it under the same guard
-            val viaParent = labels.as("x")
-              .join(Graph.guardedBroadcast(labels.as("p"), nNodes),
-                col("x.comp") === col("p.doc_id"))
-              .select(col("x.doc_id").as("doc_id"), col("p.comp").as("comp"))
-            labels.unionByName(viaNeighbor).unionByName(viaParent)
-          }
-        val stepped = withJump
-          .groupBy("doc_id").agg(min(col("comp")).as("comp"))
-          .localCheckpoint()
-        (stepped, totalOf(stepped))
-      }
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      iter += 1
+    // A silent partial propagation would split genuine components; with
+    // pointer jumping the round cap covers components of diameter
+    // ~2^maxIter (rounds needed = log2(pair-graph diameter)), beyond
+    // any real pair graph
+    Rounds.fixpoint("component propagation",
+        Rounds.partsFor(nNodes, labels0.sparkSession), maxIter,
+        labels0, totalOf(labels0))(
+        rows = _ => nNodes, measure = totalOf,
+        stable = (a, b) => a.compareTo(b) == 0) { (labels, _, iter) =>
+      val viaNeighbor = edges
+        .join(labels, edges("doc_b") === labels("doc_id"))
+        .select(edges("doc_a").as("doc_id"), col("comp"))
+      val withJump =
+        if (iter < jumpFrom) labels.unionByName(viaNeighbor)
+        else {
+          // the parent lookup side is the same node-sized label
+          // vector — broadcast it under the same guard
+          val viaParent = labels.as("x")
+            .join(Rounds.guardedBroadcast(labels.as("p"), nNodes),
+              col("x.comp") === col("p.doc_id"))
+            .select(col("x.doc_id").as("doc_id"), col("p.comp").as("comp"))
+          labels.unionByName(viaNeighbor).unionByName(viaParent)
+        }
+      withJump.groupBy("doc_id").agg(min(col("comp")).as("comp"))
     }
-    // A silent partial propagation would split genuine components, so
-    // fail loudly instead of returning labels that diverge from the
-    // transitive closure. (With pointer jumping the cap corresponds to
-    // components of diameter ~2^maxIter — beyond any real pair graph.)
-    require(converged,
-      s"component propagation did not converge within $maxIter rounds; " +
-        "rounds needed = log2(pair-graph diameter)")
-    labels
   }
 
   // --- DD4: SimHash near-dup pairs. 60-bit signature computed as one

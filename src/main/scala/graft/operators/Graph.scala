@@ -22,12 +22,14 @@ import org.apache.spark.sql.functions._
   *    bit-identical values. Floating-point PageRank cannot be
   *    hash-oracled across engines; scaled-long PageRank can, because
   *    integer sums are associative-commutative exactly.
-  *  - Lineage is cut per round with `localCheckpoint` (the
-  *    componentsFromPairs lesson, `Dedup.scala`): without it the
-  *    iteration nests 5 joins deep in one plan and the optimizer
-  *    re-derives the edge relation per round.
+  *  - Every round loop goes through [[Rounds]]: the loop conf, the
+  *    per-round lineage cut, the convergence read, the `maxIter`
+  *    failure and the early-exit argument against the unrolled
+  *    oracles live there; each operator here keeps only its round
+  *    body and its measure.
   */
 object Graph {
+  import Rounds.{guardedBroadcast, iterRelation}
 
   /** Undirected customer↔supplier trade graph: an edge per DISTINCT
     * (customer, supplier) pair that shares at least one order line.
@@ -53,89 +55,6 @@ object Graph {
         (col("l_suppkey") * 2 + 1).as("dst"))
       .distinct()
 
-  /** Materialize an iterative operator's per-round PROBE relation (the
-    * edge set every round scans) with a data-proportional partition
-    * count: ~[[IterRowsPerPartition]] rows per partition, capped at 32.
-    * The count is one cheap pass over the (index-backed) derivation;
-    * the relation is then hash-distributed on its join key and
-    * lineage-cut, so each round starts from cached blocks. Returns the
-    * row count alongside — callers feed it to [[guardedBroadcast]].
-    * Rationale: a checkpointed frame is a `LogicalRDD` with UNKNOWN
-    * stats, so Catalyst sizes every per-round shuffle for the default
-    * 200-partition worst case and never broadcasts either side; at
-    * graph scales (saturating edge relations, per-node state) that
-    * meant re-shuffling the full edge relation once per round
-    * (measured: 60% of gr6's wall time at sf0.1).
-    */
-  private val IterRowsPerPartition = 300000L
-  /** Data-proportional partition count for an n-row loop relation:
-    * ~[[IterRowsPerPartition]] rows per partition, capped at the
-    * cluster's default parallelism (both inputs measured, not
-    * local-mode constants).
-    */
-  private[graft] def partsFor(n: Long, s: SparkSession): Int =
-    math.max(1L, math.min((n + IterRowsPerPartition - 1) / IterRowsPerPartition,
-      s.sparkContext.defaultParallelism.toLong)).toInt
-  private[graft] def iterRelation(df: DataFrame, key: String)
-      : (DataFrame, Long, Int) = {
-    val n = df.count()
-    val parts = partsFor(n, df.sparkSession)
-    (df.repartition(parts, col(key)).localCheckpoint(), n, parts)
-  }
-
-  /** Run an iterative operator's ROUND LOOP with adaptive execution
-    * scoped OFF and the shuffle width pinned to the loop's
-    * data-proportional partition count (restored after). Inside these
-    * loops every join side is either explicitly broadcast-hinted
-    * ([[guardedBroadcast]]) or pre-partitioned by [[iterRelation]], so
-    * AQE has no decision left to improve — but it still costs: each
-    * per-round `localCheckpoint` materialization runs one DRIVER JOB
-    * PER QUERY STAGE instead of one per round (probed at sf0.1: gr16
-    * spent 66 construction jobs on two 5-round sweeps against 0.05 s
-    * of execution). Scoping AQE off alone is NOT enough — without its
-    * partition coalescing each round's one hash-agg shuffle runs at
-    * the session width (32 here, 200 default) in tiny tasks, which
-    * was measured to give the job-count win back in task scheduling.
-    * Pinning `spark.sql.shuffle.partitions` to [[iterRelation]]'s
-    * data-proportional `parts` keeps the reduce width exactly what
-    * AQE would have coalesced to, at any scale — both knobs derive
-    * from the measured input, neither is a local-mode constant. The
-    * `adaptive` escape matters at the broadcast-cap fallback: past
-    * [[StateBcastRowCap]] rounds become plain co-partitioned shuffle
-    * joins whose skew AQE could split, so callers pass `adaptive =
-    * true` to keep AQE when state outgrows the broadcast path.
-    */
-  private[graft] def withLoopConf[T](s: SparkSession, parts: Int,
-                                     adaptive: Boolean = false)
-                                    (body: => T): T =
-    if (adaptive) body
-    else {
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val widthKey = "spark.sql.shuffle.partitions"
-      val aqe0 = s.conf.get(aqeKey, "true")
-      val width0 = s.conf.get(widthKey)
-      s.conf.set(aqeKey, "false")
-      s.conf.set(widthKey, parts.toString)
-      try body finally {
-        s.conf.set(aqeKey, aqe0); s.conf.set(widthKey, width0)
-      }
-    }
-
-  /** Runtime-size-guarded broadcast of an iteration's STATE relation
-    * (rank vector, BFS frontier): per-node state is orders of
-    * magnitude smaller than the edge relation it joins, so hinting it
-    * broadcast turns each round into a cached-edge-scan + hash probe +
-    * partial agg — no edge shuffle. The guard keeps the 100 TB
-    * posture: state row counts GROW with the corpus, and past the cap
-    * (~32 MB at two longs/row) the round falls back to the plain
-    * co-partitioned shuffle join, which is the correct plan at that
-    * size. The count is free — every caller already measures its state
-    * per round for convergence/empty checks.
-    */
-  private[graft] val StateBcastRowCap = 2000000L
-  private[graft] def guardedBroadcast(state: DataFrame, rows: Long): DataFrame =
-    if (rows <= StateBcastRowCap) broadcast(state) else state
-
   // --- GR1: PageRank, integer-exact. rank_{k+1}(v) =
   // (15·SCALE) div 100  +  (85 · Σ_{u→v} rank_k(u) div outdeg(u)) div 100,
   // all in scaled longs (SCALE = 1e9 → 9 fractional digits — headroom:
@@ -150,32 +69,48 @@ object Graph {
   // The DuckDB oracle replays the identical unrolled chain (generated
   // by [[pageRankOracleSql]] from the same parameters). ---
   def pageRank(s: SparkSession, d: String,
-               iters: Int = 5, scale: Long = 1000000000L): DataFrame = {
+               iters: Int = 5, scale: Long = 1000000000L): DataFrame =
+    scaledRank(s, d, None, iters, scale)
+
+  /** gr1 and gr5's one chain: r0 = share·scale and
+    * r_{k+1} = share·teleport + (85·Σ r_k div outdeg) div 100, where
+    * `share` is gr5's 0/1 seed flag and the literal 1 for gr1 (every
+    * node a seed, exact in integers). gr1's deg carries no seed column:
+    * the literal folds into the projections, so its plans are the
+    * unseeded ones. gr1's ranks are all >= teleport, so the final
+    * `pr > 0` filter (gr5's unreachable nodes) drops none of them.
+    * deg is state-sized (one row per node) — broadcast under the same
+    * guard as the rank vector, so each round is exactly one exchange
+    * (the contribution hash-agg).
+    */
+  private def scaledRank(s: SparkSession, d: String, seeds: Option[DataFrame],
+                         iters: Int, scale: Long): DataFrame = {
     val (edges, _, parts) = iterRelation(tradeEdges(s, d), "src")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    val deg0 = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .select(col("src").as("node"), col("outdeg"))
-      .localCheckpoint()
+    val (deg, share) = seeds match {
+      case None => (deg0.localCheckpoint(), lit(1L))
+      case Some(ids) =>
+        (deg0.join(ids.withColumn("is_seed", lit(1L)), Seq("node"), "left_outer")
+          .na.fill(0L, Seq("is_seed"))
+          .localCheckpoint(), col("is_seed"))
+    }
     val nNodes = deg.count() // rank-vector size: one row per node
     val teleport = 15L * scale / 100L
-    var ranks = deg.select(col("node"), col("outdeg"), lit(scale).as("pr"))
-    // deg is state-sized (one row per node) — broadcast it under the
-    // same guard as the rank vector so the per-round plan is exactly
-    // one exchange (the contribution hash-agg)
-    withLoopConf(s, parts, adaptive = nNodes > StateBcastRowCap) {
-      for (_ <- 1 to iters) {
-        val rside = guardedBroadcast(ranks, nNodes)
-        val contrib = rside
-          .join(edges, rside("node") === edges("src"))
-          .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
-        ranks = guardedBroadcast(deg, nNodes).join(
-            contrib.groupBy("node")
-              .agg((lit(teleport) + expr("(85 * sum(c)) div 100")).as("pr")),
-            "node")
-          .select(col("node"), col("outdeg"), col("pr"))
-          .localCheckpoint()
-      }
-    }
-    ranks.select(col("node"), col("pr")).orderBy("node")
+    val carried = deg.columns.toSeq.map(col)
+    val ranks0 = deg.select(carried :+ (share * scale).as("pr"): _*)
+    Rounds.fixed(parts, nNodes, iters)(ranks0) { (ranks, _) =>
+      val rside = guardedBroadcast(ranks, nNodes)
+      val contrib = rside
+        .join(edges, rside("node") === edges("src"))
+        .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
+      guardedBroadcast(deg, nNodes).join(
+          contrib.groupBy("node")
+            .agg(expr("(85 * sum(c)) div 100").as("flow")),
+          "node")
+        .select(carried :+ (share * teleport + col("flow")).as("pr"): _*)
+    }.filter(col("pr") > 0)
+      .select(col("node"), col("pr")).orderBy("node")
   }
 
   /** The oracle twin of [[pageRank]]: unrolled CTE chain in ANSI SQL
@@ -223,38 +158,10 @@ object Graph {
   // reachable in 2 hops wherever connected). ---
   def personalizedPageRank(s: SparkSession, d: String,
                            segment: String = "BUILDING",
-                           iters: Int = 5, scale: Long = 1000000000L): DataFrame = {
-    val (edges, _, parts) = iterRelation(tradeEdges(s, d), "src")
-    val seedIds = Tables.customer(s, d)
+                           iters: Int = 5, scale: Long = 1000000000L): DataFrame =
+    scaledRank(s, d, Some(Tables.customer(s, d)
       .filter(col("c_mktsegment") === segment)
-      .select((col("c_custkey") * 2).as("node"))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .select(col("src").as("node"), col("outdeg"))
-      .join(seedIds.withColumn("is_seed", lit(1L)), Seq("node"), "left_outer")
-      .na.fill(0L, Seq("is_seed"))
-      .localCheckpoint()
-    val nNodes = deg.count()
-    val teleport = 15L * scale / 100L
-    var ranks = deg.select(col("node"), col("outdeg"), col("is_seed"),
-      (col("is_seed") * scale).as("pr"))
-    withLoopConf(s, parts, adaptive = nNodes > StateBcastRowCap) {
-      for (_ <- 1 to iters) {
-        val rside = guardedBroadcast(ranks, nNodes)
-        val contrib = rside
-          .join(edges, rside("node") === edges("src"))
-          .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
-        ranks = guardedBroadcast(deg, nNodes).join(
-            contrib.groupBy("node")
-              .agg(expr("(85 * sum(c)) div 100").as("flow")),
-            "node")
-          .select(col("node"), col("outdeg"), col("is_seed"),
-            (col("is_seed") * teleport + col("flow")).as("pr"))
-          .localCheckpoint()
-      }
-    }
-    ranks.filter(col("pr") > 0)
-      .select(col("node"), col("pr")).orderBy("node")
-  }
+      .select((col("c_custkey") * 2).as("node"))), iters, scale)
 
   /** Oracle twin of [[personalizedPageRank]] — gr1's unrolled chain
     * with the seeded r0 and seeded teleport term.
@@ -295,12 +202,8 @@ object Graph {
   // min_{u→v} dist_r(u) + 1), seeded at the smallest node id (always
   // present, no hardcoded key). Each round is one edges⋈dist join +
   // one min hash-agg; the sentinel 999999 stands in for ∞ (integer min
-  // is exact, so the whole iteration hash-oracles). The driver loop
-  // early-exits when a round changes nothing and `require`s
-  // convergence within maxIter — on the dense trade graph the
-  // eccentricity is 4-5 hops; the fixed 8-round oracle chain is
-  // idempotent past convergence, so early exit never diverges from
-  // the unrolled replay. ---
+  // is exact, so the whole iteration hash-oracles). On the dense trade
+  // graph the eccentricity is 4-5 hops, inside the 8-round budget. ---
   private val HopInf = 999999L
 
   /** Shared single-source min-plus loop with FRONTIER (delta)
@@ -314,7 +217,7 @@ object Graph {
     * ≈ |E| across the whole run instead of |E| PER ROUND — on a
     * cluster the late rounds touch only the BFS wavefront's
     * partitions. Convergence = empty frontier (same round as the
-    * monotone-sum read; `require`d within `maxIter`).
+    * monotone-sum read).
     */
   private def minPlusDistances(edgesRaw: DataFrame, maxIter: Int,
                                algo: String,
@@ -331,44 +234,32 @@ object Graph {
                               algo: String,
                               seedOpt: Option[Long]): DataFrame = {
     val seed = seedOpt.getOrElse(edges.agg(min(col("src"))).head.getLong(0))
-    var dist = edges.select(col("src").as("node")).distinct()
+    // the state carries `old`, each node's distance before the round
+    // that produced `dist` (HopInf in round 0), so the frontier stays a
+    // LAZY filter over the checkpointed state — its count (needed for
+    // convergence AND the broadcast guard) is a scan of cached blocks,
+    // and re-deriving it inside the broadcast build costs the same
+    // scan again instead of a third job
+    def frontier(dist: DataFrame) =
+      dist.filter(col("dist") < col("old")).select("node", "dist")
+    val dist0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"),
-        when(col("node") === seed, 0L).otherwise(HopInf).as("dist"))
+        when(col("node") === seed, 0L).otherwise(HopInf).as("dist"),
+        lit(HopInf).as("old"))
       .localCheckpoint()
-    // the frontier stays a LAZY filter over the checkpointed `dist` —
-    // its count (needed for convergence AND the broadcast guard) is a
-    // scan of cached blocks, and re-deriving it inside the broadcast
-    // build costs the same scan again instead of a third job
-    var delta = dist.filter(col("dist") < HopInf)
-    var nDelta = delta.count()
-    var iter = 0
-    while (nDelta > 0 && iter < maxIter) {
-      // round bodies are broadcast-shaped below the cap — AQE scoped
-      // off per round (see withLoopConf); past the cap the round is a
-      // shuffle join and keeps AQE for skew splitting
-      val (next, nd, n) = withLoopConf(edges.sparkSession, parts,
-        adaptive = nDelta > StateBcastRowCap) {
-        val dside = guardedBroadcast(delta, nDelta)
-        val offers = dside.join(edges, dside("node") === edges("src"))
-          .select(col("dst").as("node"), (col("dist") + col("w")).as("v"),
-            lit(HopInf).as("old"))
-        val stepped = dist
-          .select(col("node"), col("dist").as("v"), col("dist").as("old"))
-          .unionByName(offers)
-          .groupBy("node")
-          .agg(min(col("v")).as("dist"), min(col("old")).as("old"))
-          .localCheckpoint()
-        val d = stepped.filter(col("dist") < col("old")).select("node", "dist")
-        (stepped, d, d.count())
-      }
-      delta = nd
-      nDelta = n
-      dist = next.select("node", "dist")
-      iter += 1
-    }
-    require(nDelta == 0,
-      s"$algo did not converge within $maxIter rounds")
-    dist.filter(col("dist") < HopInf).orderBy("node")
+    Rounds.fixpoint(algo, parts, maxIter, dist0, frontier(dist0).count())(
+        rows = identity, measure = dist => frontier(dist).count(),
+        stable = (_, nDelta) => nDelta == 0) { (dist, nDelta, _) =>
+      val dside = guardedBroadcast(frontier(dist), nDelta)
+      val offers = dside.join(edges, dside("node") === edges("src"))
+        .select(col("dst").as("node"), (col("dist") + col("w")).as("v"),
+          lit(HopInf).as("old"))
+      dist
+        .select(col("node"), col("dist").as("v"), col("dist").as("old"))
+        .unionByName(offers)
+        .groupBy("node")
+        .agg(min(col("v")).as("dist"), min(col("old")).as("old"))
+    }.filter(col("dist") < HopInf).select("node", "dist").orderBy("node")
   }
 
   def hopDistance(s: SparkSession, d: String, maxIter: Int = 8): DataFrame =
@@ -384,9 +275,7 @@ object Graph {
   // relaxation is integer min/plus, which hash-oracles across engines.
   // Weighted shortest paths can use MORE hops than the BFS
   // eccentricity (a chain of cheap edges beats one expensive hop), so
-  // the round budget is higher than gr4's and convergence is `require`d;
-  // the unrolled oracle chain is idempotent past convergence, so the
-  // Spark early exit and the fixed replay agree. Per round: one
+  // the round budget is higher than gr4's. Per round: one
   // edges⋈dist join + one min hash-agg — identical scale shape to gr4. ---
   def cheapestRoute(s: SparkSession, d: String, maxIter: Int = 12): DataFrame = {
     val e0 = graft.sources.GraphIndex.tradeWeightedEdges(s, d)
@@ -397,8 +286,8 @@ object Graph {
   }
 
   /** Oracle twin of [[cheapestRoute]]: the weighted min-plus chain
-    * unrolled to `iters` rounds (≥ rounds-to-convergence; extra rounds
-    * idempotent — same contract as [[hopDistanceOracleSql]]).
+    * unrolled to `iters` rounds (≥ rounds-to-convergence; [[Rounds]]
+    * states why the early exit agrees).
     */
   def cheapestRouteOracleSql(iters: Int = 12): String = {
     val rounds = (1 to iters).map { i =>
@@ -545,9 +434,8 @@ object Graph {
       |FROM e""".stripMargin
 
   /** Oracle twin of [[hopDistance]]: the same min-plus chain unrolled
-    * to `iters` rounds (≥ the graph eccentricity; extra rounds are
-    * idempotent, so Spark's early exit and the fixed chain agree).
-    * Each round references the previous one TWICE (keep-old ∪ relax),
+    * to `iters` rounds (≥ the graph eccentricity; [[Rounds]] states why
+    * the early exit agrees). Each round references the previous one TWICE (keep-old ∪ relax),
     * so the CTEs are forced MATERIALIZED — inlining would duplicate
     * the whole prefix per reference, exponential in `iters`.
     */
@@ -595,25 +483,21 @@ object Graph {
       e0.select(col("pa").as("src"), col("pb").as("dst"))
         .unionByName(e0.select(col("pb").as("src"), col("pa").as("dst"))),
       "src")
-    var labels = edges.select(col("src").as("node")).distinct()
+    val labels0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
       .localCheckpoint()
-    val nNodes = labels.count() // label-vector size: one row per node
+    val nNodes = labels0.count() // label-vector size: one row per node
     val byNode = org.apache.spark.sql.expressions.Window
       .partitionBy("node").orderBy(col("cnt").desc, col("lbl").asc)
-    withLoopConf(s, parts, adaptive = nNodes > StateBcastRowCap) {
-      for (_ <- 1 to rounds) {
-        val lside = guardedBroadcast(labels, nNodes)
-        labels = lside.join(edges, lside("node") === edges("src"))
-          .groupBy(col("dst").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("rn", row_number().over(byNode))
-          .filter(col("rn") === 1)
-          .select("node", "lbl")
-          .localCheckpoint()
-      }
-    }
-    labels.orderBy("node")
+    Rounds.fixed(parts, nNodes, rounds)(labels0) { (labels, _) =>
+      val lside = guardedBroadcast(labels, nNodes)
+      lside.join(edges, lside("node") === edges("src"))
+        .groupBy(col("dst").as("node"), col("lbl"))
+        .agg(count(lit(1)).as("cnt"))
+        .withColumn("rn", row_number().over(byNode))
+        .filter(col("rn") === 1)
+        .select("node", "lbl")
+    }.orderBy("node")
   }
 
   /** Oracle twin of [[labelPropagation]] — the same synchronous
@@ -727,9 +611,8 @@ object Graph {
   // analysis and a different lens than gr2's triangles or gr7's
   // labels. Runs on the support-thresholded basket graph. Each round
   // is one degree hash-agg + two semi-joins (keep-set on both edge
-  // endpoints); peeling is MONOTONE (edges only shrink), so the loop
-  // converges and extra oracle rounds are idempotent — the gr4
-  // early-exit-vs-unrolled-replay contract. All-integer, so the
+  // endpoints); peeling is MONOTONE (edges only shrink), so an
+  // unchanged edge count is an unchanged edge set. All-integer, so the
   // surviving (node, core degree) relation hash-oracles. ---
   def kCore(s: SparkSession, d: String, k: Int = 3,
             minSupport: Int = 2, maxIter: Int = 12): DataFrame = {
@@ -738,41 +621,24 @@ object Graph {
       e0.select(col("pa").as("src"), col("pb").as("dst"))
         .unionByName(e0.select(col("pb").as("src"), col("pa").as("dst"))),
       "src")
-    var edges = edges0
-    // peeling is monotone, so the keep set never exceeds the initial
-    // node count and the previous round's edge count is already known
-    // — the convergence check needs ONE count per round, not two
-    var nEdges = nEdges0
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val (next, nNext) = withLoopConf(s, parts,
-        adaptive = nEdges > StateBcastRowCap) {
-        val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k)
-          .select(col("src").as("node"))
-          .localCheckpoint()
-        val kside = guardedBroadcast(keep, nEdges)
-        val stepped = edges
-          .join(kside.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(kside.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst")
-          .localCheckpoint()
-        (stepped, stepped.count())
-      }
-      converged = nNext == nEdges
-      nEdges = nNext
-      edges = next
-      iter += 1
-    }
-    require(converged, s"k-core peeling did not stabilize within $maxIter rounds")
-    edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    // the measure is the edge count, and round 0's is iterRelation's
+    Rounds.fixpoint("k-core peeling", parts, maxIter, edges0, nEdges0)(
+        rows = identity, measure = _.count()) { (edges, nEdges, _) =>
+      val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k)
+        .select(col("src").as("node"))
+        .localCheckpoint()
+      // the keep set never exceeds the previous round's edge count
+      val kside = guardedBroadcast(keep, nEdges)
+      edges
+        .join(kside.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+        .join(kside.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
+        .select("src", "dst")
+    }.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       .orderBy("node")
   }
 
-  /** Oracle twin of [[kCore]]: the peeling rounds unrolled (monotone →
-    * idempotent past convergence).
-    */
+  /** Oracle twin of [[kCore]]: the peeling rounds unrolled. */
   def kCoreOracleSql(k: Int = 3, minSupport: Int = 2,
                      iters: Int = 12): String = {
     val rs = (1 to iters).map { i =>
@@ -1227,21 +1093,24 @@ object Graph {
       raw.crossJoin(broadcast(tot))
         .select(col("node"), expr("raw div (tot div " + scale + "L)").as("score"))
     }
-    var h = e.select(col("src").as("node")).distinct()
+    val h0 = e.select(col("src").as("node")).distinct()
       .withColumn("score", lit(scale))
-    var a: DataFrame = e.select(col("dst").as("node")).distinct()
-      .withColumn("score", lit(scale))
-    val nH = h.count(); val nA = a.count() // score-vector sizes, fixed
-    withLoopConf(s, parts, adaptive = math.max(nH, nA) > StateBcastRowCap) {
-      for (_ <- 1 to iters) {
-        a = normalize(e.join(guardedBroadcast(h, nH), e("src") === h("node"))
+    val nH = h0.count()
+    val nA = e.select(col("dst").as("node")).distinct().count()
+    // half-round i: even i scores authorities from hubs, odd i hubs
+    // from authorities; 2·iters − 1 half-rounds end on a_iters, and one
+    // more hub half-round gives h_iters
+    require(iters >= 1, s"hits needs at least one round, got $iters")
+    def half(scores: DataFrame, i: Int): DataFrame =
+      if (i % 2 == 0)
+        normalize(e.join(guardedBroadcast(scores, nH), e("src") === scores("node"))
           .groupBy(col("dst").as("node")).agg(sum(col("score")).as("raw")))
-          .localCheckpoint()
-        h = normalize(e.join(guardedBroadcast(a, nA), e("dst") === a("node"))
+      else
+        normalize(e.join(guardedBroadcast(scores, nA), e("dst") === scores("node"))
           .groupBy(col("src").as("node")).agg(sum(col("score")).as("raw")))
-          .localCheckpoint()
-      }
-    }
+    val stateRows = math.max(nH, nA)
+    val a = Rounds.fixed(parts, stateRows, 2 * iters - 1)(h0)(half)
+    val h = Rounds.fixed(parts, stateRows, 1)(a)((scores, _) => half(scores, 1))
     h.select(lit("hub").as("kind"), col("node"), col("score"))
       .unionByName(
         a.select(lit("auth").as("kind"), col("node"), col("score")))
@@ -1391,8 +1260,7 @@ object Graph {
   // exact integers under gr4's min-plus monotone loop with the
   // sum-convergence read, so the (seed, n_reached, sum_dist) tuple
   // hash-oracles and closeness [Bavelas 1950] is one per-row double:
-  // (n_reached − 1) / sum_dist. The unrolled oracle chain is
-  // idempotent past convergence — gr4's early-exit contract. ---
+  // (n_reached − 1) / sum_dist. ---
   def closeness(s: SparkSession, d: String,
                 numSeeds: Int = 3, maxIter: Int = 8): DataFrame = {
     val (edges, _, parts) = iterRelation(tradeEdges(s, d), "src")
@@ -1409,37 +1277,24 @@ object Graph {
       .limit(numSeeds)
       .collect().map(_.getLong(0))
     val dcols = seedIds.indices.map(i => s"d$i")
-    var dist = nodes.select(col("node") +: seedIds.zipWithIndex.map {
+    val dist0 = nodes.select(col("node") +: seedIds.zipWithIndex.map {
       case (sid, i) =>
         when(col("node") === sid, 0L).otherwise(HopInf).as(s"d$i")
     }: _*).localCheckpoint()
-    val nNodes = dist.count() // landmark-vector state: one row per node
+    val nNodes = dist0.count() // landmark-vector state: one row per node
     def totalOf(df: DataFrame): Long =
       df.agg(dcols.map(c => sum(col(c))).reduce(_ + _)).head.getLong(0)
-    var prevSum = totalOf(dist)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val (next, nextSum) = withLoopConf(s, parts,
-        adaptive = nNodes > StateBcastRowCap) {
-        val dside = guardedBroadcast(dist, nNodes)
-        val relaxed = dside.join(edges, dside("node") === edges("src"))
-          .select(col("dst").as("node") +:
-            dcols.map(c => (col(c) + 1).as(c)): _*)
-        val stepped = dist.unionByName(relaxed)
-          .groupBy("node")
-          .agg(min(col(dcols.head)).as(dcols.head),
-            dcols.tail.map(c => min(col(c)).as(c)): _*)
-          .localCheckpoint()
-        (stepped, totalOf(stepped))
-      }
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      dist = next
-      iter += 1
+    val dist = Rounds.fixpoint("multi-source BFS", parts, maxIter, dist0,
+        totalOf(dist0))(rows = _ => nNodes, measure = totalOf) { (dist, _, _) =>
+      val dside = guardedBroadcast(dist, nNodes)
+      val relaxed = dside.join(edges, dside("node") === edges("src"))
+        .select(col("dst").as("node") +:
+          dcols.map(c => (col(c) + 1).as(c)): _*)
+      dist.unionByName(relaxed)
+        .groupBy("node")
+        .agg(min(col(dcols.head)).as(dcols.head),
+          dcols.tail.map(c => min(col(c)).as(c)): _*)
     }
-    require(converged,
-      s"multi-source BFS did not converge within $maxIter rounds")
     // unpivot the K landmark columns back into (seed, …) audit rows
     seedIds.zipWithIndex.map { case (sid, i) =>
       dist.filter(col(s"d$i") < HopInf)
@@ -1453,7 +1308,7 @@ object Graph {
   }
 
   /** Oracle twin of [[closeness]]: seeds CTE + the seed-keyed min-plus
-    * chain unrolled (idempotent past convergence).
+    * chain unrolled.
     */
   def closenessOracleSql(numSeeds: Int = 3, iters: Int = 8): String = {
     val rounds = (1 to iters).map { i =>

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Graph, Sketches}
+import graft.operators.{Dedup, Graph, Rounds, Sketches}
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants for the graph-analytics pack (gr1-gr3) and the
@@ -178,13 +178,35 @@ class GraphSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  test("fixpoint loops fail loudly past maxIter, naming the loop") {
+    import spark.implicits._
+    // dd8's core on a 200-node chain: four rounds of plain propagation
+    // (pointer jumping starts at round 4) reach 4 hops of 199
+    val chainNodes = (0L until 200L).toDF("doc_id")
+    val chainPairs = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    // each maxIter is too few rounds for its loop on the test data
+    val cases = Seq[(String, () => Any)](
+      "BFS" -> (() => Graph.hopDistance(spark, sf, maxIter = 1).collect()),
+      // support >= 3 with k = 3 peels for three rounds and settles in
+      // the fourth (the default support-2 graph is a 3-core already)
+      "k-core peeling" -> (() =>
+        Graph.kCore(spark, sf, k = 3, minSupport = 3, maxIter = 3).collect()),
+      "multi-source BFS" -> (() => Graph.closeness(spark, sf, maxIter = 1).collect()),
+      "component propagation" ->
+        (() => Dedup.componentsFromPairs(chainNodes, chainPairs, maxIter = 4).collect()))
+    cases.foreach { case (loop, run) =>
+      val e = withClue(s"$loop: ")(intercept[IllegalArgumentException](run()))
+      assert(e.getMessage.contains(s"$loop did not"), s"$loop: ${e.getMessage}")
+    }
+  }
+
   test("withLoopConf scopes AQE + width inside, restores after, escapes on adaptive") {
     val aqeKey = "spark.sql.adaptive.enabled"
     val widthKey = "spark.sql.shuffle.partitions"
     val aqe0 = spark.conf.get(aqeKey)
     val width0 = spark.conf.get(widthKey)
     // scoped off: both knobs pinned inside the body, restored after
-    Graph.withLoopConf(spark, 3, adaptive = false) {
+    Rounds.withLoopConf(spark, 3, adaptive = false) {
       assert(spark.conf.get(aqeKey) == "false", "AQE must be off in scope")
       assert(spark.conf.get(widthKey) == "3", "loop width must be pinned")
     }
@@ -192,7 +214,7 @@ class GraphSpec extends SparkTestBase {
     assert(spark.conf.get(widthKey) == width0, "width must be restored")
     // restoration must survive a body that throws
     intercept[RuntimeException] {
-      Graph.withLoopConf(spark, 3, adaptive = false) {
+      Rounds.withLoopConf(spark, 3, adaptive = false) {
         throw new RuntimeException("boom")
       }
     }
@@ -201,15 +223,15 @@ class GraphSpec extends SparkTestBase {
       "conf must be restored when the round body throws")
     // adaptive escape (state past the broadcast cap): a no-op scope —
     // AQE stays on so the shuffle-join rounds keep skew splitting
-    Graph.withLoopConf(spark, 3, adaptive = true) {
+    Rounds.withLoopConf(spark, 3, adaptive = true) {
       assert(spark.conf.get(aqeKey) == aqe0, "adaptive=true must not touch AQE")
       assert(spark.conf.get(widthKey) == width0, "or the width")
     }
     // partsFor is data-proportional and capped at the cluster default
     val cap = spark.sparkContext.defaultParallelism
-    assert(Graph.partsFor(1L, spark) == 1)
-    assert(Graph.partsFor(300000L, spark) == 1)
-    assert(Graph.partsFor(300001L, spark) == 2)
-    assert(Graph.partsFor(Long.MaxValue / 2, spark) == cap)
+    assert(Rounds.partsFor(1L, spark) == 1)
+    assert(Rounds.partsFor(300000L, spark) == 1)
+    assert(Rounds.partsFor(300001L, spark) == 2)
+    assert(Rounds.partsFor(Long.MaxValue / 2, spark) == cap)
   }
 }
