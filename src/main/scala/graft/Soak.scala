@@ -266,12 +266,6 @@ object Soak {
       case _ => None
     }
 
-  private def time(fn: => Unit): Double = {
-    val t0 = System.nanoTime()
-    fn
-    (System.nanoTime() - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -284,17 +278,15 @@ object Soak {
     def run(name: String, dir: String, soakSide: Boolean): Double = {
       val fn = (if (soakSide) soakForm(name) else None)
         .getOrElse(SparkEntry.queries(name))
-      val dt = time(fn(spark, dir).write.format("noop").mode("overwrite").save())
-      // release the query's localCheckpoint blocks (see Bench), then
+      val r = QueryRun(spark, fn, dir)
       // force a GC in the untimed gap: the ContextCleaner only reclaims
       // shuffle files / broadcasts whose handles have been collected,
       // and the 2min periodic GC still let the tail of a 40min run
       // inflate ~2-3x (measured; the same queries are flat in
       // isolation). A deterministic collection per run keeps every
       // measurement on a clean slate.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       System.gc()
-      dt
+      r.error.fold(r.seconds)(e => throw e)
     }
 
     // optional 3rd arg: comma-separated query filter (dev loop — chase

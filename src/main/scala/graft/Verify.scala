@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: Verify <sfDir> <outDir> [query,…]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (dev loop —
@@ -9,6 +12,8 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case _ => throw new IllegalArgumentException(
+        "usage: Verify <sfDir> <outDir> [query,…]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Session.local(cpus.toInt)
@@ -16,14 +21,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        QueryRun(spark, fn, sfDir, QueryRun.oneFileParquet(s"$outDir/$name"))
+          .error.foreach(e =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}"))
       }
-      // release the query's localCheckpoint blocks (see Bench)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -17,6 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    with a quiet sweep — the series median must not be dragged up
   *    by the one inflated sample (the max(base, median) reference
   *    this rule replaced failed exactly here).
+  *
+  * The other two flag sources are pinned by vectors too: the host-load
+  * rule on constructed `/proc` windows, and the phantom trigger on the
+  * round-9 km1 attempts.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -94,22 +98,23 @@ class BenchSpec extends AnyFunSuite {
     // THE round-9 incident, recorded verbatim: a ~60s load window fell
     // entirely BETWEEN canary samples 140 (0.221, quiet) and 160
     // (0.189, quiet), so the window rule shipped km1 = 4.449s (13.7x
-    // its prior 0.324s) unflagged and it cost a judge adjudication.
+    // its 0.324s best time) unflagged and it cost a judge adjudication.
     val (_, flagged) = Bench.flagWindows(organicIncident, 20, 296)
     assert(!flagged.contains(150),
       "both bounding samples read quiet — the window rule alone MUST miss this")
-    // ...which is exactly why the per-query trigger exists:
+    // ...which is why the per-query trigger exists; its reference is
+    // the query's own warm-up in the same run (0.324 here)
     assert(Bench.phantomSuspect(Seq(4.449, 5.5, 5.2), Some(0.324)),
-      "all three attempts >3x the prior artifact ⇒ suspect, re-sample + re-time")
+      "all three attempts >3x the warm-up ⇒ suspect, re-timed in the heal pass")
     // and its guards:
     assert(!Bench.phantomSuspect(Seq(0.35, 0.41, 0.33), Some(0.324)),
       "ordinary jitter is not suspect")
     assert(!Bench.phantomSuspect(Seq(4.4, 0.33, 5.0), Some(0.324)),
       "one clean attempt ⇒ best-of-3 already absorbs the spike")
     assert(!Bench.phantomSuspect(Seq(4.4, 5.5, 5.2), None),
-      "no prior artifact ⇒ trigger disarmed")
+      "no warm-up time (the warm-up failed) ⇒ trigger disarmed")
     assert(!Bench.phantomSuspect(Seq(4.4, 5.5, 5.2), Some(-1.0)),
-      "a prior FAILURE (-1 sentinel) is not a timing reference")
+      "a non-positive reference is not a timing reference")
   }
 
   test("an immediate mid-window re-sample bounds its queries in the window rule") {
@@ -124,74 +129,66 @@ class BenchSpec extends AnyFunSuite {
       "the quiet remainder stays unflagged")
   }
 
-  test("parsePriorTimes reads the artifact Bench writes; absent, malformed, or cross-SF disarms") {
-    val artifact =
-      """{"metric":"total","value":9.1,"unit":"sec","n":2,""" +
-        """"queries":{"km1":0.324,"q6_forecast_rev":1.500},""" +
-        """"attempts":{"km1":[0.33,0.32,0.35]},"sf":"/x"}"""
-    assert(Bench.parsePriorTimes(artifact, "/x") ==
-      Map("km1" -> 0.324, "q6_forecast_rev" -> 1.5))
-    // a prior run at a DIFFERENT scale factor is not a reference:
-    // sf0.1 times are ~10x sf0.01 times, and a cross-SF compare would
-    // fire the phantom trigger on the entire sweep
-    assert(Bench.parsePriorTimes(artifact, "/testdata/sf0.1").isEmpty)
-    assert(Bench.parsePriorTimes("", "/x").isEmpty)
-    assert(Bench.parsePriorTimes("{\"metric\":\"total\"}", "/x").isEmpty)
-    assert(Bench.parsePriorTimes("not json at all", "/x").isEmpty)
+  // one attempt's /proc window: `busy` jiffies of which `own` are this
+  // process's, `steal` stolen, over `total` jiffies
+  private def attempt(busy: Long, own: Long, total: Long,
+                      steal: Long = 0L): HostCpu.Window = {
+    val zero = HostCpu.Sample(Seq.fill(8)(0L), 0L)
+    val idle = total - busy - steal
+    HostCpu.between(zero,
+      HostCpu.Sample(Seq(busy, 0L, 0L, idle, 0L, 0L, 0L, steal), own))
   }
 
-  test("r11 incident pinned: a dev-tier BENCH_FULL.json cannot disarm the sf0.1 trigger") {
-    // THE round-11 incident, recorded verbatim: the committed
-    // BENCH_FULL.json was an sf0.001 dev run, the driver ran at
-    // sf0.1, the cross-SF guard (correctly) returned no priors, and
-    // pv4's three 5.5x attempts shipped unflagged. With per-SF
-    // artifacts the matching-SF file is consulted FIRST, so the stale
-    // dev artifact is irrelevant and the trigger fires.
-    val sf01 = "/root/testdata/sf0.1"
-    val devArtifact = // the committed sf0.001 run, abbreviated
-      """{"metric":"total","value":90.4,"n":325,""" +
-        """"queries":{"pv4_randomized_response":0.110},""" +
-        """"sf":"/root/testdata/sf0.001"}"""
-    val sfArtifact = // what the r10 closing run would have persisted
-      """{"metric":"total","value":146.4,"n":318,""" +
-        """"queries":{"pv4_randomized_response":0.445},""" +
-        """"sf":"/root/testdata/sf0.1"}"""
-    // the file layout Bench now maintains: per-SF file + contract file
-    val files = Map(
-      "BENCH_FULL.sf0.1.json" -> sfArtifact,
-      "BENCH_FULL.json" -> devArtifact)
-    assert(Bench.priorArtifactNames(sf01).head == "BENCH_FULL.sf0.1.json",
-      "the per-SF artifact must be consulted before the contract file")
-    val priors = Bench.resolvePriors(sf01, files.get)
-    assert(priors == Map("pv4_randomized_response" -> 0.445),
-      s"per-SF prior must win, got $priors")
-    // pv4's actual r11 attempts against the r10 prior: trigger FIRES
-    assert(Bench.phantomSuspect(Seq(2.80, 2.45, 2.64),
-      priors.get("pv4_randomized_response")),
-      "the r11 pv4 phantom must now be suspect")
-    // the exact r11 layout (dev artifact only): the guard still
-    // (correctly) yields nothing rather than cross-SF garbage...
-    val r11Layout = Map("BENCH_FULL.json" -> devArtifact)
-    assert(Bench.resolvePriors(sf01, r11Layout.get).isEmpty)
-    // ...and a dev run at sf0.001 reads ITS tier even when the
-    // contract file has been overwritten by an sf0.1 closing run
-    val afterClose = Map(
-      "BENCH_FULL.sf0.001.json" -> devArtifact,
-      "BENCH_FULL.json" -> sfArtifact)
-    assert(Bench.resolvePriors("/root/testdata/sf0.001", afterClose.get) ==
-      Map("pv4_randomized_response" -> 0.110))
+  test("the foreign CPU share is perfbench's (busy - own + steal) / total") {
+    // perfbench's own vector: user 200, system 50, idle 500, steal 100
+    val p0 = HostCpu.Sample(Seq(100L, 0L, 50L, 1000L, 0L, 0L, 0L, 0L), 60L)
+    val p1 = HostCpu.Sample(Seq(300L, 0L, 100L, 1500L, 0L, 0L, 0L, 100L), 210L)
+    val w = HostCpu.between(p0, p1)
+    assert(w == HostCpu.Window(250L - 150L + 100L, 850L))
+    assert(math.abs(w.share - 200.0 / 850.0) < 1e-12)
+    // our own work is never foreign, even when tick accounting puts
+    // more on us than the host saw busy
+    assert(attempt(busy = 80, own = 100, total = 400).share == 0.0)
+    // no /proc: empty samples give an empty window
+    assert(HostCpu.between(HostCpu.Sample(Nil, 0L), p1) == HostCpu.Window(0L, 0L))
   }
 
-  test("sustained-load rule: run-median vs pre-sweep base at 1.5x, annotate-only") {
-    // quiet evidence (r10 driver run read 1.50x on this signal — the
-    // base is a biased minimum), so the rule annotates, never edits;
-    // these vectors pin the threshold arithmetic
-    assert(Bench.sustainedLoad(base = 0.10, ref = 0.16),
-      "1.6x run-median over base is sustained elevation")
-    assert(!Bench.sustainedLoad(base = 0.142, ref = 0.178),
-      "the r11 ratio (1.25x) is below the bar — that incident is the " +
-        "per-SF prior's to catch, not this rule's")
-    assert(!Bench.sustainedLoad(base = 0.0, ref = 9.9),
-      "a zero base (no warm-up samples) must not divide-by-zero flag")
+  test("host-load rule: a query is flagged when its three attempts' summed share exceeds 0.10") {
+    val quiet = Seq.fill(3)(attempt(busy = 300, own = 292, total = 400))
+    assert(math.abs(HostCpu.Window.sum(quiet).share - 0.02) < 1e-12)
+    assert(!Bench.hostLoaded(quiet), "a quiet host (0.02) is not flagged")
+    // the r9 shape: foreign load across all three attempts
+    val r9 = Seq.fill(3)(attempt(busy = 400, own = 150, total = 400))
+    assert(Bench.hostLoaded(r9), "load over every attempt is flagged")
+    // load over one attempt only (0.20 there) is diluted to 0.08 by the
+    // two clean ones: best-of-3 already absorbs it
+    val one = Seq(quiet.head, attempt(busy = 380, own = 300, total = 400),
+      quiet.head)
+    assert(math.abs(HostCpu.Window.sum(one).share - 0.08) < 1e-12)
+    assert(!Bench.hostLoaded(one), "one loaded attempt is diluted below the bar")
+    // steal counts as foreign
+    assert(Bench.hostLoaded(Seq.fill(3)(
+      attempt(busy = 200, own = 200, total = 400, steal = 60))))
+    // a zero-jiffy window (a run shorter than one tick): no flag, no
+    // division by zero
+    val empty = Seq.fill(3)(attempt(busy = 0, own = 0, total = 0))
+    assert(HostCpu.Window.sum(empty).share == 0.0)
+    assert(!Bench.hostLoaded(empty) && !Bench.hostLoaded(Nil))
+  }
+
+  test("/proc parses: the cpu line's 8 counters, and utime + stime after the LAST ')'") {
+    assert(HostCpu.parseStat(
+      "cpu  10132153 290696 3084719 46828483 16683 0 25195 7 0 0") ==
+      Seq(10132153L, 290696L, 3084719L, 46828483L, 16683L, 0L, 25195L, 7L))
+    // a command name holding spaces and ')' must not shift the fields:
+    // utime (field 14) = 1234 and stime (field 15) = 56
+    val self = "4242 (java (x) y) S 1 4242 4242 0 -1 4194560 91230 0 12 0 " +
+      "1234 56 0 0 20 0 57 0 8313 5003243520 123456 18446744073709551615"
+    assert(HostCpu.parseSelfStat(self) == 1290L)
+    // the live files parse on this platform when they exist
+    if (new java.io.File("/proc/self/stat").exists) {
+      val s = HostCpu.sample()
+      assert(s.host.size == 8 && s.self >= 0L)
+    }
   }
 }

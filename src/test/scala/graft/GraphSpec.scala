@@ -168,6 +168,30 @@ class GraphSpec extends SparkTestBase {
       "per-node credit must total 3 triangles each")
   }
 
+  test("gr8: the support-3 k-core equals a driver-side peel that takes four rounds") {
+    // the default support-2 graph is already a 3-core at this scale, so
+    // support 3 is the graph on which the loop actually peels
+    val und = Graph.supportedEdges(spark, sf, 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    var edges = (und ++ und.map(_.swap)).toSet
+    var rounds = 0
+    var stable = false
+    while (!stable) {
+      val keep = edges.groupBy(_._1).collect { case (n, es) if es.size >= 3 => n }.toSet
+      val next = edges.filter { case (a, b) => keep(a) && keep(b) }
+      stable = next == edges
+      edges = next
+      rounds += 1
+    }
+    assert(rounds == 4, s"the support-3 peel settles in round 4, took $rounds")
+    val expected = edges.groupBy(_._1).map { case (n, es) => (n, es.size.toLong) }
+      .toSeq.sorted
+    assert(expected.nonEmpty, "the 3-core must not peel away entirely")
+    val got = Graph.kCore(spark, sf, k = 3, minSupport = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == expected)
+  }
+
   test("gr1: fixed-point iteration is deterministic across partitionings") {
     val a = Graph.pageRank(spark, sf).collect().map(r => (r.getLong(0), r.getLong(1)))
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
