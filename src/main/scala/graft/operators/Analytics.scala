@@ -126,34 +126,14 @@ object Analytics {
   // a11 ships the HISTOGRAM-REFINE engine (exactPercentilesHist
   // below): two scans, a bounded bucket relation, and exact ranking
   // of only the target buckets — no plan piece grows with the corpus.
-  // The window and range-partitioned forms are kept as independent
-  // formulations (PercentileEquivalenceSpec proves all three emit
-  // bit-identical values; Pack5Spec cross-checks the shipped form
-  // against the range twin).
-  def percentiles(s: SparkSession, d: String): DataFrame =
-    percentilesImpl(s, d, rangePartitioned = false)
-
-  /** Range-partitioned cumulative-count variant: instead of one window
-    * partitioned by the (low-cardinality) group key — which funnels
-    * each group's full distinct-value set through a single task — the
-    * distinct values are range-partitioned on (group, value), each
-    * partition prefix-sums locally, and a #partitions-row offset table
-    * (the w9 two-pass pattern) lifts local sums to global ranks. No
-    * task ever sees more than its range slice, but it still pays the
-    * full (group, value)-grained aggregate the histogram-refine engine
-    * avoids — kept as the equivalence foil, not the shipping path.
-    */
-  private[graft] def percentilesRange(s: SparkSession, d: String): DataFrame =
-    percentilesImpl(s, d, rangePartitioned = true)
-
-  private def percentilesImpl(s: SparkSession, d: String,
-                              rangePartitioned: Boolean): DataFrame = {
+  // The window form (exactPercentilesWindow) is kept as an independent
+  // formulation: PercentileEquivalenceSpec proves both emit
+  // bit-identical values.
+  def percentiles(s: SparkSession, d: String): DataFrame = {
     val ps = Seq(("p50", 0.5), ("p90", 0.9), ("p99", 0.99))
-    val raw =
-      if (rangePartitioned) exactPercentilesImpl(s, d, ps, rangePartitioned)
-      else exactPercentilesHist(s, d, ps)
-    raw.select(col("l_returnflag") +:
-      ps.map { case (name, _) => round(col(name), 4).as(name) }: _*)
+    exactPercentilesHist(s, d, ps)
+      .select(col("l_returnflag") +:
+        ps.map { case (name, _) => round(col(name), 4).as(name) }: _*)
       .orderBy("l_returnflag")
   }
 
@@ -241,13 +221,12 @@ object Analytics {
   }
 
   /** Exact interpolated percentiles of l_extendedprice per returnflag
-    * at arbitrary fraction lists — the shared engine under a11 (its
-    * three canonical fractions) and a12 (the nine-point band the
-    * sketch audit brackets against).
+    * at arbitrary fraction lists, by one cumulative-count window over
+    * the (group, value)-grained aggregate — the reference form
+    * [[exactPercentilesHist]] is proved against.
     */
-  private[graft] def exactPercentilesImpl(s: SparkSession, d: String,
-                                          ps: Seq[(String, Double)],
-                                          rangePartitioned: Boolean)
+  private[graft] def exactPercentilesWindow(s: SparkSession, d: String,
+                                            ps: Seq[(String, Double)])
       : DataFrame = {
     // Exact percentile_cont, but distributed: Spark's percentile() agg
     // builds a value->count OpenHashMap per partial and merges the 32
@@ -261,41 +240,12 @@ object Analytics {
     val cnts = Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"), col("l_extendedprice").as("v"))
       .agg(count(lit(1)).as("c"))
-    // (cum, totSource): totSource must share cum's lineage — in the
-    // range branch the checkpoint breaks exchange reuse, so deriving
-    // tot from the original cnts would pay a second full scan+agg.
-    val (cum, totSource) =
-      if (!rangePartitioned) {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("l_returnflag").orderBy("v")
-        (cnts
-          .withColumn("hi", sum(col("c")).over(w)) // # values <= v
-          .withColumn("lo", col("hi") - col("c")), // # values <  v
-          cnts)
-      } else {
-        val base = cnts
-          .repartitionByRange(col("l_returnflag"), col("v"))
-          .withColumn("pid", spark_partition_id())
-          // pid stability across the two reads below needs one
-          // materialization (same reasoning as DataPrep.distributedCumsum)
-          .localCheckpoint()
-        val localW = org.apache.spark.sql.expressions.Window
-          .partitionBy("l_returnflag", "pid").orderBy("v")
-        val offW = org.apache.spark.sql.expressions.Window
-          .partitionBy("l_returnflag").orderBy("pid")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val offsets = base.groupBy("l_returnflag", "pid")
-          .agg(sum(col("c")).as("ptot"))
-          .withColumn("offset", coalesce(sum(col("ptot")).over(offW), lit(0L)))
-          .select("l_returnflag", "pid", "offset")
-        (base
-          .withColumn("local_hi", sum(col("c")).over(localW))
-          .join(broadcast(offsets), Seq("l_returnflag", "pid"))
-          .withColumn("hi", col("local_hi") + col("offset"))
-          .withColumn("lo", col("hi") - col("c")),
-          base)
-      }
-    val tot = totSource.groupBy("l_returnflag").agg(sum(col("c")).as("n"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("l_returnflag").orderBy("v")
+    val cum = cnts
+      .withColumn("hi", sum(col("c")).over(w)) // # values <= v
+      .withColumn("lo", col("hi") - col("c"))  // # values <  v
+    val tot = cnts.groupBy("l_returnflag").agg(sum(col("c")).as("n"))
     val bracketAggs = ps.flatMap { case (name, p) =>
       val t = (col("n") - 1).cast("double") * lit(p)
       val kLo = floor(t)
@@ -776,9 +726,8 @@ object Analytics {
   // column, left to the consumer. weekday = isodow-1 (0=Monday), the
   // one day-numbering both engines agree on. ---
   def contingency(s: SparkSession, d: String): DataFrame = {
-    // the cell table feeds four branches (row totals, col totals,
-    // grand total, final join) — checkpoint it so the events scan +
-    // count agg run once, not four times
+    // shared subplan: the cell table feeds the row, column and grand
+    // totals and the final join
     val cells = Tables.events(s, d)
       .groupBy(col("event_type"), weekday(col("ts")).as("dow"))
       .agg(count(lit(1)).as("observed"))
@@ -1182,8 +1131,7 @@ object Analytics {
     val spend = Tables.orders(s, d)
       .groupBy(col("o_custkey"))
       .agg(sum(Benchmark2.priceCents(col("o_totalprice"))).as("yv"))
-    // feeds three branches (row relation + two rank aggregations) —
-    // checkpoint so the customer⋈spend join runs once (see contingency)
+    // shared subplan: feeds the row relation and both rank aggregations
     val rows = Tables.customer(s, d)
       .select(col("c_custkey"), Benchmark2.priceCents(col("c_acctbal")).as("xv"))
       .join(spend, col("c_custkey") === col("o_custkey"))
@@ -1239,7 +1187,7 @@ object Analytics {
       .withColumn("recency_days",
         datediff(col("maxd").cast("date"), col("last_o").cast("date"))
           .cast("long"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: read by all three ntile passes
     val scored = GlobalOrder.withNtiles(anchored, "o_custkey", 5, Seq(
       ("r_score", col("recency_days"), false),
       ("f_score", col("freq"), true),
@@ -1485,11 +1433,8 @@ object Analytics {
       .select(col("o_orderpriority").as("pr"), col("o_orderkey"),
         Benchmark2.priceCents(col("o_totalprice")).as("cents"))
       .withColumn("rn", row_number().over(w))
-    // Pinned (r12): `counted` feeds FOUR consumers (both bound
-    // filters, the final agg, and via the self-join both sides of the
-    // count agg) — unpinned, each consumer re-ran the ranking window
-    // from the scan (~5 window evaluations per execution; the shared
-    // Exchange is reused but nothing above it).
+    // shared subplan: `counted` feeds both bound filters and the final
+    // agg; unpinned, each re-ran the ranking window (r12)
     val counted = ranked
       .join(ranked.groupBy("pr").agg(count(lit(1)).as("n")), "pr")
       .withColumn("lo", expr(s"(n * $trimPct) div 100")) // integral div

@@ -337,7 +337,7 @@ object DataPrep {
       .filter(col("to_type").isNotNull)
       .select(col("event_type").as("from_type"), col("to_type"),
         unix_micros(col("ts")).as("tsu"))
-      .localCheckpoint() // feeds bounds, train, and eval
+      .localCheckpoint() // shared subplan: feeds the cut, train and eval
     val cut = tr.agg((min(col("tsu")) +
         expr("((max(tsu) - min(tsu)) * 4) div 5")).as("cut"))
     val withCut = tr.crossJoin(broadcast(cut))
@@ -409,72 +409,30 @@ object DataPrep {
 
   // --- W9: distributed global cumulative sum — the scale path for
   // what a naive Window.orderBy (no partition) computes on a single
-  // task. Two passes over range-partitioned data: an in-partition
-  // prefix sum, plus a #partitions-row offset table (the only data
-  // that crosses the driver). O(n/p) per task instead of O(n) on one
-  // task; this is the pattern that survives 100 TB where
-  // w3_running_total's per-key window needs no help but a GLOBAL
-  // ordering would die. Exact cents arithmetic end to end. ---
-  def distributedCumsum(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val base = Tables.orders(s, d)
-      .select(col("o_orderkey"),
-        Benchmark2.priceCents(col("o_totalprice")).as("cents"))
-      .repartitionByRange(col("o_orderkey"))
-      .withColumn("pid", spark_partition_id())
-      // pid is only stable within one materialization: without this
-      // checkpoint the two reads below could re-sample range bounds
-      // differently and disagree on partition ids.
-      .localCheckpoint()
-    val inPart = base.withColumn("local_cum",
-      sum(col("cents")).over(
-        Window.partitionBy("pid").orderBy("o_orderkey")))
-    // Offsets: one row per partition — window over ≤ a few hundred
-    // rows, then broadcast back. This tiny global window is the whole
-    // point: it replaces a global window over the full fact table.
-    val offsets = base.groupBy("pid").agg(sum(col("cents")).as("tot"))
-      .withColumn("offset",
-        coalesce(sum(col("tot")).over(
-          Window.partitionBy(lit(0)).orderBy("pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "offset")
-    inPart.join(broadcast(offsets), "pid")
-      .select(col("o_orderkey"),
-        ((col("local_cum") + col("offset")) / 100.0).as("cum_spend"))
+  // task: GlobalOrder's range-partition + offset-table two-pass, so no
+  // task sees more than its range slice (O(n/p) per task instead of
+  // O(n) on one). Exact cents arithmetic end to end. ---
+  def distributedCumsum(s: SparkSession, d: String): DataFrame =
+    GlobalOrder.withCumSums(
+        Tables.orders(s, d).select(col("o_orderkey"),
+          Benchmark2.priceCents(col("o_totalprice")).as("cents")),
+        Seq(col("o_orderkey")),
+        Seq(GlobalOrder.CumSpec("cents", "cum_cents", "total_cents")))
+      .select(col("o_orderkey"), (col("cum_cents") / 100.0).as("cum_spend"))
       .orderBy("o_orderkey")
-  }
 
   // --- DP10: deterministic corpus shuffle — a reproducible global
   // permutation for training-data ordering, keyed on md5 of a seeded
   // doc key (md5, not xxhash64: the oracle must order identically, and
-  // md5 is the hash both engines spell the same). Global positions use
-  // the W9 two-pass pattern — range-partition on the shuffle key, rank
-  // within each partition, lift with a #partitions-row broadcast
-  // offset table — so no unpartitioned window ever sees the corpus.
-  // The offset table also PRUNES: partitions whose starting offset is
-  // already past topK can contain no kept row (pos = local_rn + offset
-  // > topK), so they drop out of the join entirely. ---
+  // md5 is the hash both engines spell the same). Global positions come
+  // from GlobalOrder's two-pass row number over (shuffle key, doc id),
+  // so no unpartitioned window ever sees the corpus. ---
   def deterministicShuffle(s: SparkSession, d: String,
                            seed: String = "seed42", topK: Int = 100): DataFrame = {
     val key = md5(concat(lit(s"$seed:"), col("doc_id").cast("string")).cast("binary"))
-    val base = Tables.documents(s, d)
-      .select(col("doc_id"), key.as("shuffle_key"))
-      .repartitionByRange(col("shuffle_key"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      // pid is only stable within one materialization (see W9 below).
-      .localCheckpoint()
-    val inPart = base.withColumn("local_rn",
-      row_number().over(
-        Window.partitionBy("pid").orderBy("shuffle_key", "doc_id")).cast("long"))
-    val offsets = base.groupBy("pid").agg(count(lit(1)).as("cnt"))
-      .withColumn("offset",
-        coalesce(sum(col("cnt")).over(
-          Window.partitionBy(lit(0)).orderBy("pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("offset") < topK)
-      .select("pid", "offset")
-    inPart.join(broadcast(offsets), "pid")
-      .withColumn("pos", col("local_rn") + col("offset"))
+    GlobalOrder.withRowNumber(
+        Tables.documents(s, d).select(col("doc_id"), key.as("shuffle_key")),
+        "pos", col("shuffle_key"), col("doc_id"))
       .filter(col("pos") <= topK)
       .select(col("doc_id"), col("shuffle_key"), col("pos"))
       .orderBy("pos")
@@ -1129,7 +1087,7 @@ object DataPrep {
       // (srcN -> N mod 4 + 1) standing in for a learned mixing recipe
       .withColumn("w_raw",
         (substring(col("source"), 4, 10).cast("long") % 4 + 1))
-      .localCheckpoint() // feeds three aggregates; 20 rows
+      .localCheckpoint() // shared subplan: feeds three aggregates
     val norm = per.agg(sum(col("w_raw")).as("w_total"),
       sum(col("n_tokens")).as("corpus_tokens"))
     val shaped = per.crossJoin(broadcast(norm))

@@ -651,9 +651,8 @@ object DataQuality {
     // .refIntegrityLineitemBatch]]), which is why the audit tail
     // ([[refIntegrityFromCounts]]) is shared — batch and stream can
     // never count differently.
-    // materialize the count relation ONCE: the tail slices it three
-    // ways (one per edge), and without pinning each slice would
-    // re-execute the fact scan — PlanSpec asserts the single scan
+    // shared subplan: the tail slices the counts once per edge
+    // (PlanSpec pins the single fact scan)
     val liCounts = lineitemKeyCounts(Tables.lineitem(s, d)).localCheckpoint()
     refIntegrityFromCounts(s, d, liCounts,
       Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")))
@@ -936,7 +935,7 @@ object DataQuality {
   def calendarGaps(s: SparkSession, d: String): DataFrame = {
     val days = Tables.orders(s, d)
       .select(to_date(col("o_orderdate")).as("day")).distinct()
-      .localCheckpoint() // feeds the span aggregate AND the anti-join
+      .localCheckpoint() // shared subplan: the span agg and the anti-join
     val span = days.agg(min(col("day")).as("mn"), max(col("day")).as("mx"),
       count(lit(1)).as("n_observed"))
     val expected = span.select(col("n_observed"),

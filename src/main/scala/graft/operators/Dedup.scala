@@ -518,8 +518,8 @@ object Dedup {
     // — no checkpointing needed now that the md5/signature pass isn't
     // recomputed inline); Jaccard over distinct h60 hashes equals
     // Jaccard over grams modulo the same ~n²/2⁶⁰ collision odds the
-    // whole family accepts. The candidate relation feeds two branches
-    // (the join + its own count) → localCheckpoint.
+    // whole family accepts. The candidate relation is a shared
+    // subplan: the join and its own count read it.
     val gr = graft.sources.TextIndex.gramIndex(s, d, 3, portable = true)
     val truth = jaccardFromShared(sharedGramCounts(gr), gr, threshold)
       .select(col("doc_a"), col("doc_b"))
@@ -681,7 +681,7 @@ object Dedup {
                                          jumpFrom: Int = 4): DataFrame = {
     val edgesCk = pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: its count and every round
     // near-dup pair relations are tiny next to the corpus (they're the
     // DUPLICATES); below the state cap, broadcasting the edge side makes
     // each propagation round a labels-scan + hash probe instead of a
@@ -691,7 +691,7 @@ object Dedup {
     val edges = Rounds.guardedBroadcast(edgesCk, edgesCk.count())
     val labels0 = nodes
       .select(col("doc_id"), col("doc_id").as("comp"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: its count and round 0
     // label-vector size (one row per node): feeds the pointer-jump
     // broadcast guard and the loop's data-proportional shuffle width
     val nNodes = labels0.count()
@@ -885,8 +885,8 @@ object Dedup {
     val (ev, useBroadcast) =
       if (bound == Long.MaxValue) (evalGrams, true)
       else {
-        // pin the (small) eval side so the size decision, the bloom
-        // build, and the join read one materialization, not three
+        // driver-decided constant: the size decision, the bloom build
+        // and the join read one materialization
         val pinned = evalGrams.localCheckpoint()
         (pinned, bound > 0L && pinned.count() <= bound)
       }
@@ -2033,15 +2033,9 @@ object Dedup {
     // past everything seen so far (max(en) over preceding, st-ordered)
     val byDoc = Window.partitionBy("doc_id")
       .orderBy(col("st").asc, col("en").desc)
-    // Materialized ONCE (r12): `merged` is consumed three times below
-    // (the touched-doc set, the anti-join's interval side, and the
-    // span counts), and each consumer otherwise re-derives it — which
-    // re-runs the ENTIRE upstream run-finding pipeline (anchor cap,
-    // candidate join, verify+extend): measured at sf0.1, dd34 cost ~3x
-    // its dd33 leg. The relation is tiny by construction (merged
-    // intervals of touched docs — the duplicate tail, not the corpus),
-    // so the pin is the dd29 shape: expensive producer, cheap rows,
-    // several consumers.
+    // shared subplan: `merged` feeds the touched-doc set, the
+    // anti-join's interval side and the span counts; unpinned, each
+    // re-ran the whole run-finding pipeline (r12: dd34 ~3x its dd33 leg)
     val merged = spans
       .withColumn("prev_max",
         max(col("en")).over(byDoc.rowsBetween(Window.unboundedPreceding, -1)))
@@ -2432,14 +2426,10 @@ object Dedup {
                                         minShared: Long = 2L,
                                         maxFpDocFreq: Long =
                                           DefaultMaxGramDocFreq): DataFrame = {
-    // Materialize the capped fingerprint relation ONCE: it feeds three
-    // consumers (both pair-join sides and the per-doc count), and
-    // without the pin each consumer re-executed the full fingerprint
-    // pipeline — explode, winnow window, distinct, cap window — from
-    // the documents scan (measured r12: a 38-Exchange plan, 2.2 s at
-    // sf0.1 vs 0.95 s before the cap landed; with the pin the pipeline
-    // runs once and the strict raise_error cap still fires at
-    // materialization, so the loud-fail contract is unchanged).
+    // shared subplan: both pair-join sides and the per-doc count read
+    // the capped fingerprints; unpinned, each re-ran the fingerprint
+    // pipeline (r12: 2.2 s against 0.95 s at sf0.1). The strict cap
+    // still fires at materialization.
     val fp = capFingerprintFreq(fpRaw, maxFpDocFreq).localCheckpoint()
     val cnt = fp.groupBy("doc_id").agg(count(lit(1)).as("nfp"))
     val shared = fp.as("a").join(fp.as("b"),

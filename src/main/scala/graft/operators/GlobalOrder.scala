@@ -24,8 +24,14 @@ import org.apache.spark.sql.functions._
   * regardless of where range boundaries land) but alive at 100 TB,
   * where the single-task global window is the one plan in the repo
   * that dies at scale. a31/a32/a34/a39 route their customer- and
-  * value-aggregate ranks through here; dp10/w9 keep their original
-  * inline copies of the same pattern (they ARE the documentation).
+  * value-aggregate ranks through here, w9 its cumulative sum and dp10
+  * its shuffle positions.
+  *
+  * This is the one module that reads `spark_partition_id`
+  * (SessionFactorySpec holds that by a text scan). A partition id is
+  * stable only within one materialization: read twice without the pin
+  * below, the range bounds can be re-sampled and the two reads
+  * disagree, which gives a wrong answer, not a slow one.
   *
   * Exactness bound: bucket arithmetic uses IEEE double division on
   * exact integers — correctly-rounded division returns exact integer
@@ -54,9 +60,8 @@ object GlobalOrder {
 
   /** Range-partition `df` on `sortCols`, stamp partition ids, and
     * return (stamped rows, broadcastable per-partition offset table).
-    * The localCheckpoint pins partition ids: they must agree between
-    * the row-side read and the offset-side read, and range bounds are
-    * re-sampled per materialization otherwise.
+    * Partition-id stability: the localCheckpoint makes the row-side
+    * and the offset-side read agree on partition ids.
     */
   private def twoPass(df: DataFrame, sortCols: Seq[Column],
                       sums: Seq[CumSpec]): (DataFrame, DataFrame) = {
@@ -182,7 +187,7 @@ object GlobalOrder {
     val base = df.select(col(key), metric.as("__go_m"))
       .repartitionByRange(order: _*)
       .withColumn(Pid, spark_partition_id())
-      .localCheckpoint() // pin pids: counts and boundary reads must agree
+      .localCheckpoint() // partition-id stability: counts and boundary reads
     val counts = base.groupBy(Pid).agg(count(lit(1)).as(Cnt))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val total = counts.map(_._2).sum

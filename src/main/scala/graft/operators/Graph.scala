@@ -89,6 +89,7 @@ object Graph {
     val deg0 = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .select(col("src").as("node"), col("outdeg"))
     val (deg, share) = seeds match {
+      // shared subplan: its count and every round read deg
       case None => (deg0.localCheckpoint(), lit(1L))
       case Some(ids) =>
         (deg0.join(ids.withColumn("is_seed", lit(1L)), Seq("node"), "left_outer")
@@ -246,7 +247,7 @@ object Graph {
       .select(col("node"),
         when(col("node") === seed, 0L).otherwise(HopInf).as("dist"),
         lit(HopInf).as("old"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: its frontier count and round 0
     Rounds.fixpoint(algo, parts, maxIter, dist0, frontier(dist0).count())(
         rows = identity, measure = dist => frontier(dist).count(),
         stable = (_, nDelta) => nDelta == 0) { (dist, nDelta, _) =>
@@ -478,14 +479,11 @@ object Graph {
   // rounds. ---
   def labelPropagation(s: SparkSession, d: String,
                        minSupport: Int = 2, rounds: Int = 4): DataFrame = {
-    val e0 = supportedEdges(s, d, minSupport)
-    val (edges, _, parts) = iterRelation(
-      e0.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionByName(e0.select(col("pb").as("src"), col("pa").as("dst"))),
-      "src")
+    val (edges, _, parts) =
+      iterRelation(bothWays(supportedEdges(s, d, minSupport)), "src")
     val labels0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: its count and round 0
     val nNodes = labels0.count() // label-vector size: one row per node
     val byNode = org.apache.spark.sql.expressions.Window
       .partitionBy("node").orderBy(col("cnt").desc, col("lbl").asc)
@@ -552,11 +550,8 @@ object Graph {
                  minSupport: Int = 2, rounds: Int = 4): DataFrame = {
     def dbl(c: Column) = c.cast("double")
     val labels = labelPropagation(s, d, minSupport, rounds)
-      .select(col("node"), col("lbl")).localCheckpoint()
-    val e0 = supportedEdges(s, d, minSupport)
-    val edges = e0.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionByName(e0.select(col("pb").as("src"), col("pa").as("dst")))
-      .localCheckpoint()
+      .select(col("node"), col("lbl"))
+    val edges = bothWays(supportedEdges(s, d, minSupport))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val intra = edges
       .join(labels.select(col("node").as("src"), col("lbl").as("la")), "src")
@@ -616,18 +611,15 @@ object Graph {
   // surviving (node, core degree) relation hash-oracles. ---
   def kCore(s: SparkSession, d: String, k: Int = 3,
             minSupport: Int = 2, maxIter: Int = 12): DataFrame = {
-    val e0 = supportedEdges(s, d, minSupport)
-    val (edges0, nEdges0, parts) = iterRelation(
-      e0.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionByName(e0.select(col("pb").as("src"), col("pa").as("dst"))),
-      "src")
+    val (edges0, nEdges0, parts) =
+      iterRelation(bothWays(supportedEdges(s, d, minSupport)), "src")
     // the measure is the edge count, and round 0's is iterRelation's
     Rounds.fixpoint("k-core peeling", parts, maxIter, edges0, nEdges0)(
         rows = identity, measure = _.count()) { (edges, nEdges, _) =>
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("node"))
-        .localCheckpoint()
+        .localCheckpoint() // shared subplan: both semi-joins read it
       // the keep set never exceeds the previous round's edge count
       val kside = guardedBroadcast(keep, nEdges)
       edges
@@ -676,9 +668,8 @@ object Graph {
   def linkPrediction(s: SparkSession, d: String, minSupport: Int = 2,
                      topK: Int = 25): DataFrame = {
     val e0 = supportedEdges(s, d, minSupport)
-    val edges = e0.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionByName(e0.select(col("pb").as("src"), col("pa").as("dst")))
-      .localCheckpoint()
+    // shared subplan: each read of the bare filter rescans basket_pairs
+    val edges = bothWays(e0).localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val wedges = edges.as("x").join(edges.as("y"),
         col("x.dst") === col("y.src") && col("x.src") < col("y.dst"))
@@ -743,6 +734,13 @@ object Graph {
       .filter(col("pair_n") >= minSupport)
       .select("pa", "pb")
 
+  /** The symmetric closure of an undirected (pa, pb) edge set: each
+    * edge in both orientations, as (src, dst).
+    */
+  private def bothWays(und: DataFrame): DataFrame =
+    und.select(col("pa").as("src"), col("pb").as("dst"))
+      .unionByName(und.select(col("pb").as("src"), col("pa").as("dst")))
+
   /** Inline (index-free) twin of [[supportedEdges]] — kept for
     * GraphIndexSpec's bit-transparency assertion.
     */
@@ -770,7 +768,7 @@ object Graph {
   // row (nodes, edges, triangles) — the clustering shape of the
   // co-purchase signal graph. ---
   def triangleCount(s: SparkSession, d: String, minSupport: Int = 2): DataFrame = {
-    val und = supportedEdges(s, d, minSupport).localCheckpoint()
+    val und = supportedEdges(s, d, minSupport)
     val (deg, closed) = orientedTriangles(und)
     deg.agg(count(lit(1)).as("n_nodes")).crossJoin(
         und.agg(count(lit(1)).as("n_edges")))
@@ -779,7 +777,7 @@ object Graph {
 
   /** GR2/GR17's shared degree-oriented triangle machinery
     * (Schank–Wagner / Suri–Vassilvitskii): given the canonical
-    * undirected edge set (pa < pb, pre-checkpointed by the caller),
+    * undirected edge set (pa < pb),
     * returns (degree relation, triangle relation). Orientation runs
     * every edge from its (deg, id)-smaller endpoint, bounding
     * out-degree by O(√m) so the wedge self-join is near-linear in
@@ -803,7 +801,7 @@ object Graph {
     val oriented = e.select(
         when(before, col("pa")).otherwise(col("pb")).as("lo"),
         when(before, col("pb")).otherwise(col("pa")).as("hi"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: both wedge self-join sides
     val wedges = oriented.as("x").join(oriented.as("y"),
         col("x.lo") === col("y.lo") && col("x.hi") < col("y.hi"))
       .select(col("x.lo").as("v0"), col("x.hi").as("w1"), col("y.hi").as("w2"))
@@ -828,6 +826,7 @@ object Graph {
   // output row, bounded top-K presentation. ---
   def localClustering(s: SparkSession, d: String, minSupport: Int = 2,
                       topK: Int = 20): DataFrame = {
+    // shared subplan: each read of the bare filter rescans basket_pairs
     val und = supportedEdges(s, d, minSupport).localCheckpoint()
     val (deg, closed) = orientedTriangles(und)
     val perNode = closed
@@ -856,6 +855,7 @@ object Graph {
   // than a null-vs-NaN divergence. ---
   def richClub(s: SparkSession, d: String, minSupport: Int = 2,
                ks: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
+    // shared subplan: each read of the bare filter rescans basket_pairs
     val und = supportedEdges(s, d, minSupport).localCheckpoint()
     val deg = und.select(col("pa").as("n"))
       .unionByName(und.select(col("pb").as("n")))
@@ -896,6 +896,7 @@ object Graph {
   // the output is degree-domain-sized, never edge-sized. ---
   def neighborDegree(s: SparkSession, d: String,
                      minSupport: Int = 2): DataFrame = {
+    // shared subplan: each read of the bare filter rescans basket_pairs
     val und = supportedEdges(s, d, minSupport).localCheckpoint()
     val deg = und.select(col("pa").as("n"))
       .unionByName(und.select(col("pb").as("n")))
@@ -1226,12 +1227,8 @@ object Graph {
   // cut); the power sums are one partial+final agg. ---
   def assortativity(s: SparkSession, d: String, minSupport: Int = 2): DataFrame = {
     def dbl(c: Column) = c.cast("double")
-    val und = supportedEdges(s, d, minSupport)
-    // feeds the degree agg and the edge relation — checkpoint so the
-    // pair self-join underneath runs once
-    val e0 = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
-      .localCheckpoint()
+    // shared subplan: each read of the bare filter rescans basket_pairs
+    val e0 = bothWays(supportedEdges(s, d, minSupport)).localCheckpoint()
     val deg = e0.groupBy("src").agg(count(lit(1)).cast("long").as("deg"))
     e0.join(deg.select(col("src"), col("deg").as("dj")), "src")
       .join(deg.select(col("src").as("dst"), col("deg").as("dk")), "dst")
@@ -1280,7 +1277,7 @@ object Graph {
     val dist0 = nodes.select(col("node") +: seedIds.zipWithIndex.map {
       case (sid, i) =>
         when(col("node") === sid, 0L).otherwise(HopInf).as(s"d$i")
-    }: _*).localCheckpoint()
+    }: _*).localCheckpoint() // shared subplan: its count and round 0
     val nNodes = dist0.count() // landmark-vector state: one row per node
     def totalOf(df: DataFrame): Long =
       df.agg(dcols.map(c => sum(col(c))).reduce(_ + _)).head.getLong(0)

@@ -61,6 +61,7 @@ object Retrieval {
                 terms: Seq[String] = Seq("window", "merge", "scan"),
                 r: Int = 50, adcShort: Int = 60, kRrf: Int = 60,
                 topK: Int = 20): DataFrame = {
+    // shared subplan: both sides of rankByCount's self-join
     val legA = TextAnalysis.bm25TopDocs(s, d, terms, r).localCheckpoint()
     val ra = rankByCount(legA, "bm25", "doc_id", "r_bm25")
     val rb = Similarity.refinedLeg(s, d, r, adcShort)

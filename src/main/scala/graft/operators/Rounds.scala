@@ -35,6 +35,25 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * state. A round at the fixpoint therefore maps the state to itself,
   * and the oracle's extra rounds replay exactly the state the loop
   * returned.
+  *
+  * '''Every other eager checkpoint in `operators/`.''' A construction-
+  * time `localCheckpoint` is a plan decision Catalyst cannot undo, so
+  * each must materialize something not already materialized, for one
+  * of four reasons, named in a few words at the site:
+  *  - shared subplan: several consumers read a relation that each
+  *    would otherwise re-derive;
+  *  - partition-id stability: two reads must agree on partition ids;
+  *    [[GlobalOrder]] owns every such pin;
+  *  - lineage cut: a per-round state (this module owns the loop ones)
+  *    or a plan shape an optimizer rule needs;
+  *  - driver-decided constant: a driver-side decision and the plan
+  *    that uses it read one materialization.
+  * A pin over a loop's returned state or over another pin only copies
+  * what is already materialized: one more job, nothing shared. Over a
+  * persisted index read the same holds, unless a selective filter of it
+  * is read several times (Graph's support-thresholded edges keep about
+  * 3.6k of basket_pairs' 1.2M rows at sf0.1): there the pin is a shared
+  * subplan.
   */
 object Rounds {
 

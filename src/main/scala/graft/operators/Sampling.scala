@@ -143,8 +143,7 @@ object Sampling {
   }
 
   def priorityEstimate(s: SparkSession, d: String, k: Int = 16): DataFrame = {
-    // one documents scan + one window, pinned: the ranked relation
-    // feeds three consumers (sample, tau, exact side)
+    // shared subplan: the sample, tau and the exact side
     val ranked = priorityEstimateRanked(s, d).localCheckpoint()
     priorityEstimateFromRanked(ranked,
       ranked.groupBy("source")

@@ -494,7 +494,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select("query_id", "vec_id")
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: every method or sweep leg joins it
   }
 
   // --- SIM18: IVF nProbe SWEEP — recall@k as a function of how many
@@ -549,7 +549,7 @@ object Similarity {
       .groupBy(col("query_id"), col("vec_id"))
       .agg(min(col("pr")).as("pr"),
         min(round(vecCosine(col("embedding"), col("q_emb")), 4)).as("cos_sim"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: one read per probe count
     probes.map { np =>
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("cos_sim").desc, col("vec_id").asc)
@@ -655,17 +655,17 @@ object Similarity {
         round(vecCosine(col("embedding"), col("q_emb")), 4).as("rel"))
       .orderBy(col("rel").desc, col("vec_id").asc)
       .limit(poolN)
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: both sims sides and the pool
     val sims = cand.as("a").join(cand.as("b"),
         col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("ia"), col("b.vec_id").as("ib"),
         round(vecCosine(col("a.embedding"), col("b.embedding")), 4).as("sim"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: every greedy round reads it
     val pool = cand.select(col("vec_id"), col("rel"))
     var sel = pool
       .select(col("vec_id"), col("rel"), lit(0.0).as("score"),
         lit(0).as("pick_order"))
-      .limit(0).localCheckpoint()
+      .limit(0).localCheckpoint() // lineage cut: the union chain's root
     for (i <- 1 to k) {
       val ms = sims.join(sel.select(col("vec_id").as("ib")), Seq("ib"))
         .groupBy(col("ia").as("vec_id")).agg(max(col("sim")).as("maxsim"))
@@ -679,7 +679,7 @@ object Similarity {
         .limit(1)
         .select(col("vec_id"), col("rel"), col("score"),
           lit(i).as("pick_order"))
-      sel = sel.unionByName(pick).localCheckpoint()
+      sel = sel.unionByName(pick).localCheckpoint() // lineage cut per round
     }
     sel.select(col("pick_order"), col("vec_id"), col("rel"), col("score"))
       .orderBy("pick_order")

@@ -125,6 +125,7 @@ object Sketches {
     val o = Tables.orders(s, d)
       .select(year(col("o_orderdate")).as("yr"), col("o_custkey"))
     def keys(yr: Int) = o.filter(col("yr") === yr).select("o_custkey").distinct()
+    // shared subplans: each key set feeds its sketch and the exact sides
     val a = keys(yearA).localCheckpoint()
     val b = keys(yearB).localCheckpoint()
     val skA = a.agg(hll_sketch_agg(col("o_custkey"), lit(lgK)).as("sk"))

@@ -56,14 +56,10 @@ object Skew {
         .otherwise(lit(-1L)).as("attr_key"))
     // integer cents keep the money sum exact under any partitioning /
     // merge order (the suite's standing FP-determinism discipline).
-    // The profile side is MATERIALIZED (localCheckpoint — at 100 TB
-    // it is a maintained per-user table read from storage, not a
-    // subquery): besides being the realistic shape, it puts the join
-    // directly over two shuffle stages, which is the exact pattern
-    // OptimizeSkewedJoin rewrites — with an aggregate fused between
-    // the sort and the exchange, AQE declines to split (observed on
-    // the unmaterialized form: AQEShuffleRead stays `coalesced`,
-    // never `skewed`)
+    // Lineage cut: the materialized profile side (at 100 TB a stored
+    // per-user table) puts the join directly over two shuffle stages,
+    // the pattern OptimizeSkewedJoin rewrites; with the aggregate fused
+    // in, AQE declines to split (AQEShuffleRead stays `coalesced`)
     val profiles = ev.groupBy("user_id")
       .agg(sum(round(col("value") * 100).cast("long"))
         .as("user_total_cents"))

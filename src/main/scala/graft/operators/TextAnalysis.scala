@@ -661,7 +661,7 @@ object TextAnalysis {
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(expr("regexp_replace(w, '(.)', '|$1|')").as("wstr"), col("freq"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: the first merge's pick and rewrite
     val steps = (0 until merges).map { i =>
       val best = words
         .select(col("freq"), expr(
@@ -678,7 +678,7 @@ object TextAnalysis {
       val (a, b, cnt) = (best.getString(0), best.getString(1), best.getLong(2))
       words = words
         .withColumn("wstr", expr(s"replace(wstr, '|$a||$b|', '|$a$b|')"))
-        .localCheckpoint()
+        .localCheckpoint() // lineage cut per merge
       (i, a, b, cnt, a + b)
     }
     (steps, words)
@@ -713,6 +713,7 @@ object TextAnalysis {
         pairs.select(col("b").as("a"), col("a").as("b")))
       .groupBy(col("a").as("src"), col("b").as("dst"))
       .agg(count(lit(1)).as("w"))
+    // shared subplans: every round reads the edges and the strengths
     val edges = directed.localCheckpoint()
     val deg = edges.groupBy("src").agg(sum(col("w")).as("strength"))
       .select(col("src").as("node"), col("strength"))
@@ -730,7 +731,7 @@ object TextAnalysis {
             .agg((lit(teleport) + expr("(85 * sum(c)) div 100")).as("pr")),
           "node")
         .select(col("node"), col("strength"), col("pr"))
-        .localCheckpoint()
+        .localCheckpoint() // lineage cut per round
     }
     ranks.select(col("node").as("word"), col("pr"))
       .orderBy(col("pr").desc, col("word").asc)
@@ -936,8 +937,7 @@ object TextAnalysis {
       .groupBy("h")
       .agg(sum(when(col("source") === srcA, 1L).otherwise(0L)).as("oa"),
         sum(when(col("source") === srcB, 1L).otherwise(0L)).as("ob"))
-      // feeds both the row relation and the 1-row marginal aggregate —
-      // checkpoint so the token explode + agg runs once
+      // shared subplan: the row relation and the 1-row marginal agg
       .localCheckpoint()
     val scored = perTok
       .crossJoin(broadcast(perTok.agg(sum(col("oa")).as("na"),
@@ -1291,7 +1291,7 @@ object TextAnalysis {
       .select(when(col("h1").isin(freqHashes: _*), col("h1")).as("f1"),
         when(col("h2").isin(freqHashes: _*), col("h2")).as("f2"))
       .groupBy("f1", "f2").agg(count(lit(1)).as("nn"))
-      .localCheckpoint()
+      .localCheckpoint() // shared subplan: the total and both marginals
     val tot = cells.agg(sum(col("nn")).as("n_total"))
     val c1 = cells.filter(col("f1").isNotNull)
       .groupBy(col("f1").as("m1")).agg(sum(col("nn")).as("c1"))
@@ -1624,10 +1624,9 @@ object TextAnalysis {
     * with the batch one.
     */
   private[graft] def sourceKlFromCounts(c0: DataFrame): DataFrame = {
-    // the count relation feeds five consumers (A/L per-source scans,
-    // V, and both self-join sides) — pin it so the corpus is
-    // tokenized exactly ONCE, not per consumer (PlanSpec asserts no
-    // documents scan survives into the query plan)
+    // shared subplan: five consumers (the A/L per-source scans, V and
+    // both self-join sides); PlanSpec pins that no documents scan
+    // survives into the query plan
     val c = c0.localCheckpoint()
     val dblC = col("c").cast("double")
     val per = c.groupBy("source").agg(

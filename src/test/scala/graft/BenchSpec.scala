@@ -176,6 +176,30 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.hostLoaded(empty) && !Bench.hostLoaded(Nil))
   }
 
+  test("heal accept rule: a gate canary or re-time counts only if its own window reads quiet") {
+    def run(seconds: Double, cpu: HostCpu.Window,
+            error: Option[Throwable] = None) =
+      QueryRun.Result(0.0, seconds, QueryRun.Counts(1, 1),
+        QueryRun.Counts(1, 1), cpu, error)
+    val quiet = attempt(busy = 300, own = 292, total = 400)  // 0.02
+    val loaded = attempt(busy = 400, own = 150, total = 400) // 0.625
+    val ref = 0.20
+    // the gate: under NoiseFactor x the reference AND quiet
+    assert(Bench.healAccepts(run(0.21, quiet), Bench.NoiseFactor * ref))
+    assert(!Bench.healAccepts(run(0.50, quiet), Bench.NoiseFactor * ref),
+      "a slow canary keeps the gate shut")
+    // load across the whole sweep: the reference is itself loaded, so
+    // the canary reads fast against it, and only the share shuts the gate
+    assert(!Bench.healAccepts(run(0.21, loaded), Bench.NoiseFactor * ref),
+      "a loaded canary under a loaded reference keeps the gate shut")
+    // a re-time has no time bar, only the share
+    assert(Bench.healAccepts(run(2.055, quiet)))
+    assert(!Bench.healAccepts(run(2.055, loaded)),
+      "a re-time under load is not recorded as healed")
+    assert(!Bench.healAccepts(run(0.1, quiet, Some(new RuntimeException))),
+      "a failed re-time heals nothing")
+  }
+
   test("/proc parses: the cpu line's 8 counters, and utime + stime after the LAST ')'") {
     assert(HostCpu.parseStat(
       "cpu  10132153 290696 3084719 46828483 16683 0 25195 7 0 0") ==

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.GlobalOrder
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The boundary-pair ntile (withNtiles) must be VALUE-IDENTICAL to the
@@ -10,6 +11,11 @@ import org.apache.spark.sql.functions._
   * boundary comparison used to evaluate lit(null) < metric to NULL and
   * silently drop null-metric rows into bucket 1; this spec pins the
   * null-safe rewrite against the rank-based ground truth.
+  *
+  * GlobalOrder is also the one module that pins partition ids, so its
+  * answers must not depend on the plan: the row number and cumulative
+  * sums equal the unpartitioned-window reference under every shuffle
+  * width and with adaptive execution on or off.
   */
 class GlobalOrderSpec extends SparkTestBase {
 
@@ -49,5 +55,36 @@ class GlobalOrderSpec extends SparkTestBase {
       .select("k", "b").collect()
       .map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(fused === folded)
+  }
+
+  test("withRowNumber and withCumSums equal the global window under plan perturbation") {
+    // 600 rows in 5 input partitions; k repeats, so (k, id) is the total
+    // order and the tie-break is exercised
+    val df = spark.range(0, 600, 1, 5)
+      .select(col("id"), (col("id") * 7919 % 97).as("k"), (col("id") % 13).as("v"))
+    val order = Seq(col("k"), col("id"))
+    val w = Window.orderBy(order: _*)
+    val want = df
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("cum", sum(col("v")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("tot", sum(col("v")).over(Window.partitionBy(lit(0))))
+      .orderBy("id").collect().toSeq
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    for (width <- Seq("1", "7"); aqe <- Seq("true", "false")) {
+      val prev = keys.map(k => k -> spark.conf.getOption(k))
+      try {
+        keys.zip(Seq(width, aqe)).foreach { case (k, v) => spark.conf.set(k, v) }
+        val numbered = GlobalOrder.withRowNumber(df, "rn", order: _*)
+        val summed = GlobalOrder.withCumSums(numbered, order,
+          Seq(GlobalOrder.CumSpec("v", "cum", "tot")))
+        val got = summed.select("id", "k", "v", "rn", "cum", "tot")
+          .orderBy("id").collect().toSeq
+        assert(got == want, s"width=$width aqe=$aqe")
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 }

@@ -136,12 +136,6 @@ class Pack5Spec extends SparkTestBase {
     }
   }
 
-  test("a11: range-partitioned percentile variant matches the window form") {
-    val a = Analytics.percentiles(spark, sf).collect().toSeq
-    val b = Analytics.percentilesRange(spark, sf).collect().toSeq
-    assert(a == b)
-  }
-
   test("w12: shares sum to 100 and the cumulative share is monotone to 100") {
     val r = Windows.paretoShare(spark, sf).collect()
     assert(r.nonEmpty)

@@ -21,9 +21,7 @@ class PercentileEquivalenceSpec extends SparkTestBase {
         r.getString(0) -> fractions.map { case (n, _) => r.getAs[Double](n) }
       }.toMap
     val hist = toMap(Analytics.exactPercentilesHist(spark, sf, fractions))
-    val win = toMap(
-      Analytics.exactPercentilesImpl(spark, sf, fractions,
-        rangePartitioned = false))
+    val win = toMap(Analytics.exactPercentilesWindow(spark, sf, fractions))
     assert(hist.keySet == win.keySet)
     hist.foreach { case (g, vs) =>
       vs.zip(win(g)).zip(fractions).foreach { case ((h, w), (n, _)) =>

@@ -16,7 +16,11 @@ package graft
   * iterative/audit ops) execute those stages during build, and the
   * checkpointed subtree surfaces as an ExistingRDD scan — operators
   * UPSTREAM of a checkpoint are invisible to this check (their own
-  * specs audit those pipelines: Pack5/Pack6/DataOpsSpec).
+  * specs audit those pipelines: Pack5/Pack6/DataOpsSpec). Only
+  * checkpoints with a reason remain (see [[graft.operators.Rounds]]),
+  * so fewer subtrees hide: gr2 and gr14 read the support-thresholded
+  * edges unpinned, and this check sees the index read and the filter
+  * under them.
   */
 class PlanHygieneSpec extends SparkTestBase {
 

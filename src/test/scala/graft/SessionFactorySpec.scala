@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every `main` builds its session through [[Session.local]] and runs
   * its queries through [[QueryRun]], so the shared settings and the run
-  * idiom each live in one place. This holds both rules by a text scan:
-  * a second session builder, noop sink, persisted-RDD release or
-  * listener anywhere in `src/main` fails the suite.
+  * idiom each live in one place; and every partition-id read sits in
+  * [[graft.operators.GlobalOrder]], behind its one pinned
+  * materialization. This holds the rules by a text scan: a second
+  * session builder, noop sink, persisted-RDD release, listener or
+  * `spark_partition_id` anywhere in `src/main` fails the suite.
   */
 class SessionFactorySpec extends AnyFunSuite {
 
@@ -37,5 +39,15 @@ class SessionFactorySpec extends AnyFunSuite {
       assert(found.map(_._1) == Seq(runner),
         s"$p outside the runner: ${found.filterNot(_._1 == runner)}")
     }
+  }
+
+  // A partition id is stable only within one materialization: a second
+  // read of an unpinned one can re-sample the range bounds and give a
+  // wrong answer, so the pid-and-pin pattern has one owner.
+  test("src/main reads spark_partition_id only in GlobalOrder") {
+    val owner = Paths.get("src/main/scala/graft/operators/GlobalOrder.scala")
+    val found = hits("""spark_partition_id""".r)
+    assert(found.map(_._1) == Seq(owner),
+      s"spark_partition_id outside GlobalOrder: ${found.filterNot(_._1 == owner)}")
   }
 }
